@@ -591,15 +591,19 @@ def main() -> None:
     # round-over-round geomean was lost (PERF_r13 prev_bench_ok=false).
     # Guard the record's integrity at write time: the final stdout line
     # must round-trip through json.loads and match the sidecar exactly,
-    # so a torn tail can never again cost the comparison.
+    # so a torn tail can never again cost the comparison.  Explicit
+    # raises, not asserts (python -O would strip those), and the compare
+    # is on canonical JSON text so a NaN metric matches itself
+    # (nan != nan would fail an intact record).
     line = json.dumps(payload, separators=(",", ":"))
-    assert json.loads(line) == payload, "bench stdout line does not round-trip"
-    assert json.loads(sidecar.read_text()) == payload, (
-        "BENCH_SIDECAR.json does not match the stdout payload"
-    )
-    assert json.loads(record.read_text())["parsed"] == payload, (
-        f"{record.name} does not match the stdout payload"
-    )
+    want = json.dumps(payload, sort_keys=True)
+    for what, got in (
+        ("bench stdout line", json.loads(line)),
+        (sidecar.name, json.loads(sidecar.read_text())),
+        (record.name, json.loads(record.read_text())["parsed"]),
+    ):
+        if json.dumps(got, sort_keys=True) != want:
+            raise RuntimeError(f"{what} does not match the stdout payload")
     print(line)
     spark.stop()
 

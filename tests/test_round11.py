@@ -5,8 +5,7 @@ BUCKETED on (band, key) with per-epoch pre-deduped band rows, so the
 incremental check's semi-join plans NO Exchange on the index side and
 needs no ``distinct()`` — only the arriving batch shuffles (once,
 ReuseExchange across epochs).  These tests pin the on-disk layout, the
-plan shape, the does-not-grow-with-index-age exchange count, and the
-legacy unbucketed fallback.
+plan shape and the does-not-grow-with-index-age exchange count.
 """
 
 import re
@@ -123,44 +122,6 @@ def test_incremental_semi_join_no_index_side_exchange(
     assert reused3 >= reused2  # the batch side is the thing reused
     assert plan3.count("FileScan parquet") == plan3.count("Bucketed: true")
     assert plan3.count("Bucketed: true") > plan2.count("Bucketed: true")
-
-
-def test_bucketed_matches_legacy_unbucketed_answers(spark, tmp_path):
-    """Layout is perf-only: a legacy unbucketed group (pre-r11 index,
-    written straight through atomic_parquet_group) and the bucketed
-    writer produce identical incremental decisions."""
-    base = "the quick brown fox jumps over the lazy dog by the river"
-    old = _docs(
-        range(6),
-        [base + f" t{i}" for i in range(3)]
-        + [f"old unique {i} " + " ".join(f"u{i}x{j}" for j in range(10)) for i in range(3)],
-        spark,
-    )
-    arr = _docs(
-        [50, 51, 52],
-        [base + " t0", "fresh one " + " ".join(f"f1x{j}" for j in range(10)),
-         "fresh two " + " ".join(f"f2x{j}" for j in range(10))],
-        spark,
-    )
-
-    legacy = str(tmp_path / "legacy")
-    from tubes_spark.sink import _CURRENT_EPOCH
-
-    bands = dedup.arith_minhash_bands(old)
-    sink = Sink.atomic_parquet_group(legacy, {"bands": None})
-    tok = _CURRENT_EPOCH.set(0)
-    try:
-        sink(bands)
-    finally:
-        _CURRENT_EPOCH.reset(tok)
-    assert Sink._bucket_spec(legacy) is None
-
-    bucketed = str(tmp_path / "bucketed")
-    dedup.write_minhash_index(old, bucketed, epoch=0, n_buckets=4)
-
-    a = {r["doc_id"] for r in dedup.incremental_minhash_new(arr, spark, legacy).collect()}
-    b = {r["doc_id"] for r in dedup.incremental_minhash_new(arr, spark, bucketed).collect()}
-    assert a == b == {51, 52}
 
 
 def test_compacted_index_stays_bucketed(spark, tmp_path, no_broadcast):

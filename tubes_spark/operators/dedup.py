@@ -692,6 +692,10 @@ def arith_minhash_bands(
     return banded
 
 
+# the persisted MinHash index's bucket (and set) key
+_BAND_KEYS = ["band", "key"]
+
+
 def write_minhash_index(
     df: DataFrame,
     group_dir: str,
@@ -722,8 +726,9 @@ def write_minhash_index(
     SET — and therefore every incremental decision — bit-identical, so
     the oracle gates are untouched.  ``n_buckets`` is recorded in the
     group's ``_bucketspec.json`` on first write and is immutable for
-    the index's lifetime (default: the session's core parallelism,
-    floor 8 — at 100 TB pick the number once, like any bucketed table).
+    the index's lifetime (default: :meth:`Sink.size_derived_buckets` of
+    the input — at 100 TB pick the number once, like any bucketed
+    table).
 
     The arithmetic (md5-based) hash family is used so the stored index
     — and every incremental decision made against it — stays under the
@@ -733,28 +738,17 @@ def write_minhash_index(
     one bucketed dir deduped to distinct (band, key); pass
     ``compact_after=K`` to :func:`incremental_minhash_new` to run it
     automatically every K appended epochs."""
-    from tubes_spark.sink import _CURRENT_EPOCH, Sink
+    from tubes_spark.sink import Sink
 
     banded = arith_minhash_bands(df, text_col, id_col, shingle_k, num_hashes, bands)
     deduped = banded.groupBy("band", "key").agg(F.min(id_col).alias(id_col)).select(
         id_col, "band", "key"
     )
-    spec = Sink._bucket_spec(group_dir)
-    if spec is None:
-        if n_buckets is None:
-            n_buckets = Sink.size_derived_buckets(df)
-        sink = Sink.atomic_bucketed_group(
-            group_dir, "bands", ["band", "key"], int(n_buckets)
-        )
-    else:
-        sink = Sink.atomic_bucketed_group(
-            group_dir, "bands", spec["cols"], spec["n"]
-        )
-    token = _CURRENT_EPOCH.set(int(epoch))
-    try:
-        sink(deduped)
-    finally:
-        _CURRENT_EPOCH.reset(token)
+    if n_buckets is None and Sink._bucket_spec(group_dir) is None:
+        n_buckets = Sink.size_derived_buckets(df)
+    Sink.append_bucketed_epoch(
+        deduped, group_dir, "bands", _BAND_KEYS, n_buckets, epoch=epoch
+    )
 
 
 def compact_minhash_index(spark, group_dir: str) -> int:
@@ -777,7 +771,7 @@ def compact_minhash_index(spark, group_dir: str) -> int:
     from tubes_spark.sink import Sink
 
     return Sink.compact_atomic_group(
-        spark, group_dir, gc=True, dedupe_keys={"bands": ["band", "key"]}
+        spark, group_dir, gc=True, dedupe_keys={"bands": _BAND_KEYS}
     )
 
 
@@ -810,9 +804,9 @@ def incremental_minhash_new(
     count, and Spark's ReuseExchange pays it once across all epoch
     joins.  Index-side cost therefore stops growing with corpus age in
     shuffle terms (it remains a colocated scan+sort), which is the
-    whole point of the layout at 100 TB.  A legacy UNBUCKETED group
-    (no ``_bucketspec.json``) falls back to the plain path read — same
-    answers, shuffle on both sides.
+    whole point of the layout at 100 TB.  A group without
+    ``_bucketspec.json`` is refused with a ``ValueError``: rebuild it
+    with :func:`write_minhash_index`.
 
     ``update_index=True`` appends the arriving batch's band rows as
     the next committed epoch (the daily maintenance step), atomic
@@ -844,7 +838,7 @@ def incremental_minhash_new(
 
     from pyspark.sql import functions as F
 
-    from tubes_spark.sink import _CURRENT_EPOCH, Sink
+    from tubes_spark.sink import Sink
 
     # argument contract first (ADVICE r11) — a guaranteed-invalid call
     # must not pay the eager signature checkpoint below
@@ -856,40 +850,18 @@ def incremental_minhash_new(
     ab = arith_minhash_bands(
         arriving, text_col, id_col, shingle_k, num_hashes, bands
     ).localCheckpoint(eager=True)
-    spec = Sink._bucket_spec(group_dir)
-    if spec is not None:
-        epochs, k, kname = Sink._committed_epochs(group_dir)
-        sides = []
-        dirs = (
-            [f"{group_dir}/bands/compact/{kname}"] if k is not None else []
-        ) + [
-            f"{group_dir}/bands/data/epoch={e}"
-            for e in epochs
-            if k is None or e > k
+    sides = Sink.read_bucketed_leaf(spark, group_dir)
+    if sides:
+        dups = [
+            ab.join(s.select("band", "key"), ["band", "key"], "left_semi")
+            .select(id_col)
+            for s in sides
         ]
-        for d in dirs:
-            # a survivors append can commit an EMPTY epoch (zero part
-            # files — nothing survived); it contributes no band rows and
-            # has no footer to register a table from, so skip it
-            if Sink._has_parquet(d):
-                sides.append(
-                    Sink._read_bucketed_dir(spark, d, spec["cols"], spec["n"])
-                )
-        if sides:
-            dups = [
-                ab.join(s.select("band", "key"), ["band", "key"], "left_semi")
-                .select(id_col)
-                for s in sides
-            ]
-            dup = functools.reduce(DataFrame.union, dups).distinct()
-        else:
-            dup = ab.select(id_col).limit(0)
-    else:  # legacy unbucketed layout
-        idx = Sink.read_atomic_group(spark, group_dir, "bands").select("band", "key")
-        dup = ab.join(idx, ["band", "key"], "left_semi").select(id_col).distinct()
+        dup = functools.reduce(DataFrame.union, dups).distinct()
+    else:
+        dup = ab.select(id_col).limit(0)
     out = arriving.join(dup, id_col, "left_anti")
     if update_index:
-        epochs, _, _ = Sink._committed_epochs(group_dir)
         src = (
             ab
             if append_scope == "all"
@@ -900,28 +872,14 @@ def incremental_minhash_new(
             .agg(F.min(id_col).alias(id_col))
             .select(id_col, "band", "key")
         )
-        if spec is not None:
-            sink = Sink.atomic_bucketed_group(
-                group_dir, "bands", spec["cols"], spec["n"]
-            )
-            appended = ab_dedup
-        else:
-            sink = Sink.atomic_parquet_group(group_dir, {"bands": None})
-            appended = src
-        token = _CURRENT_EPOCH.set((max(epochs) if epochs else -1) + 1)
-        try:
-            sink(appended)
-        finally:
-            _CURRENT_EPOCH.reset(token)
-        if compact_after is not None:
-            epochs2, k2, _ = Sink._committed_epochs(group_dir)
-            pending = [e for e in epochs2 if k2 is None or e > k2]
-            if len(pending) >= compact_after:
-                # `out`'s lazy plan reads the epoch dirs gc is about to
-                # delete — pin the decisions first (bounded by |batch|;
-                # a real pipeline has landed the survivors by now)
-                out = out.localCheckpoint(eager=True)
-                compact_minhash_index(spark, group_dir)
+        # `out`'s lazy plan reads the epoch dirs a compaction's gc
+        # deletes — the append pins it first (bounded by |batch|; a
+        # real pipeline has landed the survivors by now)
+        out = Sink.append_bucketed_epoch(
+            ab_dedup, group_dir, "bands", _BAND_KEYS,
+            compact_after=compact_after,
+            dedupe_keys={"bands": _BAND_KEYS}, pin=out,
+        )
     return out
 
 

@@ -1133,24 +1133,21 @@ def _read_anchors(group_dir: str) -> "list[list[float]]":
     return [[float(x) for x in vec] for _, vec in rows]
 
 
-def _stage_anchors(group_dir: str, anchors: "list[list[float]]") -> str:
-    """Write the anchor table to the deterministic staging name (NOT
-    yet visible to :func:`_read_anchors` — readers only recover a
-    staged file once an epoch has committed)."""
+def _stage_table(group_dir: str, fname: str, columns: dict) -> None:
+    """Write a small group artifact (anchors, PQ codebooks) to its
+    deterministic staging name ``.tmp.<fname>`` — NOT yet visible to
+    :func:`_read_published_table`, which recovers a staged file only
+    once an epoch has committed; :func:`_commit_index_epoch` publishes
+    it after the epoch commits."""
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     os.makedirs(group_dir, exist_ok=True)
-    t = pa.table({
-        "aid": list(range(len(anchors))),
-        "vec": [[float(x) for x in a] for a in anchors],
-    })
-    scratch = f"{group_dir}/..writing._anchors.parquet"
-    pq.write_table(t, scratch)
-    os.replace(scratch, f"{group_dir}/.tmp._anchors.parquet")
-    return f"{group_dir}/.tmp._anchors.parquet"
+    scratch = f"{group_dir}/..writing.{fname}"
+    pq.write_table(pa.table(columns), scratch)
+    os.replace(scratch, f"{group_dir}/.tmp.{fname}")
 
 
 def kmeans_anchors_decimal(
@@ -1333,10 +1330,6 @@ def write_ann_index(
     broadcast matmul per batch above it (``kernel="auto"``, r13 — how
     a sqrt(N)-sized codebook stays assignable); the bucketed write is
     the only shuffle."""
-    import os
-
-    from tubes_spark.sink import _CURRENT_EPOCH, Sink
-
     if kernel not in _KERNELS:  # before any staging/commit side effect
         raise ValueError(f"unknown kernel {kernel!r}; pick one of {_KERNELS}")
     payload = list(payload_cols or [])
@@ -1348,10 +1341,10 @@ def write_ann_index(
     missing = [c for c in payload if c not in batch.columns]
     if missing:
         raise ValueError(f"payload_cols not in batch: {missing}")
-    final = f"{group_dir}/_anchors.parquet"
-    tmp = f"{group_dir}/.tmp._anchors.parquet"
-    epochs_before, _, _ = Sink._committed_epochs(group_dir)
-    if os.path.exists(final) or epochs_before:
+    cell_anchors, established = _seed_anchors(
+        batch, group_dir, anchors, n_anchors, id_col, vec_col
+    )
+    if established:
         # extending an established index: the leaf schema is part of the
         # index contract — a payload mismatch in either direction would
         # commit an epoch later readers cannot union with the rest
@@ -1363,57 +1356,78 @@ def write_ann_index(
                 "carry the leaf's exact schema (rebuild the index to "
                 "change it)"
             )
-        # established index (or interrupted publish): recorded anchors win
-        cell_anchors = _read_anchors(group_dir)
-        if anchors is not None:
-            passed = [[float(x) for x in a] for a in anchors]
-            if passed != cell_anchors:
-                # like a _bucketspec mismatch: silently re-seeding would
-                # orphan every stored cell row
-                raise ValueError(
-                    f"ANN index {group_dir} already has a published anchor "
-                    "codebook; anchors are immutable for the index's "
-                    "lifetime (rebuild the index to re-seed)"
-                )
-    else:
-        if anchors is not None:
-            cell_anchors = [[float(x) for x in a] for a in anchors]
-        else:
-            head = (
-                batch.select(id_col, vec_col)
-                .orderBy(F.col(id_col).asc())
-                .limit(n_anchors)
-                .collect()
-            )
-            cell_anchors = [[float(x) for x in r[vec_col]] for r in head]
-        _stage_anchors(group_dir, cell_anchors)
-    payload = list(payload_cols or [])
-    reserved = [c for c in payload if c in (id_col, vec_col, "cell", "epoch")]
-    if reserved:
-        raise ValueError(
-            f"payload_cols may not use reserved leaf names: {reserved}"
-        )
-    missing = [c for c in payload if c not in batch.columns]
-    if missing:
-        raise ValueError(f"payload_cols not in batch: {missing}")
     cells = _with_cell(
         batch.select(id_col, vec_col, *payload), vec_col, cell_anchors,
         kernel=kernel,
     ).select(id_col, "cell", vec_col, *payload)
-    spec = Sink._bucket_spec(group_dir)
-    if spec is None:
-        if n_buckets is None:
-            n_buckets = Sink.size_derived_buckets(batch)
-        sink = Sink.atomic_bucketed_group(group_dir, "cells", ["cell"], int(n_buckets))
-    else:
-        sink = Sink.atomic_bucketed_group(group_dir, "cells", spec["cols"], spec["n"])
-    token = _CURRENT_EPOCH.set(int(epoch))
-    try:
-        sink(cells)
-    finally:
-        _CURRENT_EPOCH.reset(token)
-    if not os.path.exists(final) and os.path.exists(tmp):
-        os.replace(tmp, final)  # publish point: epoch committed above
+    _commit_index_epoch(cells, batch, group_dir, n_buckets, epoch, ["_anchors.parquet"])
+
+
+def _seed_anchors(
+    batch: DataFrame, group_dir: str, anchors, n_anchors: int,
+    id_col: str, vec_col: str,
+) -> "tuple[list[list[float]], bool]":
+    """(the index's cell anchors, whether the index is established).
+    An established index — one with a committed epoch or published
+    anchors (an interrupted publish counts) — keeps its recorded
+    anchors; passing different ones raises, like a ``_bucketspec``
+    mismatch, since re-seeding would orphan every stored cell row.  A
+    new index takes ``anchors`` or the ``n_anchors``
+    smallest-``id_col`` vectors of the batch and STAGES them;
+    :func:`_commit_index_epoch` publishes them after the epoch
+    commits."""
+    import os
+
+    from tubes_spark.sink import Sink
+
+    published = os.path.exists(f"{group_dir}/_anchors.parquet")
+    if published or Sink._committed_epochs(group_dir)[0]:
+        cell_anchors = _read_anchors(group_dir)
+        passed = None if anchors is None else [[float(x) for x in a] for a in anchors]
+        if passed is not None and passed != cell_anchors:
+            raise ValueError(
+                f"index {group_dir} already has a published anchor "
+                "codebook; anchors are immutable for the index's "
+                "lifetime (rebuild the index to re-seed)"
+            )
+        return cell_anchors, True
+    if anchors is None:
+        anchors = [
+            r[vec_col]
+            for r in batch.select(id_col, vec_col)
+            .orderBy(F.col(id_col).asc())
+            .limit(n_anchors)
+            .collect()
+        ]
+    cell_anchors = [[float(x) for x in a] for a in anchors]
+    _stage_table(group_dir, "_anchors.parquet", {
+        "aid": list(range(len(cell_anchors))), "vec": cell_anchors,
+    })
+    return cell_anchors, False
+
+
+def _commit_index_epoch(
+    leaf: DataFrame, batch: DataFrame, group_dir: str,
+    n_buckets: "int | None", epoch: int, staged: "list[str]",
+) -> None:
+    """Append ``leaf`` as epoch ``epoch`` of the index's bucketed
+    ``cells`` leaf (a new index sizes its buckets from ``batch``), then
+    publish the ``staged`` group artifacts — the publish point: the
+    epoch committed above, so no durable record describes a batch no
+    reader saw."""
+    import os
+
+    from tubes_spark.sink import Sink
+
+    if n_buckets is None and Sink._bucket_spec(group_dir) is None:
+        n_buckets = Sink.size_derived_buckets(batch)
+    Sink.append_bucketed_epoch(
+        leaf, group_dir, "cells", ["cell"], n_buckets, epoch=epoch
+    )
+    for fname in staged:
+        final, tmp = f"{group_dir}/{fname}", f"{group_dir}/.tmp.{fname}"
+        if not os.path.exists(final) and os.path.exists(tmp):
+            os.replace(tmp, final)
 
 
 def rebuild_ann_index(
@@ -1457,7 +1471,7 @@ def rebuild_ann_index(
     # excluded — a rebuild must not resurrect deleted ids in new_dir
     import functools
 
-    _, _, _sides = _read_index_sides(spark, old_dir)
+    _sides = _read_index_sides(spark, old_dir)
     stored = (
         functools.reduce(
             DataFrame.unionByName,
@@ -1490,25 +1504,6 @@ def rebuild_ann_index(
     return [[float(x) for x in a] for a in anchors]
 
 
-def _index_cell_dirs(group_dir: str) -> "list[str]":
-    """The LIVE directories of the index's ``cells`` leaf, in read
-    order: the compact part (if any), then every committed epoch past
-    the compaction point.  The single place the leaf's on-disk layout
-    is spelled out — footer-schema discovery (:func:`_leaf_extra_cols`)
-    and frame reading (:func:`_read_index_sides`) both walk this
-    list, so a layout change cannot make them disagree."""
-    from tubes_spark.sink import Sink
-
-    epochs, k, kname = Sink._committed_epochs(group_dir)
-    return (
-        [f"{group_dir}/cells/compact/{kname}"] if k is not None else []
-    ) + [
-        f"{group_dir}/cells/data/epoch={e}"
-        for e in epochs
-        if k is None or e > k
-    ]
-
-
 def _leaf_extra_cols(
     group_dir: str, id_col: str, vec_col: str,
     default: "list[str] | None" = (),
@@ -1528,7 +1523,9 @@ def _leaf_extra_cols(
 
     import pyarrow.parquet as pq
 
-    for d in _index_cell_dirs(group_dir):
+    from tubes_spark.sink import Sink
+
+    for d in Sink.live_leaf_dirs(group_dir, "cells"):
         parts = sorted(glob.glob(os.path.join(d, "*.parquet")))
         if parts:
             names = pq.ParquetFile(parts[0]).schema_arrow.names
@@ -1539,14 +1536,9 @@ def _leaf_extra_cols(
     return None if default is None else list(default)
 
 
-def _read_index_sides(spark, group_dir: str):
-    """Live frames of the index's ``cells`` leaf — the compact part (if
-    any) plus every committed epoch past it, each as a zero-Exchange
-    bucketed read; a survivors append can commit an EMPTY epoch (zero
-    part files — nothing survived), which contributes no rows and has
-    no footer to register a table from, so it is skipped.  Returns
-    (bucket_spec, committed_epochs, frames); legacy plain-layout
-    groups fall back to one unbucketed frame.
+def _read_index_sides(spark, group_dir: str) -> "list[DataFrame]":
+    """Live frames of the index's ``cells`` leaf, one zero-Exchange
+    bucketed read per live dir (:meth:`Sink.read_bucketed_leaf`).
 
     Published tombstones (:func:`delete_from_ann_index`) are excluded
     HERE, so every consumer — screen, mining, top-k, stats, rebuild —
@@ -1555,24 +1547,14 @@ def _read_index_sides(spark, group_dir: str):
     Exchange).  No tombstones → no extra plan nodes."""
     from tubes_spark.sink import Sink
 
-    spec = Sink._bucket_spec(group_dir)
-    epochs, _, _ = Sink._committed_epochs(group_dir)
-    sides = []
-    if spec is not None:
-        for d in _index_cell_dirs(group_dir):
-            if Sink._has_parquet(d):
-                sides.append(
-                    Sink._read_bucketed_dir(spark, d, spec["cols"], spec["n"])
-                )
-    else:  # legacy plain layout
-        sides = [Sink.read_atomic_group(spark, group_dir, "cells")]
+    sides = Sink.read_bucketed_leaf(spark, group_dir)
     tombs = _read_tombstones(spark, group_dir)
     if tombs is not None and sides:
         key = tombs.columns[0]
         sides = [
             s.join(F.broadcast(tombs), on=key, how="left_anti") for s in sides
         ]
-    return spec, epochs, sides
+    return sides
 
 
 def incremental_ann_new(
@@ -1633,7 +1615,7 @@ def incremental_ann_new(
     per vector, so no key-dedupe applies."""
     import functools
 
-    from tubes_spark.sink import _CURRENT_EPOCH, Sink
+    from tubes_spark.sink import Sink
 
     # argument contract first (ADVICE r11) — a guaranteed-invalid call
     # must not pay the eager checkpoint / dir resolution below
@@ -1703,7 +1685,7 @@ def incremental_ann_new(
             .withColumn("cell", F.element_at("__probes__", 1))
             .localCheckpoint(eager=True)
         )
-    spec, epochs, sides = _read_index_sides(spark, group_dir)
+    sides = _read_index_sides(spark, group_dir)
     # stored-side norm: once per stored ROW (a narrow projection over
     # the bucketed scan — hash partitioning on `cell` is preserved, so
     # the index side still joins with zero Exchange)
@@ -1761,22 +1743,10 @@ def incremental_ann_new(
         if append_scope == "survivors":
             # only vectors this call found NEW anchor future screens
             src = ab.join(hits.select(id_col), id_col, "left_anti")
-        sink = (
-            Sink.atomic_bucketed_group(group_dir, "cells", spec["cols"], spec["n"])
-            if spec is not None
-            else Sink.atomic_parquet_group(group_dir, {"cells": None})
+        out = Sink.append_bucketed_epoch(  # pins `out` before gc deletes dirs
+            src.select(id_col, "cell", vec_col, *extra), group_dir, "cells",
+            ["cell"], compact_after=compact_after, pin=out,
         )
-        token = _CURRENT_EPOCH.set((max(epochs) if epochs else -1) + 1)
-        try:
-            sink(src.select(id_col, "cell", vec_col, *extra))
-        finally:
-            _CURRENT_EPOCH.reset(token)
-        if compact_after is not None:
-            epochs2, k2, _ = Sink._committed_epochs(group_dir)
-            pending = [e for e in epochs2 if k2 is None or e > k2]
-            if len(pending) >= compact_after:
-                out = out.localCheckpoint(eager=True)  # pin before gc deletes dirs
-                Sink.compact_atomic_group(spark, group_dir, gc=True)
     return out
 
 
@@ -2130,7 +2100,7 @@ def index_hard_negatives(
         arriving.select(id_col, vec_col, label_col), vec_col, anchors,
         kernel=kernel,
     )
-    _, _, sides = _read_index_sides(spark, group_dir)
+    sides = _read_index_sides(spark, group_dir)
     if kernel == "vectorized":
         stored = functools.reduce(
             DataFrame.unionByName,
@@ -2360,7 +2330,7 @@ def index_topk(
     probe = ab.select(
         id_col, vec_col, F.explode("__probes__").alias("__pcell__")
     )
-    _, _, sides = _read_index_sides(spark, group_dir)
+    sides = _read_index_sides(spark, group_dir)
     if stored_filter is not None:
         pred = (
             F.expr(stored_filter) if isinstance(stored_filter, str)
@@ -2438,7 +2408,7 @@ def ann_index_stats(
         IntegerType, LongType, StructField, StructType,
     )
 
-    _, _, sides = _read_index_sides(spark, group_dir)
+    sides = _read_index_sides(spark, group_dir)
     frames = [s.select("cell", id_col) for s in sides]
     if not frames:
         return spark.createDataFrame([], StructType([
@@ -2460,23 +2430,26 @@ def ann_index_stats(
 
 # --------------------------------------------------- index deletes
 
-def _read_tombstones(spark, group_dir: str):
-    """Published tombstone batches of the index, unioned and deduped —
-    a single-id-column DataFrame, or None when no tombstones exist.
-    Publish protocol: each delete writes its ids under a run-unique
+def _tombstone_dirs(group_dir: str) -> "list[str]":
+    """Published tombstone batches of the index.  Publish protocol:
+    each delete writes its ids under a run-unique
     ``_tombstones/.tmp.ts-*`` directory and renames to ``ts-*`` last,
     so a half-written batch is never visible."""
     import glob
 
     from tubes_spark.sink import Sink
 
-    dirs = [
+    return [
         d for d in sorted(glob.glob(f"{group_dir}/_tombstones/ts-*"))
         if Sink._has_parquet(d)
     ]
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs).distinct()
+
+
+def _read_tombstones(spark, group_dir: str):
+    """Published tombstones unioned and deduped — a single-id-column
+    DataFrame, or None when no tombstones exist."""
+    dirs = _tombstone_dirs(group_dir)
+    return spark.read.parquet(*dirs).distinct() if dirs else None
 
 
 def delete_from_ann_index(
@@ -2514,7 +2487,7 @@ def delete_from_ann_index(
 
     if (ids is None) == (predicate is None):
         raise ValueError("pass exactly one of ids= or predicate=")
-    _, _, sides = _read_index_sides(spark, group_dir)
+    sides = _read_index_sides(spark, group_dir)
     if not sides:
         return 0  # nothing stored, nothing to forget
     import functools
@@ -2553,15 +2526,14 @@ def purge_ann_tombstones(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> int:
-    """PHYSICAL scrub of tombstoned rows: consolidate the live leaf
-    minus every published tombstone into a fresh bucket-preserving
-    compact directory, publish it with the standard ``_compacted``
-    marker rename, gc the superseded dirs, and clear the applied
-    tombstone batches.  Readers are never wrong mid-purge (the marker
-    renames last, exactly like compaction); a crash at any point
-    leaves either the pre-purge view (tombstones still anti-joined at
-    read) or the post-purge one.  Re-running after a crash finishes
-    the job — the purge is idempotent over the same tombstone set.
+    """PHYSICAL scrub of tombstoned rows: rewrite the live leaf minus
+    every published tombstone through the group's one
+    consolidate-and-publish path (:meth:`Sink._consolidate` — bucket
+    layout kept, ``_compacted`` marker renamed last, superseded dirs
+    gc'd), then clear the applied tombstone batches.  A crash at any
+    point leaves either the pre-purge view (tombstones still
+    anti-joined at read) or the post-purge one; re-running finishes the
+    job — the purge is idempotent over the same tombstone set.
     Compliance note: ids are physically gone only when this returns;
     epoch lineage of surviving rows is preserved (the compact part
     keeps the ``epoch`` column), so as-of reads of survivors still
@@ -2572,98 +2544,32 @@ def purge_ann_tombstones(
     bucketed scan + one bucketed write of the live index (the same
     cost class as compaction — amortize by batching deletion requests
     into one purge), tombstones broadcast."""
-    import glob
-    import os
+    import functools
     import shutil
-    import uuid
 
     from tubes_spark.sink import Sink
 
-    spec = Sink._bucket_spec(group_dir)
-    if spec is None:
-        raise ValueError(
-            "purge_ann_tombstones requires the bucketed index layout"
-        )
-    ts_files = [
-        d for d in sorted(glob.glob(f"{group_dir}/_tombstones/ts-*"))
-        if Sink._has_parquet(d)
-    ]  # snapshot FIRST: batches published after this survive the purge
+    # snapshot FIRST: batches published after this survive the purge
+    ts_files = _tombstone_dirs(group_dir)
     if not ts_files:
         return 0
-    epochs, kk, kname = Sink._committed_epochs(group_dir)
-    if not epochs:
-        raise ValueError(f"no committed epochs under {group_dir}")
-    k = max(epochs)
-    import functools
-
-    frames = []
-    if kk is not None:
-        d = f"{group_dir}/cells/compact/{kname}"
-        if Sink._has_parquet(d):
-            frames.append(
-                Sink._read_bucketed_dir(spark, d, spec["cols"], spec["n"])
-            )
-    for e in epochs:
-        if kk is None or e > kk:
-            d = f"{group_dir}/cells/data/epoch={e}"
-            if Sink._has_parquet(d):
-                frames.append(
-                    Sink._read_bucketed_dir(spark, d, spec["cols"], spec["n"])
-                    .withColumn("epoch", F.lit(int(e)))
-                )
-    tombs = spark.read.parquet(*ts_files).distinct()
+    frames = Sink.read_bucketed_leaf(spark, group_dir)
+    tombs = F.broadcast(spark.read.parquet(*ts_files).distinct())
     key = tombs.columns[0]
-    if not frames:
-        removed = 0
-    else:
-        # column list from the leaf itself (full-vector OR PQ layout —
-        # the purge works for both; it never assumes a vector column)
-        cols = [c for c in frames[0].columns if c != "epoch"] + ["epoch"]
-        live = functools.reduce(
-            DataFrame.unionByName, [f.select(cols) for f in frames]
+    removed = 0
+    if frames:
+        removed = (
+            functools.reduce(DataFrame.union, [f.select(key) for f in frames])
+            .join(tombs, key, "left_semi")
+            .count()
         )
-        kept = live.join(F.broadcast(tombs), on=key, how="left_anti")
-        kept = kept.withColumn("epoch", F.col("epoch").cast("int"))
-        n_before = live.count()
-        new_dir = f"upto={k}.purge.{uuid.uuid4().hex[:8]}"
-        cdir = f"{group_dir}/cells/compact"
-        os.makedirs(cdir, exist_ok=True)
-        tmp = f"{cdir}/.tmp.{new_dir}"
-        Sink._write_bucketed_dir(kept, tmp, spec["cols"], spec["n"])
-        os.replace(tmp, f"{cdir}/{new_dir}")
-        import pathlib
-
-        marker_dir = pathlib.Path(group_dir) / "_compacted"
-        marker_dir.mkdir(parents=True, exist_ok=True)
-        mtmp = marker_dir / f".tmp.{k}"
-        mtmp.write_text(new_dir)
-        os.replace(mtmp, marker_dir / str(k))  # the atomic scrub point
-        # a wipe-everything purge writes an empty (file-less) compact
-        # dir — a legitimately empty index, not a readable-schema error
-        final_dir = f"{cdir}/{new_dir}"
-        n_after = (
-            Sink._read_bucketed_dir(
-                spark, final_dir, spec["cols"], spec["n"]
-            ).count()
-            if Sink._has_parquet(final_dir)
-            else 0
+        Sink._consolidate(
+            spark, group_dir, ".purge",
+            lambda _leaf, df: df.join(tombs, key, "left_anti"), gc=True,
         )
-        removed = int(n_before - n_after)
-
-        def _drop_dir(path: str) -> None:
-            spark.sql(
-                f"DROP TABLE IF EXISTS {Sink._forget_bucket_table(spark, path)}"
-            )
-            shutil.rmtree(path, ignore_errors=True)
-
-        for e in epochs:
-            _drop_dir(f"{group_dir}/cells/data/epoch={e}")
-        for p in pathlib.Path(cdir).iterdir():
-            if p.name != new_dir:
-                _drop_dir(str(p))
     for d in ts_files:  # applied — physically done, clear the batches
         shutil.rmtree(d, ignore_errors=True)
-    return removed
+    return int(removed)
 
 
 # --------------------------------------------------- persisted PQ index
@@ -2678,31 +2584,6 @@ def _is_pq_index(group_dir: str) -> bool:
     return os.path.exists(f"{group_dir}/_pq.parquet") or os.path.exists(
         f"{group_dir}/.tmp._pq.parquet"
     )
-
-
-def _stage_pq(group_dir: str, codebooks: np.ndarray) -> str:
-    """Stage the PQ codebooks next to the anchors (same
-    publish-after-commit discipline): (m, k, sub) float64 flattened to
-    one row per (subspace, centroid)."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(group_dir, exist_ok=True)
-    m, k, _sub = codebooks.shape
-    t = pa.table({
-        "j": [j for j in range(m) for _ in range(k)],
-        "c": [c for _ in range(m) for c in range(k)],
-        "vals": [
-            [float(x) for x in codebooks[j, c]]
-            for j in range(m) for c in range(k)
-        ],
-    })
-    scratch = f"{group_dir}/..writing._pq.parquet"
-    pq.write_table(t, scratch)
-    os.replace(scratch, f"{group_dir}/.tmp._pq.parquet")
-    return f"{group_dir}/.tmp._pq.parquet"
 
 
 def _read_pq_codebooks(group_dir: str) -> np.ndarray:
@@ -2762,40 +2643,22 @@ def write_pq_ann_index(
     Scale shape: assignment + encoding are one Arrow pass (broadcast
     anchors + codebooks, no shuffle); the bucketed write is the only
     Exchange, and the leaf it writes is ~m bytes/row."""
-    import os
-
-    from tubes_spark.sink import _CURRENT_EPOCH, Sink
-
     if kernel not in _KERNELS:
         raise ValueError(f"unknown kernel {kernel!r}; pick one of {_KERNELS}")
-    final = f"{group_dir}/_anchors.parquet"
-    epochs_before, _, _ = Sink._committed_epochs(group_dir)
-    if os.path.exists(final) or epochs_before:
-        cell_anchors = _read_anchors(group_dir)
+    cell_anchors, established = _seed_anchors(
+        batch, group_dir, anchors, n_anchors, id_col, vec_col
+    )
+    if established:
         books = _read_pq_codebooks(group_dir)
-        if anchors is not None:
-            passed = [[float(x) for x in a] for a in anchors]
-            if passed != cell_anchors:
-                raise ValueError(
-                    f"PQ index {group_dir} already has a published anchor "
-                    "codebook; anchors are immutable for the index's "
-                    "lifetime (rebuild the index to re-seed)"
-                )
     else:
-        if anchors is not None:
-            cell_anchors = [[float(x) for x in a] for a in anchors]
-        else:
-            head = (
-                batch.select(id_col, vec_col)
-                .orderBy(F.col(id_col).asc())
-                .limit(n_anchors)
-                .collect()
-            )
-            cell_anchors = [[float(x) for x in r[vec_col]] for r in head]
-        _stage_anchors(group_dir, cell_anchors)
         dim = len(cell_anchors[0])
         books = pq_train(batch, dim, m, n_codes, vec_col, sample_cap, seed)
-        _stage_pq(group_dir, books)
+        # (m, k, sub) float64 flattened to one row per (subspace, centroid)
+        mk = [(j, c) for j in range(books.shape[0]) for c in range(books.shape[1])]
+        _stage_table(group_dir, "_pq.parquet", {
+            "j": [j for j, _ in mk], "c": [c for _, c in mk],
+            "vals": [[float(x) for x in books[j, c]] for j, c in mk],
+        })
     kernel = _resolve_kernel(kernel, len(cell_anchors))
     cells = _with_cell(
         batch.select(id_col, vec_col), vec_col, cell_anchors, kernel=kernel
@@ -2803,25 +2666,9 @@ def write_pq_ann_index(
     leaf = pq_encode(cells, books, id_col, vec_col, keep_cols=["cell"]).select(
         id_col, "cell", "pq_code"
     )
-    spec = Sink._bucket_spec(group_dir)
-    if spec is None:
-        if n_buckets is None:
-            n_buckets = Sink.size_derived_buckets(batch)
-        sink = Sink.atomic_bucketed_group(group_dir, "cells", ["cell"], int(n_buckets))
-    else:
-        sink = Sink.atomic_bucketed_group(group_dir, "cells", spec["cols"], spec["n"])
-    token = _CURRENT_EPOCH.set(int(epoch))
-    try:
-        sink(leaf)
-    finally:
-        _CURRENT_EPOCH.reset(token)
-    tmp_a = f"{group_dir}/.tmp._anchors.parquet"
-    if not os.path.exists(final) and os.path.exists(tmp_a):
-        os.replace(tmp_a, final)
-    tmp_p = f"{group_dir}/.tmp._pq.parquet"
-    final_p = f"{group_dir}/_pq.parquet"
-    if not os.path.exists(final_p) and os.path.exists(tmp_p):
-        os.replace(tmp_p, final_p)
+    _commit_index_epoch(
+        leaf, batch, group_dir, n_buckets, epoch, ["_anchors.parquet", "_pq.parquet"]
+    )
 
 
 def index_topk_pq(
@@ -2882,7 +2729,7 @@ def index_topk_pq(
     probe = ab.select(
         id_col, vec_col, F.explode("__probes__").alias("__pcell__")
     )
-    _, _, sides = _read_index_sides(spark, group_dir)
+    sides = _read_index_sides(spark, group_dir)
     if not sides:
         from pyspark.sql.types import (
             DoubleType, IntegerType, StructField, StructType,

@@ -7580,13 +7580,11 @@ def atomic_multisink_roundtrip(spark, sf_dir):
     )
 
     def write_epoch(ep):
-        token = _CURRENT_EPOCH.set(ep)
         try:
-            sink(sliced.filter(F.col("slice") == ep).drop("slice"))
+            batch = sliced.filter(F.col("slice") == ep).drop("slice")
+            sink.for_each_batch()(batch, ep)
         except RuntimeError:
             pass  # the injected crash; replay happens on the next call
-        finally:
-            _CURRENT_EPOCH.reset(token)
 
     rows = []
 
@@ -8582,7 +8580,7 @@ def gdpr_delete_roundtrip(spark, sf_dir):
     import shutil
     import tempfile
 
-    from tubes_spark.sink import _CURRENT_EPOCH, Sink
+    from tubes_spark.sink import Sink
 
     e = (
         _t(spark, sf_dir, "events")
@@ -8612,11 +8610,7 @@ def gdpr_delete_roundtrip(spark, sf_dir):
 
     try:
         for ep in (0, 1):
-            token = _CURRENT_EPOCH.set(ep)
-            try:
-                sink(e.filter(F.col("event_id") % 2 == ep))
-            finally:
-                _CURRENT_EPOCH.reset(token)
+            sink.for_each_batch()(e.filter(F.col("event_id") % 2 == ep), ep)
         snapshot("before")
         Sink.delete_rows_atomic(spark, tmp, "user_id % 7 = 3")
         snapshot("after_delete")
@@ -8649,7 +8643,7 @@ def cdc_upsert_roundtrip(spark, sf_dir):
     import shutil
     import tempfile
 
-    from tubes_spark.sink import _CURRENT_EPOCH, Sink
+    from tubes_spark.sink import Sink
 
     d = _t(spark, sf_dir, "events").select(
         "user_id",
@@ -8686,11 +8680,7 @@ def cdc_upsert_roundtrip(spark, sf_dir):
 
     try:
         for ep, batch in ((0, base), (1, upd)):
-            token = _CURRENT_EPOCH.set(ep)
-            try:
-                sink(batch)
-            finally:
-                _CURRENT_EPOCH.reset(token)
+            sink.for_each_batch()(batch, ep)
         snapshot(
             "merged",
             Sink.read_atomic_latest(

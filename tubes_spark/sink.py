@@ -17,12 +17,35 @@ upgrades a broadcast to effectively-once per sink with convergence
 across sinks after a replay (per-epoch overwrite layout — see its
 docstring for the exact guarantee and the remaining mid-failure
 visibility bound, SURVEY.md §7.4 item 5).
+
+Atomic groups (``atomic_parquet_group`` / ``atomic_bucketed_group``)
+are the persisted form both indexes build on (MinHash ``bands``, ANN
+``cells``).  This module is the only one that knows their on-disk
+layout and their one publish protocol:
+
+* append — each leaf writes ``<leaf>/data/epoch=<e>``, then ONE
+  ``_commits/<e>`` marker renames into place (the visibility point);
+* consolidate — every rewrite of committed history (compaction,
+  latest-wins, row delete, index tombstone purge) goes through
+  ``Sink._consolidate``: each leaf is rewritten into a run-unique
+  ``<leaf>/compact/<dir>`` (bucketed when it is the bucket leaf), the
+  ``_compacted/<K>`` marker naming that dir renames last, and gc
+  removes superseded dirs together with their bucket-table
+  registrations.
+
+Readers list the markers, so a crash at any step leaves them on a
+complete committed view.
 """
 
 from __future__ import annotations
 
 import contextvars
+import json
+import math
 import os
+import shutil
+import uuid
+from pathlib import Path
 from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -52,6 +75,9 @@ _CURRENT_EPOCH: contextvars.ContextVar = contextvars.ContextVar(
 # new application starts with an empty catalog, and catalog (non-temp)
 # tables are shared across all sessions of one application.
 _BUCKET_TBL_REGISTERED: "set[tuple[str, str]]" = set()
+
+# plan-estimated (uncompressed) bytes per bucket of a new index
+_BUCKET_TARGET_BYTES = 256 * 1024 * 1024
 
 
 class Sink:
@@ -153,19 +179,16 @@ class Sink:
         streaming) calls land in ``epoch=-1`` with plain overwrite.
         Markers live beside the data, so the protocol works on any
         shared filesystem the cluster writes to."""
-        from pathlib import Path
 
         def run(df: DataFrame) -> None:
             epoch = _CURRENT_EPOCH.get()
             if epoch is None:
                 df.write.mode("overwrite").parquet(f"{path}/data/epoch=-1")
                 return
-            commit = Path(path) / "_commits" / str(int(epoch))
-            if commit.exists():
+            if (Path(path) / "_commits" / str(int(epoch))).exists():
                 return  # clean replay: this epoch already committed here
             df.write.mode("overwrite").parquet(f"{path}/data/epoch={int(epoch)}")
-            commit.parent.mkdir(parents=True, exist_ok=True)
-            commit.write_text("")
+            Sink._publish_marker(Path(path) / "_commits", int(epoch))
         return Sink(run)
 
     @staticmethod
@@ -206,21 +229,18 @@ class Sink:
         HDFS rename / S3 conditional put — both atomic publish
         primitives; task-side data writes stay distributed, only the
         tiny marker touches the driver."""
-        import os as _os
-        from pathlib import Path
 
         def run(df: DataFrame) -> None:
             epoch = _CURRENT_EPOCH.get()
             ep = -1 if epoch is None else int(epoch)
-            commit = Path(group_dir) / "_commits" / str(ep)
-            if commit.exists():
+            if (Path(group_dir) / "_commits" / str(ep)).exists():
                 return  # clean replay: whole group already committed
 
             def write_leaf(name: str) -> None:
                 t = leaves[name]
                 out = t(df) if t is not None else df
                 out.write.mode("overwrite").parquet(
-                    f"{group_dir}/{name}/data/epoch={ep}"
+                    Sink._epoch_dir(group_dir, name, ep)
                 )
 
             names = sorted(leaves)
@@ -234,7 +254,6 @@ class Sink:
                 # Failure semantics are unchanged: any leaf error aborts
                 # before the marker, leaving only orphan dirs no reader
                 # sees (the crash-injection tests pin exactly this).
-                import contextvars
                 from concurrent.futures import ThreadPoolExecutor
 
                 with ThreadPoolExecutor(max_workers=min(len(names), 4)) as px:
@@ -248,10 +267,7 @@ class Sink:
                     ]
                     for fut in futs:
                         fut.result()
-            commit.parent.mkdir(parents=True, exist_ok=True)
-            tmp = commit.parent / f".tmp.{ep}"
-            tmp.write_text("")
-            _os.replace(tmp, commit)  # the atomic publish point
+            Sink._publish_marker(Path(group_dir) / "_commits", ep)
 
         return Sink(run)
 
@@ -260,11 +276,9 @@ class Sink:
         """Committed epoch ids, the latest compaction point K, and the
         per-leaf compact DIRECTORY NAME the K marker references.  The
         marker file's content names the data directory (unique per
-        compaction run) so publishing a new compaction never has to
-        delete the directory readers currently resolve; an empty marker
-        (legacy layout) falls back to the deterministic ``upto=<K>``."""
-        from pathlib import Path
-
+        consolidation run) so publishing a new one never has to delete
+        the directory readers currently resolve; an empty marker falls
+        back to the deterministic ``upto=<K>``."""
         cdir = Path(group_dir) / "_commits"
         epochs = (
             sorted(int(p.name) for p in cdir.iterdir() if not p.name.startswith("."))
@@ -283,9 +297,79 @@ class Sink:
         name = (kdir / str(k)).read_text().strip()
         return epochs, k, (name or f"upto={k}")
 
+    # -- group layout ---------------------------------------------------
+    # The only place the on-disk layout of an atomic group is spelled:
+    #   <group>/_commits/<e>             commit marker of epoch e
+    #   <group>/_compacted/<K>           consolidation marker; its content
+    #                                    names each leaf's compact dir
+    #   <group>/_bucketspec.json         optional bucket-layout declaration
+    #   <group>/<leaf>/data/epoch=<e>    a leaf's rows of epoch e
+    #   <group>/<leaf>/compact/<name>    a leaf's consolidated epochs <= K
+
+    @staticmethod
+    def _epoch_dir(group_dir: str, leaf: str, epoch: int) -> str:
+        return f"{group_dir}/{leaf}/data/epoch={int(epoch)}"
+
+    @staticmethod
+    def _compact_dir(group_dir: str, leaf: str, name: str) -> str:
+        return f"{group_dir}/{leaf}/compact/{name}"
+
+    @staticmethod
+    def _leaves(group_dir: str) -> "list[str]":
+        p = Path(group_dir)
+        if not p.is_dir():
+            return []
+        return sorted(
+            c.name for c in p.iterdir() if c.is_dir() and not c.name.startswith("_")
+        )
+
+    @staticmethod
+    def _publish_marker(marker_dir: Path, name, content: str = "") -> None:
+        """Write ``content`` to ``.tmp.<name>`` and rename it to
+        ``<name>`` — every marker of the group becomes visible in one
+        atomic rename (an HDFS rename / S3 conditional put on a
+        cluster)."""
+        marker_dir.mkdir(parents=True, exist_ok=True)
+        tmp = marker_dir / f".tmp.{name}"
+        tmp.write_text(content)
+        os.replace(tmp, marker_dir / str(name))
+
+    @staticmethod
+    def _sources(
+        group_dir: str, leaf: str, as_of_epoch: "int | None" = None
+    ) -> "tuple[list[int], str | None, list[str]]":
+        """(committed epochs, the compact dir the latest marker names or
+        None, the epoch dirs past the compaction point), optionally
+        limited to epochs ``<= as_of_epoch``."""
+        epochs, k, kname = Sink._committed_epochs(group_dir)
+        if as_of_epoch is not None:
+            epochs = [e for e in epochs if e <= as_of_epoch]
+        compact = None if k is None else Sink._compact_dir(group_dir, leaf, kname)
+        live = [
+            Sink._epoch_dir(group_dir, leaf, e) for e in epochs if k is None or e > k
+        ]
+        return epochs, compact, live
+
+    @staticmethod
+    def live_leaf_dirs(group_dir: str, leaf: str) -> "list[str]":
+        """The live directories of one leaf, in read order: the compact
+        dir the latest consolidation published (if any), then every
+        committed epoch dir past it."""
+        _, compact, live = Sink._sources(group_dir, leaf)
+        return ([compact] if compact is not None else []) + live
+
+    @staticmethod
+    def _drop_dir(spark, path: str) -> None:
+        """Remove a directory of the group together with any external
+        bucketed table a reader registered over it (ADVICE r11: a
+        removed dir's catalog entry would otherwise outlive it for the
+        whole session)."""
+        spark.sql(f"DROP TABLE IF EXISTS {Sink._forget_bucket_table(spark, path)}")
+        shutil.rmtree(path, ignore_errors=True)
+
     # -- bucketed atomic-group layout ---------------------------------
     # A group may declare ONE leaf as bucket-laid-out via a tiny
-    # `_bucketspec.json` at the group root ({"leaf","cols","n","sort"}).
+    # `_bucketspec.json` at the group root ({"leaf","cols","n"}).
     # Epoch directories of that leaf are then written through Spark's
     # bucketBy writer (bucket ids live in the FILE NAMES), and readers
     # re-register each committed directory as an external bucketed
@@ -296,7 +380,7 @@ class Sink:
     # index needs (VERDICT r10 #1): index-side cost stops growing with
     # corpus age.  The marker protocol is unchanged — bucketed epoch
     # dirs are still invisible until the group commit marker lands, and
-    # `compact_atomic_group` preserves the layout through consolidation.
+    # every consolidation (:meth:`_consolidate`) keeps the layout.
 
     @staticmethod
     def _bucket_spec(group_dir: str) -> "dict | None":
@@ -304,9 +388,6 @@ class Sink:
         parquet layout).  First writer records it; it is immutable for
         the group's lifetime — bucket joins require every directory of
         the leaf to share one (cols, n) spec."""
-        import json
-        from pathlib import Path
-
         p = Path(group_dir) / "_bucketspec.json"
         if not p.exists():
             return None
@@ -315,30 +396,40 @@ class Sink:
     @staticmethod
     def size_derived_buckets(df: DataFrame, floor: int = 8, cap: int = 4096) -> int:
         """Default bucket count for a NEW persisted index: derived from
-        the PLAN-ESTIMATED size of the frame being written (one py4j
-        stats call, no job), not from the session's core count (r13
+        the PLAN-ESTIMATED size of the frame being written (a few py4j
+        stats calls, no job), not from the session's core count (r13
         optimization — guide §2: partitioning constants tuned to
-        local-mode parallelism are wrong at both ends.  The old
-        ``defaultParallelism`` default wrote 32 near-empty files per
-        epoch for a 2,000-row bootstrap on local[32], and would write
-        only 32 buckets for a 100 TB corpus on a big cluster).  Target:
-        ``$TUBES_SPARK_BUCKET_TARGET_BYTES`` (default 256 MB of
-        plan-estimated — i.e. uncompressed — bytes per bucket, landing
-        near the guide's 100 MB-1 GB post-compression file target),
-        clamped to [floor, cap].  Only the DEFAULT changes: an explicit
-        ``n_buckets`` and every already-recorded ``_bucketspec`` win."""
-        import math as _math
+        local-mode parallelism are wrong at both ends).  Target:
+        ``_BUCKET_TARGET_BYTES`` (256 MB of plan-estimated — i.e.
+        uncompressed — bytes per bucket, landing near the guide's
+        100 MB-1 GB post-compression file target), clamped to
+        [floor, cap].
 
-        target = int(
-            os.environ.get("TUBES_SPARK_BUCKET_TARGET_BYTES", "0") or 0
-        ) or (256 * 1024 * 1024)
+        Unknown stats give the floor, not the cap: a source Spark
+        cannot size (an RDD-backed ``createDataFrame``) reports
+        ``spark.sql.defaultSizeInBytes`` (Long.MaxValue), and a
+        projection over it scales that placeholder rather than
+        measuring anything — so an estimate at or above the default,
+        at the root or at any leaf of the plan, is treated as unknown.
+        Only the DEFAULT is sized: an explicit ``n_buckets`` and every
+        already-recorded ``_bucketspec`` win."""
+        from py4j.protocol import Py4JError
+
         try:
-            est = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
+            plan = df._jdf.queryExecution().optimizedPlan()
+            conf = df.sparkSession._jsparkSession.sessionState().conf()
+            unknown = int(conf.defaultSizeInBytes())
+            est = int(plan.stats().sizeInBytes())
+            leaves = plan.collectLeaves()
+            if est >= unknown or any(
+                int(leaves.apply(i).stats().sizeInBytes()) >= unknown
+                for i in range(leaves.length())
+            ):
+                return int(floor)
+        except (AttributeError, Py4JError):  # no JVM plan to ask
             est = 0
-        return max(int(floor), min(int(cap), _math.ceil(est / target) or 1))
+        n = math.ceil(est / _BUCKET_TARGET_BYTES) or 1
+        return max(int(floor), min(int(cap), n))
 
     @staticmethod
     def _record_bucket_spec(
@@ -348,9 +439,6 @@ class Sink:
         like every other marker here).  Idempotent; a differing
         existing spec raises — silently mixing bucket layouts would
         poison every read-side join."""
-        import json
-        from pathlib import Path
-
         spec = {"leaf": leaf, "cols": list(cols), "n": int(n)}
         prev = Sink._bucket_spec(group_dir)
         if prev is not None:
@@ -359,16 +447,12 @@ class Sink:
                     f"bucket spec mismatch under {group_dir}: {prev} vs {spec}"
                 )
             return prev
-        Path(group_dir).mkdir(parents=True, exist_ok=True)
-        tmp = Path(group_dir) / ".tmp._bucketspec.json"
-        tmp.write_text(json.dumps(spec))
-        os.replace(tmp, Path(group_dir) / "_bucketspec.json")
+        Sink._publish_marker(Path(group_dir), "_bucketspec.json", json.dumps(spec))
         return spec
 
     @staticmethod
     def _bucket_table_name(path: str) -> str:
         import hashlib
-        import os
 
         # ADVICE r12: registration (f"{group_dir}/.../compact/{kname}")
         # and gc (str(Path(...))) build this path differently — a
@@ -405,12 +489,9 @@ class Sink:
         aligns write tasks 1:1 with buckets (same murmur3-pmod hash),
         so an upstream 400-partition scan can't emit 400 near-empty
         files per bucket (sources.write_bucketed has the same note)."""
-        import shutil
-
         spark = df.sparkSession
-        tbl = Sink._forget_bucket_table(spark, path)
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(path, ignore_errors=True)  # torn uncommitted rewrite
+        Sink._drop_dir(spark, path)  # torn uncommitted rewrite
+        tbl = Sink._bucket_table_name(path)
         (
             df.repartition(int(n), *[F.col(c) for c in cols])
             .write.mode("overwrite")
@@ -430,8 +511,6 @@ class Sink:
         frame emits no part files — and an empty dir has no footer to
         infer a schema from, so readers must skip it (r12; the row set
         it contributes is empty either way)."""
-        from pathlib import Path
-
         p = Path(path)
         return p.is_dir() and any(
             f.name.endswith(".parquet") and not f.name.startswith((".", "_"))
@@ -546,24 +625,84 @@ class Sink:
         written through :meth:`_write_bucketed_dir` so every committed
         directory joins shuffle-free on ``cols``.  Records the group's
         bucket spec on first use."""
-        from pathlib import Path
 
         def run(df: DataFrame) -> None:
             spec = Sink._record_bucket_spec(group_dir, leaf, cols, n)
             epoch = _CURRENT_EPOCH.get()
             ep = -1 if epoch is None else int(epoch)
-            commit = Path(group_dir) / "_commits" / str(ep)
-            if commit.exists():
+            if (Path(group_dir) / "_commits" / str(ep)).exists():
                 return  # clean replay: whole group already committed
             Sink._write_bucketed_dir(
-                df, f"{group_dir}/{leaf}/data/epoch={ep}", spec["cols"], spec["n"]
+                df, Sink._epoch_dir(group_dir, leaf, ep), spec["cols"], spec["n"]
             )
-            commit.parent.mkdir(parents=True, exist_ok=True)
-            tmp = commit.parent / f".tmp.{ep}"
-            tmp.write_text("")
-            os.replace(tmp, commit)  # the atomic publish point
+            Sink._publish_marker(Path(group_dir) / "_commits", ep)
 
         return Sink(run)
+
+    @staticmethod
+    def read_bucketed_leaf(spark, group_dir: str) -> "list[DataFrame]":
+        """The live data of a bucketed group's bucket leaf as one
+        zero-Exchange bucketed frame per live directory (see
+        :meth:`live_leaf_dirs`).  A survivors append can commit an EMPTY
+        epoch (zero part files); it contributes no rows and has no
+        footer to register a table from, so it is skipped.  A group
+        without ``_bucketspec.json`` is refused: no writer produces
+        that layout."""
+        spec = Sink._bucket_spec(group_dir)
+        if spec is None:
+            raise ValueError(
+                f"{group_dir} has no _bucketspec.json, so it is not a "
+                "bucketed index this version can read; rebuild the index "
+                "with its writer (write_minhash_index / write_ann_index / "
+                "write_pq_ann_index)"
+            )
+        return [
+            Sink._read_bucketed_dir(spark, d, spec["cols"], spec["n"])
+            for d in Sink.live_leaf_dirs(group_dir, spec["leaf"])
+            if Sink._has_parquet(d)
+        ]
+
+    @staticmethod
+    def append_bucketed_epoch(
+        df: DataFrame,
+        group_dir: str,
+        leaf: str,
+        cols: "Sequence[str]",
+        n_buckets: "int | None" = None,
+        epoch: "int | None" = None,
+        compact_after: "int | None" = None,
+        dedupe_keys: "dict[str, Sequence[str]] | None" = None,
+        pin: "DataFrame | None" = None,
+    ) -> "DataFrame | None":
+        """Commit ``df`` as one epoch of the group's bucket leaf —
+        ``epoch``, or by default the one after the newest commit.  The
+        group's first write records the bucket spec (``cols`` and
+        ``n_buckets``); later writes use the recorded spec.
+
+        ``compact_after=K`` keeps the group self-maintaining: once K
+        committed epochs sit past the compaction point, run
+        :meth:`compact_atomic_group` with gc (and ``dedupe_keys``).
+        ``pin`` is a frame whose lazy plan may read the dirs that gc
+        removes; it is checkpointed before the compaction and returned
+        (unchanged when no compaction ran)."""
+        spec = Sink._bucket_spec(group_dir) or {"cols": cols, "n": n_buckets}
+        if epoch is None:
+            epochs, _, _ = Sink._committed_epochs(group_dir)
+            epoch = (max(epochs) if epochs else -1) + 1
+        Sink.atomic_bucketed_group(
+            group_dir, leaf, spec["cols"], spec["n"]
+        ).for_each_batch()(df, epoch)
+        if compact_after is None:
+            return pin
+        epochs, k, _ = Sink._committed_epochs(group_dir)
+        if len([e for e in epochs if k is None or e > k]) < compact_after:
+            return pin
+        if pin is not None:
+            pin = pin.localCheckpoint(eager=True)
+        Sink.compact_atomic_group(
+            df.sparkSession, group_dir, gc=True, dedupe_keys=dedupe_keys
+        )
+        return pin
 
     @staticmethod
     def read_atomic_group(
@@ -596,32 +735,26 @@ class Sink:
         pre-evolution consumers keep their schema (no surprise NULL
         columns).  A latest-wins compaction after evolution bakes the
         merged schema into the consolidated layout."""
-        from pyspark.sql import functions as F
-
-        from pathlib import Path
-
-        epochs, k, kdir = Sink._committed_epochs(group_dir)
-        if as_of_epoch is not None:
-            epochs = [e for e in epochs if e <= as_of_epoch]
+        epochs, compact, live = Sink._sources(group_dir, name, as_of_epoch)
         if not epochs:
             raise ValueError(f"no committed epochs under {group_dir}")
-        parts = []
-        if k is not None:
-            parts.append(spark.read.parquet(f"{group_dir}/{name}/compact/{kdir}"))
-        live = [e for e in epochs if k is None or e > k]
+
         # ADVICE r12: a committed epoch CAN be legitimately file-less (a
         # survivors-scope append where every arrival was rejected writes
-        # zero part files), and spark.read.parquet over ONLY such dirs
+        # zero part files), and so is the compact dir of a purge that
+        # removed every row; spark.read.parquet over ONLY such dirs
         # fails schema inference — so skip local dirs _has_parquet rules
         # out (they contribute no rows either way).  Non-local paths
         # (is_dir() False) keep the plain read.
-        live_dirs = [
-            d
-            for d in (f"{group_dir}/{name}/data/epoch={e}" for e in live)
-            if not Path(d).is_dir() or Sink._has_parquet(d)
-        ]
+        def readable(d: str) -> bool:
+            return not Path(d).is_dir() or Sink._has_parquet(d)
+
+        parts = []
+        if compact is not None and readable(compact):
+            parts.append(spark.read.parquet(compact))
+        live_dirs = [d for d in live if readable(d)]
         if live_dirs:
-            rd = spark.read.option("basePath", f"{group_dir}/{name}/data")
+            rd = spark.read.option("basePath", os.path.dirname(live_dirs[0]))
             if evolve_schema:
                 rd = rd.option("mergeSchema", "true")
             parts.append(
@@ -652,22 +785,14 @@ class Sink:
         rewrite followed by purge/gc would make them PERMANENTLY
         unrecoverable.  Footer-only check — one schema read per source
         directory, no data scan."""
-        from pathlib import Path
+        import pyarrow.parquet as _pq
 
         if evolve_schema:
             return
-        epochs, k, kdir = Sink._committed_epochs(group_dir)
-        srcs = []
-        if k is not None and Path(f"{group_dir}/{name}/compact/{kdir}").exists():
-            srcs.append(f"{group_dir}/{name}/compact/{kdir}")
-        srcs += [
-            f"{group_dir}/{name}/data/epoch={e}"
-            for e in epochs
-            if (k is None or e > k)
-            and Path(f"{group_dir}/{name}/data/epoch={e}").exists()
-        ]
         cols = []
-        for s in srcs:
+        for s in Sink.live_leaf_dirs(group_dir, name):
+            if not Path(s).exists():
+                continue
             # ADVICE r10: divergence WITHIN one epoch directory (a
             # mid-epoch writer change) used to escape the single
             # first-footer read and could be silently dropped by
@@ -677,15 +802,11 @@ class Sink:
             # real cluster this sweep would run distributed, like
             # parquet's own mergeSchema pass) and diverge on
             # union != intersection.
-            per_file = []
-            for f in sorted(Path(s).glob("*.parquet")):
-                if f.name.startswith((".", "_")):
-                    continue
-                import pyarrow.parquet as _pq
-
-                per_file.append(
-                    set(_pq.ParquetFile(str(f)).schema_arrow.names) - {"epoch"}
-                )
+            per_file = [
+                set(_pq.ParquetFile(str(f)).schema_arrow.names) - {"epoch"}
+                for f in sorted(Path(s).glob("*.parquet"))
+                if not f.name.startswith((".", "_"))
+            ]
             if not per_file:
                 if Path(s).is_dir() and not Sink._has_parquet(s):
                     continue  # legitimately empty epoch (survivors append)
@@ -717,6 +838,91 @@ class Sink:
             )
 
     @staticmethod
+    def _consolidate(
+        spark,
+        group_dir: str,
+        tag: str,
+        rewrite: "Callable[[str, DataFrame], DataFrame]",
+        gc: bool,
+        evolve_schema: bool = False,
+        reuse_current: bool = False,
+    ) -> int:
+        """THE consolidate-and-publish protocol — every rewrite of a
+        group's committed history (compaction, latest-wins, delete,
+        tombstone purge) runs through here.  Returns the consolidation
+        point K (the highest committed epoch).
+
+        1. Each leaf's committed rows (:meth:`read_atomic_group`, after
+           the schema-divergence guard) pass through ``rewrite(leaf,
+           df)`` and land in a run-unique ``compact/upto=<K><tag>.<id>``
+           dir — written bucketed when the leaf is the group's bucket
+           leaf, so the shuffle-free read survives every rewrite.
+        2. The ``_compacted/<K>`` marker, whose CONTENT names that dir,
+           renames last: the one publish point.  Until it lands readers
+           resolve the previous layout, which is never deleted before
+           its replacement is live — a crash anywhere leaves readers on
+           a complete copy, and a dead unreferenced dir for the next gc.
+        3. With ``gc``, the consolidated epoch dirs and every other
+           compact dir are removed through :meth:`_drop_dir`, which also
+           drops their bucket-table registrations.  Commit markers stay:
+           they define visibility history and cost one empty file each.
+
+        ``reuse_current`` makes a rerun at an unchanged K a pure no-op
+        (nothing rewritten; gc still sweeps)."""
+        epochs, prev_k, prev_dir = Sink._committed_epochs(group_dir)
+        if not epochs:
+            raise ValueError(f"no committed epochs under {group_dir}")
+        k = max(epochs)
+        leaves = Sink._leaves(group_dir)
+        if reuse_current and prev_k == k:
+            new_dir = prev_dir
+        else:
+            new_dir = f"upto={k}{tag}.{uuid.uuid4().hex[:8]}"
+            bspec = Sink._bucket_spec(group_dir)
+            for name in leaves:
+                Sink._guard_schema_divergence(spark, group_dir, name, evolve_schema)
+                df = rewrite(
+                    name,
+                    Sink.read_atomic_group(
+                        spark, group_dir, name, evolve_schema=evolve_schema
+                    ),
+                )
+                tmp = Sink._compact_dir(group_dir, name, f".tmp.{new_dir}")
+                if bspec is not None and name == bspec["leaf"]:
+                    Path(tmp).parent.mkdir(parents=True, exist_ok=True)
+                    Sink._write_bucketed_dir(df, tmp, bspec["cols"], bspec["n"])
+                else:
+                    df.write.mode("overwrite").parquet(tmp)
+                os.replace(tmp, Sink._compact_dir(group_dir, name, new_dir))
+            Sink._publish_marker(Path(group_dir) / "_compacted", k, new_dir)
+        if gc:
+            for name in leaves:
+                for e in epochs:
+                    Sink._drop_dir(spark, Sink._epoch_dir(group_dir, name, e))
+                cdir = Path(Sink._compact_dir(group_dir, name, new_dir)).parent
+                if cdir.exists():
+                    for p in cdir.iterdir():
+                        if p.name != new_dir:  # dead tmp/torn/superseded dirs
+                            Sink._drop_dir(spark, str(p))
+        return k
+
+    @staticmethod
+    def _pick_leaves(
+        group_dir: str, leaves: "Sequence[str] | None"
+    ) -> "list[str]":
+        """The ``leaves`` subset a DML rewrite targets (default: all).
+        Leaves outside it are consolidated content-identically in the
+        same run (ADVICE r9: the group-wide ``_compacted/<K>`` marker
+        names ONE dir, so every leaf must materialize it)."""
+        all_leaves = Sink._leaves(group_dir)
+        if leaves is None:
+            return all_leaves
+        unknown = set(leaves) - set(all_leaves)
+        if unknown:
+            raise ValueError(f"unknown leaves {sorted(unknown)} under {group_dir}")
+        return list(leaves)
+
+    @staticmethod
     def compact_atomic_group(
         spark,
         group_dir: str,
@@ -726,23 +932,13 @@ class Sink:
     ) -> int:
         """Consolidate every COMMITTED epoch of every leaf into one
         compacted directory per leaf and publish the compaction point
-        atomically — the small-files answer for a streaming sink that
-        has accumulated thousands of per-epoch directories (the thing
-        that kills namenode/list performance at 100 TB).  Readers are
-        never wrong mid-compaction: the consolidated data is written
-        under a run-unique directory name first, the ``_compacted/<K>``
-        marker (whose CONTENT names that directory) renames last, and
-        until it lands readers keep resolving the previously-referenced
-        layout — the currently-referenced compact dir is never deleted
-        before its replacement's marker is live, so a crash at any
-        point leaves readers on a complete copy (a crash in between
-        just leaves a dead unreferenced dir the next gc sweeps).  A
-        rerun at an unchanged K is a pure no-op: nothing is rewritten
-        and nothing touched.  With ``gc=True`` the superseded epoch
-        DATA dirs and any unreferenced compact dirs are removed after
-        publish (commit markers stay — they define visibility history
-        and cost one empty file each).  Returns the compaction point K
-        (the highest epoch consolidated).
+        atomically (:meth:`_consolidate`) — the small-files answer for a
+        streaming sink that has accumulated thousands of per-epoch
+        directories (the thing that kills namenode/list performance at
+        100 TB).  Rows are unchanged; a rerun at an unchanged K is a
+        pure no-op.  With ``gc=True`` the superseded epoch DATA dirs
+        and any unreferenced compact dirs are removed after publish.
+        Returns the compaction point K (the highest epoch consolidated).
 
         ``dedupe_keys`` maps a leaf name to its key columns and opts
         that leaf into SET semantics at consolidation: the compacted
@@ -755,80 +951,39 @@ class Sink:
         than the compaction point may still repeat a key until the next
         compaction — readers must not rely on global uniqueness, only
         on the key SET being preserved, which this never changes."""
-        import shutil as _shutil
-        import uuid as _uuid
-        from pathlib import Path
+        from pyspark.sql import Window
 
-        from pyspark.sql import functions as F
+        def rewrite(name: str, df: DataFrame) -> DataFrame:
+            if not dedupe_keys or name not in dedupe_keys:
+                return df
+            keys = list(dedupe_keys[name])
+            rest = [c for c in df.columns if c not in keys and c != "epoch"]
+            w = Window.partitionBy(*keys).orderBy("epoch", *rest)
+            return (
+                df.withColumn("__rn__", F.row_number().over(w))
+                .filter(F.col("__rn__") == 1)
+                .drop("__rn__")
+            )
 
-        epochs, prev_k, _prev_dir = Sink._committed_epochs(group_dir)
-        if not epochs:
-            raise ValueError(f"no committed epochs under {group_dir}")
-        k = max(epochs)
-        leaves = [
-            p.name
-            for p in Path(group_dir).iterdir()
-            if p.is_dir() and not p.name.startswith("_")
-        ]
-        if prev_k == k:
-            new_dir = _prev_dir  # nothing new since the last compaction
-        else:
-            new_dir = f"upto={k}.{_uuid.uuid4().hex[:8]}"
-            bspec = Sink._bucket_spec(group_dir)
-            for name in sorted(leaves):
-                Sink._guard_schema_divergence(spark, group_dir, name, evolve_schema)
-                df = Sink.read_atomic_group(
-                    spark, group_dir, name, evolve_schema=evolve_schema
-                ).withColumn("epoch", F.col("epoch").cast("int"))
-                if dedupe_keys and name in dedupe_keys:
-                    from pyspark.sql import Window
+        return Sink._consolidate(
+            spark, group_dir, "", rewrite, gc, evolve_schema, reuse_current=True
+        )
 
-                    keys = list(dedupe_keys[name])
-                    rest = [c for c in df.columns if c not in keys and c != "epoch"]
-                    w = Window.partitionBy(*keys).orderBy("epoch", *rest)
-                    df = (
-                        df.withColumn("__rn__", F.row_number().over(w))
-                        .filter(F.col("__rn__") == 1)
-                        .drop("__rn__")
-                    )
-                tmp = f"{group_dir}/{name}/compact/.tmp.{new_dir}"
-                if bspec is not None and name == bspec["leaf"]:
-                    # a bucket-laid-out leaf keeps its layout through
-                    # consolidation — compacting a 100 TB index is
-                    # exactly when the shuffle-free read matters most
-                    Path(f"{group_dir}/{name}/compact").mkdir(
-                        parents=True, exist_ok=True
-                    )
-                    Sink._write_bucketed_dir(df, tmp, bspec["cols"], bspec["n"])
-                else:
-                    df.write.mode("overwrite").parquet(tmp)
-                os.replace(tmp, f"{group_dir}/{name}/compact/{new_dir}")
-            marker_dir = Path(group_dir) / "_compacted"
-            marker_dir.mkdir(parents=True, exist_ok=True)
-            mtmp = marker_dir / f".tmp.{k}"
-            mtmp.write_text(new_dir)
-            os.replace(mtmp, marker_dir / str(k))  # the group-wide switch point
-        if gc:
-            def _drop_dir(path: str) -> None:
-                # ADVICE r11: readers register path-hashed external
-                # bucketed tables over these dirs; a gc'd dir's entry
-                # would otherwise outlive it for the whole session,
-                # accumulating one stale catalog row per compaction of
-                # a long-lived stream.  Recoverable by name, so drop.
-                spark.sql(
-                    f"DROP TABLE IF EXISTS {Sink._forget_bucket_table(spark, path)}"
-                )
-                _shutil.rmtree(path, ignore_errors=True)
+    @staticmethod
+    def _latest_wins(
+        df: DataFrame, key_cols: "Sequence[str]", tombstone: "str | None"
+    ) -> DataFrame:
+        from pyspark.sql import Window
 
-            for name in leaves:
-                for e in epochs:
-                    _drop_dir(f"{group_dir}/{name}/data/epoch={e}")
-                cdir = Path(f"{group_dir}/{name}/compact")
-                if cdir.exists():
-                    for p in cdir.iterdir():
-                        if p.name != new_dir:  # dead tmp/torn/superseded dirs
-                            _drop_dir(str(p))
-        return k
+        w = Window.partitionBy(*key_cols).orderBy(F.col("epoch").desc())
+        out = (
+            df.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+        )
+        if tombstone is not None:
+            out = out.filter(~F.coalesce(F.col(tombstone), F.lit(False)))
+        return out
 
     @staticmethod
     def read_atomic_latest(
@@ -856,20 +1011,11 @@ class Sink:
         Scale shape: one window over the key — the same shuffle a
         MERGE's join would pay, but against only the committed epochs
         a reader touches anyway; no driver state."""
-        from pyspark.sql import Window
-
-        df = Sink.read_atomic_group(
-            spark, group_dir, name, evolve_schema=evolve_schema
+        return Sink._latest_wins(
+            Sink.read_atomic_group(spark, group_dir, name, evolve_schema=evolve_schema),
+            key_cols,
+            tombstone,
         )
-        w = Window.partitionBy(*key_cols).orderBy(F.col("epoch").desc())
-        out = (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        if tombstone is not None:
-            out = out.filter(~F.coalesce(F.col(tombstone), F.lit(False)))
-        return out
 
     @staticmethod
     def compact_to_latest(
@@ -883,79 +1029,29 @@ class Sink:
     ) -> "dict[str, int]":
         """Copy-on-write counterpart of :meth:`read_atomic_latest`:
         rewrite each leaf to ONLY the latest-wins surviving rows
-        (tombstoned keys dropped for good) and publish with the same
-        run-unique-dir + atomic-marker discipline as
-        :meth:`delete_rows_atomic`.  Run it when the epoch log's read
-        amplification outgrows the merge-on-read window — after it,
-        reads need no window at all.
+        (tombstoned keys dropped for good) and publish through
+        :meth:`_consolidate` (``purge`` is its gc).  Run it when the
+        epoch log's read amplification outgrows the merge-on-read
+        window — after it, reads need no window at all.
 
         Honesty bound: this FORFEITS pre-compaction time travel — an
         ``as_of_epoch`` read afterwards sees only surviving rows (each
         still stamped with the epoch that produced it), not superseded
         versions; keep reading merge-on-read if you need full history.
-        Returns per-leaf surviving-row counts.
-
-        A ``leaves`` SUBSET rewrites only the named leaves to latest-
-        wins; the OTHER leaves are consolidated content-identically in
-        the same run (ADVICE r9: the group-wide ``_compacted/<K>``
-        marker names ONE directory, so every leaf must materialize it
-        or post-publish reads of the untouched leaves resolve a
-        nonexistent dir and fail)."""
-        import shutil as _shutil
-        import uuid as _uuid
-        from pathlib import Path
-
-        epochs, _pk, _pd = Sink._committed_epochs(group_dir)
-        if not epochs:
-            raise ValueError(f"no committed epochs under {group_dir}")
-        k = max(epochs)
-        all_leaves = [
-            p.name
-            for p in Path(group_dir).iterdir()
-            if p.is_dir() and not p.name.startswith("_")
-        ]
-        if leaves is None:
-            leaves = all_leaves
-        unknown = set(leaves) - set(all_leaves)
-        if unknown:
-            raise ValueError(f"unknown leaves {sorted(unknown)} under {group_dir}")
+        Returns per-leaf surviving-row counts.  A ``leaves`` SUBSET
+        rewrites only the named leaves; the others are consolidated
+        content-identically in the same run."""
+        leaves = Sink._pick_leaves(group_dir, leaves)
         kept: "dict[str, int]" = {}
-        new_dir = f"upto={k}.latest.{_uuid.uuid4().hex[:8]}"
-        for name in sorted(all_leaves):
-            Sink._guard_schema_divergence(spark, group_dir, name, evolve_schema)
-            if name in leaves:
-                df = Sink.read_atomic_latest(
-                    spark, group_dir, name, key_cols, tombstone=tombstone,
-                    evolve_schema=evolve_schema,
-                )
-                kept[name] = df.count()
-            else:
-                # untouched leaf: content-identical consolidation so the
-                # group-wide marker resolves for it too
-                df = Sink.read_atomic_group(
-                    spark, group_dir, name, evolve_schema=evolve_schema
-                )
-            tmp = f"{group_dir}/{name}/compact/.tmp.{new_dir}"
-            df.withColumn("epoch", F.col("epoch").cast("int")).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            os.replace(tmp, f"{group_dir}/{name}/compact/{new_dir}")
-        marker_dir = Path(group_dir) / "_compacted"
-        marker_dir.mkdir(parents=True, exist_ok=True)
-        mtmp = marker_dir / f".tmp.{k}"
-        mtmp.write_text(new_dir)
-        os.replace(mtmp, marker_dir / str(k))
-        if purge:
-            for name in all_leaves:
-                for e in epochs:
-                    _shutil.rmtree(
-                        f"{group_dir}/{name}/data/epoch={e}", ignore_errors=True
-                    )
-                cdir = Path(f"{group_dir}/{name}/compact")
-                if cdir.exists():
-                    for p in cdir.iterdir():
-                        if p.name != new_dir:
-                            _shutil.rmtree(p, ignore_errors=True)
+
+        def rewrite(name: str, df: DataFrame) -> DataFrame:
+            if name not in leaves:
+                return df
+            df = Sink._latest_wins(df, key_cols, tombstone)
+            kept[name] = df.count()
+            return df
+
+        Sink._consolidate(spark, group_dir, ".latest", rewrite, purge, evolve_schema)
         return kept
 
     @staticmethod
@@ -969,57 +1065,31 @@ class Sink:
     ) -> "dict[str, int]":
         """Right-to-be-forgotten over an :meth:`atomic_parquet_group`:
         rewrite the table WITHOUT the rows matching ``predicate`` (a
-        SQL boolean, or one per leaf) and publish the deletion with the
-        same marker discipline as compaction — readers see either the
-        full pre-delete table or the post-delete one, never a leaf
-        half-scrubbed.  Unlike compaction this is NOT a pure layout
-        change: the delete applies to the whole commit HISTORY, so
-        ``as_of_epoch`` snapshots stop returning the purged rows too —
-        the GDPR requirement that wins over time travel (the same
-        resolution Delta/Iceberg reach via VACUUM, except here history
-        MINUS the purged rows stays queryable because the consolidated
-        layout keeps the epoch column).
+        SQL boolean, or one per leaf) and publish the deletion through
+        :meth:`_consolidate` — readers see either the full pre-delete
+        table or the post-delete one, never a leaf half-scrubbed.
+        Unlike compaction this is NOT a pure layout change: the delete
+        applies to the whole commit HISTORY, so ``as_of_epoch``
+        snapshots stop returning the purged rows too — the GDPR
+        requirement that wins over time travel (the same resolution
+        Delta/Iceberg reach via VACUUM, except here history MINUS the
+        purged rows stays queryable because the consolidated layout
+        keeps the epoch column).
 
-        Crash contract: consolidated no-match copies land under
-        run-unique dirs first, the ``_compacted/<K>`` marker atomically
-        repoints last (rename-over-existing is atomic), and the
-        physical purge of superseded dirs runs after publish — a crash
-        anywhere leaves readers on a complete view, and RERUNNING the
-        delete finishes both the logical scrub (idempotent: second run
-        deletes 0) and the physical sweep.  Compliance note: data is
-        only physically gone when this returns with ``purge=True``;
-        epochs committed AFTER the delete are untouched by it.
-
-        Scale shape: one filtered scan + consolidated write per leaf
-        (the same cost class as compaction), counts are bounded driver
-        scalars, markers are single files.
+        Crash contract: a crash anywhere leaves readers on a complete
+        view, and RERUNNING the delete finishes both the logical scrub
+        (idempotent: second run deletes 0) and the physical sweep.
+        Compliance note: data is only physically gone when this returns
+        with ``purge=True`` (which also prunes superseded
+        ``_compacted`` markers); epochs committed AFTER the delete are
+        untouched by it.  Returns per-leaf deleted-row counts.
 
         A ``leaves`` SUBSET scrubs only the named leaves; the others
-        are consolidated content-identically in the same run so the
-        group-wide marker resolves for every leaf (ADVICE r9).  On a
+        are consolidated content-identically in the same run.  On a
         group with additive schema evolution pass ``evolve_schema=True``
         — the default refuses to consolidate a schema-divergent leaf
         rather than silently dropping later epochs' columns."""
-        import shutil as _shutil
-        import uuid as _uuid
-        from pathlib import Path
-
-        from pyspark.sql import functions as F
-
-        epochs, _prev_k, _prev_dir = Sink._committed_epochs(group_dir)
-        if not epochs:
-            raise ValueError(f"no committed epochs under {group_dir}")
-        k = max(epochs)
-        all_leaves = [
-            p.name
-            for p in Path(group_dir).iterdir()
-            if p.is_dir() and not p.name.startswith("_")
-        ]
-        if leaves is None:
-            leaves = all_leaves
-        unknown = set(leaves) - set(all_leaves)
-        if unknown:
-            raise ValueError(f"unknown leaves {sorted(unknown)} under {group_dir}")
+        leaves = Sink._pick_leaves(group_dir, leaves)
         preds = (
             predicate if isinstance(predicate, dict)
             else {name: predicate for name in leaves}
@@ -1028,45 +1098,18 @@ class Sink:
         if missing:
             raise ValueError(f"no delete predicate for leaves {sorted(missing)}")
         deleted: "dict[str, int]" = {}
-        new_dir = f"upto={k}.del.{_uuid.uuid4().hex[:8]}"
-        # every leaf materializes the marker's directory — leaves outside
-        # the delete subset get a content-identical consolidation
-        # (ADVICE r9: the group-wide marker names ONE dir; a subset-only
-        # rewrite would break reads of every other leaf)
-        for name in sorted(all_leaves):
-            Sink._guard_schema_divergence(spark, group_dir, name, evolve_schema)
-            df = Sink.read_atomic_group(
-                spark, group_dir, name, evolve_schema=evolve_schema
-            )
-            if name in preds and name in leaves:
-                hit = F.coalesce(F.expr(preds[name]), F.lit(False))
-                deleted[name] = df.filter(hit).count()
-                df = df.filter(~hit)
-            tmp = f"{group_dir}/{name}/compact/.tmp.{new_dir}"
-            df.withColumn(
-                "epoch", F.col("epoch").cast("int")
-            ).write.mode("overwrite").parquet(tmp)
-            os.replace(tmp, f"{group_dir}/{name}/compact/{new_dir}")
-        marker_dir = Path(group_dir) / "_compacted"
-        marker_dir.mkdir(parents=True, exist_ok=True)
-        mtmp = marker_dir / f".tmp.{k}"
-        mtmp.write_text(new_dir)
-        os.replace(mtmp, marker_dir / str(k))  # the atomic delete-visibility point
+
+        def rewrite(name: str, df: DataFrame) -> DataFrame:
+            if name not in leaves:
+                return df
+            hit = F.coalesce(F.expr(preds[name]), F.lit(False))
+            deleted[name] = df.filter(hit).count()
+            return df.filter(~hit)
+
+        k = Sink._consolidate(spark, group_dir, ".del", rewrite, purge, evolve_schema)
         if purge:
-            for name in all_leaves:
-                for e in epochs:
-                    _shutil.rmtree(
-                        f"{group_dir}/{name}/data/epoch={e}", ignore_errors=True
-                    )
-                cdir = Path(f"{group_dir}/{name}/compact")
-                if cdir.exists():
-                    for p in cdir.iterdir():
-                        if p.name != new_dir:
-                            _shutil.rmtree(p, ignore_errors=True)
-            for p in marker_dir.iterdir():
-                if p.name.startswith("."):
-                    p.unlink(missing_ok=True)
-                elif int(p.name) < k:
+            for p in (Path(group_dir) / "_compacted").iterdir():
+                if p.name.startswith(".") or int(p.name) < k:
                     p.unlink(missing_ok=True)  # superseded compaction markers
         return deleted
 
