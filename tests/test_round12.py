@@ -275,12 +275,20 @@ def test_cell_argmax_shares_one_hoisted_norm(spark):
     hoisted = S._with_cell(df, "embedding", anchors)
     plan = hoisted._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("SQRT") == 1, plan.count("SQRT")
-    inline = df.withColumn("cell", S._cell_expr(F.col("embedding"), anchors))
+    inline = df.withColumn(
+        "cell", F.expr(S._sql_cell_expr("`embedding`", anchors, None))
+    )
     assert inline._jdf.queryExecution().optimizedPlan().toString().count("SQRT") > 1
-    # and the shared-norm form is value-identical to the inline form
+    # and the shared-norm form is value-identical to the inline form and
+    # to the numpy fold reference's first argmax
     a = [tuple(r) for r in hoisted.select("vec_id", "cell").orderBy("vec_id").collect()]
     b = [tuple(r) for r in inline.select("vec_id", "cell").orderBy("vec_id").collect()]
     assert a == b
+    import numpy as np
+
+    m = np.array([[float(i * (d + 1)) for d in range(4)] for i in range(1, 50)])
+    scores, _ = S._np_anchor_scores(m, S._np_norm(m), anchors)
+    assert [c for _, c in a] == scores.argmax(axis=1).tolist()
 
 
 def test_argument_validation_precedes_compute(spark, tmp_path):

@@ -220,16 +220,23 @@ def test_vectorized_kernel_matches_expression_kernel(spark):
         ).collect()
     }
     assert expr == vec
-    # probe lists (IVF nprobe rule): same top-3, same order
+    # probe lists (IVF nprobe rule): same top-3, same order — and the
+    # numpy fold reference agrees with the expression kernel
     expr_p = {
         r["vec_id"]: list(r["p"])
-        for r in batch.withColumn("__nv__", S.norm(F.col("embedding")))
+        for r in batch.withColumn("__nv__", F.expr(S._sql_norm("`embedding`")))
         .withColumn(
             "p",
-            S._probe_cells_expr(F.col("embedding"), anchors, 3, nv=F.col("__nv__")),
+            F.expr(S._sql_probe_cells("`embedding`", anchors, 3, "`__nv__`")),
         )
         .collect()
     }
+    import numpy as np
+
+    m = np.asarray(V, dtype=np.float64)
+    scores, _ = S._np_anchor_scores(m, S._np_norm(m), anchors)
+    probes = S._np_probe_cells(scores, np.zeros(scores.shape, bool), 3)
+    assert expr_p == {i: probes[i].tolist() for i in range(200)}
     vec_p = {
         r["vec_id"]: list(r["p"])
         for r in S._assign_cells_vectorized(

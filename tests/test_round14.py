@@ -1,10 +1,10 @@
 """Round-14 pins.
 
-1. SQL-string vs Column-builder BIT parity for the ANN expression
-   kernels and the MinHash band builder (VERDICT r13 #6): the r13
-   optimization rendered hot expression trees as SQL strings; these
-   tests pin that both construction paths produce byte-identical
-   values, so a regexp/repr edge introduced by a future edit of the
+1. BIT parity of the SQL-string ANN expression kernels with the numpy
+   fold reference, and of the MinHash band builder's SQL form with its
+   helper (VERDICT r13 #6): the r13 optimization rendered hot
+   expression trees as SQL strings; these tests pin their values byte
+   for byte, so a regexp/repr edge introduced by a future edit of the
    ``_sql_*`` helpers cannot ship a silent value change.
 
 2. The tmpfs spark.local.dir guard (VERDICT r13 #5 / ADVICE r13):
@@ -40,64 +40,45 @@ def _seeded_anchors(k=6, dims=8):
     ]
 
 
-def _score_bits(df, col):
-    """The raw IEEE-754 bits of a double column, row-keyed — the
-    strictest possible equality (NaN-safe, -0.0-safe)."""
-    rows = df.select("vec_id", col).collect()
-    return {
-        r["vec_id"]: struct.pack("<d", r[col]) for r in rows
-    }
+def test_sql_ann_expr_bits_match_numpy_fold(spark):
+    """The SQL-rendered ANN expressions against the numpy fold
+    reference (``similarity._fold_sum``): identical cells, probe lists
+    and score BITS, with the norm hoisted or inlined."""
+    import numpy as np
 
-
-def test_sql_vs_column_ann_expr_bit_parity(spark):
     anchors = _seeded_anchors()
     vecs = _seeded_vectors(spark)
-
-    # cell assignment: Column form vs SQL form, with and without the
-    # hoisted norm
-    nv_col = similarity.norm(F.col("embedding"))
-    col_form = vecs.select(
-        "vec_id",
-        similarity._cell_expr(F.col("embedding"), anchors, nv=nv_col).alias("cell"),
-        similarity._probe_cells_expr(
-            F.col("embedding"), anchors, 3, nv=nv_col
-        ).alias("probes"),
-        similarity._anchor_cos(F.col("embedding"), anchors[0], nv=nv_col).alias(
-            "score0"
-        ),
-    )
+    nv = similarity._sql_norm("embedding")
     sql_form = vecs.select(
         "vec_id",
+        F.expr(similarity._sql_cell_expr("embedding", anchors, nv)).alias("cell"),
         F.expr(
-            similarity._sql_cell_expr(
-                "embedding", anchors, similarity._sql_norm("embedding")
-            )
-        ).alias("cell"),
-        F.expr(
-            similarity._sql_probe_cells(
-                "embedding", anchors, 3, similarity._sql_norm("embedding")
-            )
+            similarity._sql_probe_cells("embedding", anchors, 3, nv)
         ).alias("probes"),
-        F.expr(
-            similarity._sql_anchor_cos(
-                "embedding", anchors[0], similarity._sql_norm("embedding")
-            )
-        ).alias("score0"),
+        F.expr(similarity._sql_anchor_cos("embedding", anchors[0], nv)).alias(
+            "score0"
+        ),
+        F.expr(similarity._sql_anchor_cos("embedding", anchors[0], None)).alias(
+            "inline0"
+        ),
+        F.expr(nv).alias("nv"),
     )
-    a = {r["vec_id"]: (r["cell"], tuple(r["probes"])) for r in col_form.collect()}
-    b = {r["vec_id"]: (r["cell"], tuple(r["probes"])) for r in sql_form.collect()}
-    assert a == b
-    # raw score BITS (struct.pack): the strongest claim — the SQL
-    # literal path reproduces the exact IEEE double of the Column path
-    assert _score_bits(col_form, "score0") == _score_bits(sql_form, "score0")
-    # inline (un-hoisted) norm must produce the same bits too
-    inline_sql = vecs.select(
-        "vec_id",
-        F.expr(
-            similarity._sql_anchor_cos("embedding", anchors[0], None)
-        ).alias("score0"),
-    )
-    assert _score_bits(col_form, "score0") == _score_bits(inline_sql, "score0")
+    rows = {r["vec_id"]: r for r in sql_form.collect()}
+    ids = sorted(rows)
+    m = np.array([[float(x) for x in r["embedding"]] for r in
+                  vecs.orderBy("vec_id").collect()])
+    ref_nv = similarity._np_norm(m)
+    scores, _ = similarity._np_anchor_scores(m, ref_nv, anchors)
+    probes = similarity._np_probe_cells(scores, np.zeros(scores.shape, bool), 3)
+    assert [rows[i]["cell"] for i in ids] == scores.argmax(axis=1).tolist()
+    assert [list(rows[i]["probes"]) for i in ids] == probes.tolist()
+    # raw score BITS (struct.pack): the strongest claim — the SQL literal
+    # path and the numpy fold produce the exact same IEEE doubles
+    for col, ref in (("nv", ref_nv), ("score0", scores[:, 0]),
+                     ("inline0", scores[:, 0])):
+        assert [struct.pack("<d", rows[i][col]) for i in ids] == [
+            struct.pack("<d", x) for x in ref.tolist()
+        ], col
 
 
 def test_sql_double_literal_roundtrip(spark):

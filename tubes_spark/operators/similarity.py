@@ -11,13 +11,24 @@ Design for scale:
   final per-query top-k (tiny).
 * Scale path: sign-LSH bucketing — corpus shuffles ONCE on a small int
   bucket key; only same-bucket pairs are scored.
+* Serving a small persisted index (:func:`index_topk`): when the live
+  index files AND the query batch both fit under the session's
+  ``spark.sql.autoBroadcastJoinThreshold``, the fixed cost of planning
+  and scheduling a multi-job Spark query dwarfs the arithmetic (a few
+  million multiply-adds), so the call is answered on the driver from a
+  cached in-memory snapshot of the index — bit-identical to the Spark
+  plan, which stays the path for everything larger (the Drizzle point:
+  at small batch sizes per-batch coordination dominates).
 
 Column helpers (dot/norm/cosine) are kept for small/inline use and for
-oracle-matched queries where scoring must be expression-deterministic.
+oracle-matched queries where scoring must be expression-deterministic;
+the numpy fold reference (:func:`_fold_sum`) reproduces their doubles
+bit for bit.
 """
 
 from __future__ import annotations
 
+import threading
 from typing import Iterator
 
 import numpy as np
@@ -55,11 +66,9 @@ def cosine(a: Column, b: Column) -> Column:
 # trips (every F.lit, every lambda), measured at ~1.7 s of DRIVER time
 # per construction — and the heavy ANN queries build it 6+ times each
 # (guide §1: the profile showed 40k py4j round trips per query, 65% of
-# wall in driver-side gaps).  These helpers render the IDENTICAL
-# Catalyst tree as ONE SQL string parsed by ONE F.expr call, so plan,
-# codegen, and every double produced are unchanged — only the Python
-# construction cost collapses.  tests/test_round13.py pins value parity
-# against the Column form.
+# wall in driver-side gaps).  These helpers render the same fold as ONE
+# SQL string parsed by ONE F.expr call.  tests/test_round14.py pins
+# their doubles bit for bit against the numpy fold reference below.
 
 def _sql_double(v: float) -> str:
     """A Spark SQL DOUBLE literal that parses to exactly this IEEE
@@ -94,18 +103,40 @@ def _sql_norm(a: str) -> str:
     )
 
 
+def _anchor_norm(anchor: "list[float]") -> float:
+    """The norm of one literal anchor, folded in Python — the one
+    definition every anchor cosine divides by."""
+    return float(sum(v * v for v in anchor)) ** 0.5
+
+
 def _sql_anchor_cos(vec: str, anchor: "list[float]", nv: "str | None") -> str:
-    """SQL form of :func:`_anchor_cos`: same division tree
-    ``d / (nv * na)``, anchor norm pre-folded in Python exactly as the
-    Column form does."""
-    na = float(sum(v * v for v in anchor)) ** 0.5
+    """Cosine of an array column against one literal anchor, computed
+    as a SEQUENTIAL left fold over the dims in index order — the same
+    summation order DuckDB's list_sum(list_transform(...)) uses, so the
+    double is bit-identical across engines and the argmax cell
+    assignment (and any threshold comparison) can sit under the
+    value-hash oracle gate.
+
+    ``nv``: a precomputed norm column (ADVICE r11 — the norm is an
+    interpreted O(dims) fold; recomputing it once per anchor made cell
+    assignment pay |anchors| redundant folds per row).  The division
+    tree is ``d / (nv * na)`` either way, with the anchor norm ``na``
+    pre-folded in Python (:func:`_anchor_norm`), so the double is the
+    same whether the norm is shared or inlined."""
     nv_s = nv if nv is not None else _sql_norm(vec)
-    return f"{_sql_dot(vec, _sql_arr(anchor))} / ({nv_s} * {_sql_double(na)})"
+    return (
+        f"{_sql_dot(vec, _sql_arr(anchor))} / "
+        f"({nv_s} * {_sql_double(_anchor_norm(anchor))})"
+    )
 
 
 def _sql_cell_expr(
     vec: str, anchors: "list[list[float]]", nv: "str | None"
 ) -> str:
+    """argmax-cosine cell id as a pure per-row expression (zero shuffle,
+    whole-stage codegen): the first index of the max score, so ties
+    break toward the smallest anchor id — mirrored by the oracle's
+    row_number() ORDER BY cos DESC, aid ASC."""
     scores = (
         "array(" + ", ".join(_sql_anchor_cos(vec, a, nv) for a in anchors) + ")"
     )
@@ -115,6 +146,10 @@ def _sql_cell_expr(
 def _sql_probe_cells(
     vec: str, anchors: "list[list[float]]", n_probe: int, nv: "str | None"
 ) -> str:
+    """Top-``n_probe`` cells by cosine, best first — the IVF nprobe
+    rule.  The ascending struct sort on (-score, aid) is (score DESC,
+    aid ASC), the oracle's tiebreak, and a sign flip is exact, so for
+    finite scores element 0 equals :func:`_sql_cell_expr`."""
     scores = (
         "array(" + ", ".join(_sql_anchor_cos(vec, a, nv) for a in anchors) + ")"
     )
@@ -124,6 +159,61 @@ def _sql_probe_cells(
         f"named_struct('ns', -s, 'aid', CAST(i AS INT))))"
     )
     return f"transform(slice({ranked}, 1, {int(n_probe)}), st -> st.aid)"
+
+
+# ------------------------------------------------------ numpy fold reference
+#
+# The expression kernel's arithmetic in numpy, bit for bit.  Spark's
+# aggregate(arr, 0.0D, (acc, v) -> acc + v) is a left fold from 0.0 in
+# dim order; :func:`_fold_sum` performs the same IEEE additions in the
+# same order — np.sum (pairwise) and BLAS (blocked) do not.  Every
+# multiply, add, sqrt and divide is one correctly rounded IEEE-754
+# operation on both sides, so only the operation ORDER has to match.
+
+def _fold_sum(p: np.ndarray, axis: int = -1) -> np.ndarray:
+    """:func:`_sql_dot`'s / :func:`_sql_norm`'s fold along ``axis``:
+    ``acc = 0.0; acc += term`` for each term in index order."""
+    terms = np.moveaxis(p, axis, 0)
+    acc = np.zeros(terms.shape[1:])
+    for t in terms:
+        acc += t
+    return acc
+
+
+def _np_norm(m: np.ndarray, axis: int = -1) -> np.ndarray:
+    """:func:`norm` of each vector of ``m`` (vectors along ``axis``)."""
+    return np.sqrt(_fold_sum(m * m, axis))
+
+
+def _np_anchor_scores(
+    m: np.ndarray, nv: np.ndarray, anchors: "list[list[float]]"
+) -> "tuple[np.ndarray, np.ndarray]":
+    """(cosines, divisors) of each row of ``m`` against every anchor —
+    :func:`_sql_anchor_cos`'s ``d / (nv * na)``.  A zero divisor gives
+    inf/NaN here; Spark raises (ANSI) or yields NULL there, so callers
+    inspect the divisors."""
+    a = np.asarray(anchors, dtype=np.float64)
+    na = np.array([_anchor_norm(x) for x in anchors])
+    div = nv[:, None] * na[None, :]
+    with np.errstate(all="ignore"):
+        return _fold_sum(m[:, None, :] * a[None, :, :]) / div, div
+
+
+def _np_probe_cells(
+    scores: np.ndarray, null: np.ndarray, n_probe: int
+) -> np.ndarray:
+    """:func:`_sql_probe_cells` per row of ``scores`` (rows x anchors,
+    ``null`` marking NULL scores): ascending on (-score, aid) under
+    Spark's ordering — NULL first, NaN above every number, -0.0 equal
+    to 0.0 — keeping the first ``n_probe`` anchor ids."""
+    n, c = scores.shape
+    ns = -scores
+    cls = np.where(null, 0, np.where(np.isnan(ns), 2, 1))
+    val = np.where(cls == 1, ns, 0.0)
+    aid = np.broadcast_to(np.arange(c), (n, c))
+    row = np.broadcast_to(np.arange(n)[:, None], (n, c))
+    order = np.lexsort((aid.ravel(), val.ravel(), cls.ravel(), row.ravel()))
+    return (order % c).reshape(n, c)[:, : min(int(n_probe), c)]
 
 
 # ---------------------------------------------------------------- numpy core
@@ -853,69 +943,6 @@ def knn_pq_adc(
 
 # --------------------------------------------- persisted incremental ANN index
 
-def _anchor_cos(vec_col: Column, anchor: "list[float]", nv: "Column | None" = None) -> Column:
-    """Cosine of an array column against one literal anchor, computed as
-    a SEQUENTIAL left fold over the dims in index order (F.aggregate) —
-    the same summation order DuckDB's list_sum(list_transform(...))
-    uses, so the double result is bit-identical across engines and the
-    argmax cell assignment (and any threshold comparison) can sit under
-    the value-hash oracle gate.  Interpreted higher-order lambdas are
-    ~100x slower than a matmul (module docstring) — acceptable here
-    because the anchor set is small by construction (|anchors| literal
-    expressions per row, no shuffle, no Python).
-
-    ``nv``: a precomputed ``norm(vec_col)`` column (ADVICE r11 — the
-    norm is an interpreted O(dims) fold; recomputing it once per anchor
-    inside the argmax made cell assignment pay |anchors| redundant
-    folds per row).  The division tree is unchanged — ``d / (nv * na)``
-    — so the double result, and every oracle gate built on it, is
-    bit-identical whether the norm is shared or inlined."""
-    a = F.array(*[F.lit(float(v)) for v in anchor])
-    d = dot(vec_col, a)
-    na = float(sum(v * v for v in anchor)) ** 0.5
-    if nv is None:
-        nv = norm(vec_col)
-    return d / (nv * F.lit(na))
-
-
-def _cell_expr(
-    vec_col: Column, anchors: "list[list[float]]", nv: "Column | None" = None
-) -> Column:
-    """argmax-cosine cell id as a pure per-row expression (zero shuffle,
-    whole-stage codegen): first index of the max score, so ties break
-    toward the smallest anchor id — mirrored by the oracle's
-    row_number() ORDER BY cos DESC, aid ASC.  Pass ``nv`` (see
-    :func:`_anchor_cos`) to share one batch-side norm across all
-    |anchors| scores; :func:`_with_cell` does this automatically."""
-    scores = F.array(*[_anchor_cos(vec_col, a, nv=nv) for a in anchors])
-    return (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
-
-
-def _probe_cells_expr(
-    vec_col: Column, anchors: "list[list[float]]", n_probe: int,
-    nv: "Column | None" = None,
-) -> Column:
-    """Top-``n_probe`` cells by cosine, best first — the IVF nprobe
-    rule for the ARRIVING side of the incremental screen (stored
-    vectors always live in exactly one cell, their argmax).  Element 0
-    equals :func:`_cell_expr` exactly: the sort is (score DESC, aid
-    ASC) via an ascending struct sort on (-score, aid), the same
-    tiebreak as the oracle's row_number ORDER BY cos DESC, aid ASC —
-    and double negation is a sign flip, so score order is preserved
-    bit-exactly."""
-    scores = F.array(*[_anchor_cos(vec_col, a, nv=nv) for a in anchors])
-    idx = F.sequence(F.lit(0), F.lit(len(anchors) - 1))
-    ranked = F.sort_array(
-        F.zip_with(
-            scores, idx,
-            lambda s, i: F.struct((-s).alias("ns"), i.cast("int").alias("aid")),
-        )
-    )
-    return F.transform(
-        F.slice(ranked, 1, int(n_probe)), lambda st: st["aid"]
-    )
-
-
 # Anchor counts past this dispatch to the Arrow-batched matmul kernel:
 # each expression-kernel cosine is an O(dims) interpreted fold, so plan
 # size AND per-row cost grow with |anchors| — the ann_anchor_scale probe
@@ -947,20 +974,32 @@ def _spread_broadcast_probe(df: DataFrame) -> DataFrame:
     this extra exchange moves a few MB once) AND the current partition
     count is below ``defaultParallelism``; a corpus past the threshold
     is returned unchanged — there the planner keys both sides on the
-    cell and that exchange provides the parallelism."""
+    cell and that exchange provides the parallelism.  Unknown stats
+    (:meth:`Sink.plan_bytes` is None) leave the frame unchanged."""
+    from py4j.protocol import Py4JError
+
+    from tubes_spark.sink import Sink
+
     try:
-        sc = df.sparkSession.sparkContext
-        par = sc.defaultParallelism
-        thr = int(
-            df.sparkSession._jsparkSession.sessionState().conf()
-            .autoBroadcastJoinThreshold()
-        )
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        if 0 < est <= max(thr, 0) and df.rdd.getNumPartitions() < par:
+        par = df.sparkSession.sparkContext.defaultParallelism
+        est = Sink.plan_bytes(df)
+        thr = _broadcast_threshold(df.sparkSession)
+        if (
+            est is not None and 0 < est <= max(thr, 0)
+            and df.rdd.getNumPartitions() < par
+        ):
             return df.repartition(par)
-    except Exception:
+    except (AttributeError, Py4JError):  # no JVM plan to ask
         pass
     return df
+
+
+def _broadcast_threshold(spark) -> int:
+    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes
+    (-1: broadcasting disabled)."""
+    return int(
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    )
 
 
 def _assign_cells_vectorized(
@@ -977,7 +1016,7 @@ def _assign_cells_vectorized(
     `argmax` per row — cost linear in rows and independent of plan
     size, so the codebook can grow ~ sqrt(N) (10^4+ cells) where the
     expression kernel's |anchors| interpreted fold expressions per row
-    stop compiling.  Semantics mirror :func:`_cell_expr` exactly:
+    stop compiling.  Semantics mirror :func:`_sql_cell_expr` exactly:
     cosine argmax with ties toward the smallest anchor id (numpy's
     first-max argmax; the probe list uses a STABLE descending sort, so
     element 0 is the argmax and ties keep ascending aid order).  The
@@ -989,7 +1028,7 @@ def _assign_cells_vectorized(
 
     With ``probes_col`` set, also emits the top-``n_probe`` cells per
     row (the IVF nprobe rule, same tiebreak as
-    :func:`_probe_cells_expr`) from the SAME matmul — the arriving
+    :func:`_sql_probe_cells`) from the SAME matmul — the arriving
     side of the incremental screen pays one pass either way."""
     from pyspark.sql.types import (
         ArrayType,
@@ -1518,22 +1557,15 @@ def _leaf_extra_cols(
     name instead), so it shows up in footers without ever being user
     payload — ``payload_cols=["epoch"]`` is rejected at write time for
     exactly this reason."""
-    import glob
-    import os
-
     import pyarrow.parquet as pq
 
     from tubes_spark.sink import Sink
 
-    for d in Sink.live_leaf_dirs(group_dir, "cells"):
-        parts = sorted(glob.glob(os.path.join(d, "*.parquet")))
-        if parts:
-            names = pq.ParquetFile(parts[0]).schema_arrow.names
-            return [
-                c for c in names
-                if c not in (id_col, "cell", vec_col, "epoch")
-            ]
-    return None if default is None else list(default)
+    parts = Sink.live_part_files(group_dir, "cells")
+    if not parts:
+        return None if default is None else list(default)
+    names = pq.ParquetFile(parts[0][0]).schema_arrow.names
+    return [c for c in names if c not in (id_col, "cell", vec_col, "epoch")]
 
 
 def _read_index_sides(spark, group_dir: str) -> "list[DataFrame]":
@@ -1593,7 +1625,7 @@ def incremental_ann_new(
     scale ~P, and the ledger's ``cell`` / any index append still use
     the primary (argmax) cell — stored vectors always live in exactly
     one inverted list, so no pair is ever double-counted.  Cosines
-    fold dims in index order (``_anchor_cos``), so every comparison
+    fold dims in index order (:func:`_sql_anchor_cos`), so every comparison
     here is bit-identical to the DuckDB oracle's (the nprobe gate's
     oracle takes arriving cells at row_number <= P).
 
@@ -2246,6 +2278,331 @@ def _probe_assign(
     )
 
 
+# ----------------------------------- driver-resident serving of small indexes
+#
+# index_topk's Spark plan costs ~5 jobs and ~1,100 py4j round trips of
+# planning per call, while a small index's arithmetic is a few million
+# multiply-adds.  Under the gate in :func:`_serve_from_snapshot` the call
+# is answered from a cached snapshot of the live ``cells`` rows with the
+# expression kernel's exact arithmetic (the numpy fold reference).
+
+class _IndexSnapshot:
+    """The live ``cells`` rows of one index, tombstoned ids excluded,
+    sorted by (cell, id): rows of cell ``c`` are
+    ``offsets[c]:offsets[c + 1]``.  Vectors are stored dim-major
+    (``vecs_t`` is dims x rows), so a cell's block folds over
+    contiguous rows."""
+
+    __slots__ = ("ids", "id_rank", "offsets", "vecs_t", "valid", "norms",
+                 "payload", "nbytes")
+
+    def __init__(self, tbl, id_col: str, vec_col: str, n_cells: int,
+                 vecs: np.ndarray, valid: np.ndarray):
+        import pyarrow.compute as pc
+
+        self.ids = tbl.column(id_col).combine_chunks()
+        self.id_rank = pc.rank(
+            self.ids, sort_keys="ascending", null_placement="at_start",
+            tiebreaker="dense",
+        ).to_numpy()
+        cells = tbl.column("cell").to_numpy()
+        self.offsets = np.searchsorted(cells, np.arange(n_cells + 1))
+        self.vecs_t, self.valid = np.ascontiguousarray(vecs.T), valid
+        self.norms = _np_norm(self.vecs_t, axis=0)
+        self.payload = tbl.drop_columns([id_col, "cell", vec_col]).combine_chunks()
+        self.nbytes = (
+            self.vecs_t.nbytes + self.norms.nbytes + self.id_rank.nbytes
+            + self.ids.nbytes + self.payload.nbytes
+        )
+
+
+# (group dir, id col, vec col) -> (file identity, snapshot or None, bytes)
+_SNAPSHOTS: "dict[tuple, tuple]" = {}
+_SNAPSHOT_LOCK = threading.Lock()
+
+def _simple_arrow_type(t) -> bool:
+    """Numbers, booleans, strings, binaries and lists of them — payload
+    types that round-trip through ``createDataFrame`` unchanged."""
+    import pyarrow.types as pt
+
+    if pt.is_list(t) or pt.is_large_list(t):
+        t = t.value_type
+    return (
+        pt.is_integer(t) or pt.is_floating(t) or pt.is_boolean(t)
+        or pt.is_string(t) or pt.is_large_string(t)
+        or pt.is_binary(t) or pt.is_large_binary(t)
+    )
+
+
+def _vector_matrix(col, dim: int):
+    """(rows x dim float64 matrix, valid, wrong_length) of an Arrow list
+    column: ``valid`` rows are non-null, of length ``dim``, with no null
+    element (every other row's cosines are NULL in Spark); a non-null
+    row of another length is flagged in ``wrong_length``.  None when the
+    column is not a list of numbers."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    t = col.type
+    if not (pa.types.is_list(t) or pa.types.is_large_list(t)) or not (
+        pa.types.is_floating(t.value_type) or pa.types.is_integer(t.value_type)
+    ):
+        return None
+    lens = pc.fill_null(pc.list_value_length(col), -1).to_numpy()
+    valid = lens == dim
+    m = np.zeros((len(col), dim))
+    rows = np.flatnonzero(valid)
+    if len(rows):
+        vals = pc.list_flatten(col.filter(pa.array(valid)))
+        has_null = (
+            vals.is_null().to_numpy(zero_copy_only=False)
+            .reshape(-1, dim).any(axis=1)
+        )
+        m[rows] = (
+            pc.fill_null(vals, 0).to_numpy(zero_copy_only=False)
+            .astype(np.float64).reshape(-1, dim)
+        )
+        valid[rows[has_null]] = False
+    return m, valid, (lens >= 0) & (lens != dim)
+
+
+def _load_snapshot(files, tomb_files, id_col, vec_col, extra, anchors):
+    """Read the live part files with pyarrow (no Spark job) into an
+    :class:`_IndexSnapshot`, or None when the rows hold something this
+    path does not reproduce exactly (non-integer ids, payload types
+    outside :func:`_simple_arrow_type`, stored vectors of another
+    length, anchors Spark would refuse) — such an index is served by
+    the Spark plan."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    dim = len(anchors[0]) if anchors else 0
+    if dim == 0 or any(len(a) != dim for a in anchors) or not np.isfinite(
+        np.asarray(anchors, dtype=np.float64)
+    ).all():
+        return None
+    cols = [id_col, "cell", vec_col, *extra]
+    try:
+        tbl = pa.concat_tables(
+            [pq.ParquetFile(p).read(columns=cols) for p, _, _ in files]
+        )
+    except (KeyError, ValueError):  # a missing column, diverging footers
+        return None
+    ids_t = tbl.schema.field(id_col).type
+    if not pa.types.is_integer(ids_t) or not all(
+        _simple_arrow_type(tbl.schema.field(c).type) for c in extra
+    ):
+        return None
+    if tomb_files:
+        tombs = pa.concat_tables(
+            [pq.ParquetFile(p).read() for p, _, _ in tomb_files]
+        )
+        if tombs.column_names[0] != id_col:
+            return None
+        doomed = pc.is_in(
+            tbl.column(id_col), value_set=tombs.column(0).cast(ids_t),
+            skip_nulls=True,
+        )
+        tbl = tbl.filter(pc.invert(doomed))
+    cells = tbl.column("cell")  # only anchor ids join a probe cell
+    tbl = tbl.filter(pc.and_(
+        pc.greater_equal(cells, 0), pc.less(cells, len(anchors))
+    ))
+    tbl = tbl.sort_by([("cell", "ascending"), (id_col, "ascending")])
+    mat = _vector_matrix(tbl.column(vec_col), dim)
+    if mat is None or mat[2].any():
+        return None
+    return _IndexSnapshot(tbl, id_col, vec_col, len(anchors), mat[0], mat[1])
+
+
+def _index_snapshot(group_dir, id_col, vec_col, extra, anchors, limit):
+    """The cached snapshot of the index, reloaded whenever the identity
+    (path, size, mtime_ns) of any live part file, tombstone file or the
+    anchor record changes — so every append, compaction, delete, purge
+    or rebuild at the same path is seen by the next call.  None when the
+    live files exceed ``limit`` bytes or the rows are not servable here.
+    The cache holds at most ``limit`` bytes of snapshots, evicting the
+    least recently used; one lock covers check-then-load."""
+    import os
+
+    from tubes_spark.sink import Sink
+
+    spec = Sink._bucket_spec(group_dir)
+    if spec is None:  # not an index this version reads (the plan raises)
+        return None
+    files = Sink.live_part_files(group_dir, spec["leaf"])
+    if sum(size for _, size, _ in files) > limit:
+        return None
+    tombs = [f for d in _tombstone_dirs(group_dir) for f in Sink.part_files(d)]
+    try:
+        st = os.stat(f"{group_dir}/_anchors.parquet")
+    except FileNotFoundError:  # served from a staged record (read-only mount)
+        return None
+    ident = (tuple(files), tuple(tombs), (st.st_size, st.st_mtime_ns))
+    key = (os.path.realpath(group_dir), id_col, vec_col)
+    with _SNAPSHOT_LOCK:
+        hit = _SNAPSHOTS.pop(key, None)
+        if hit is not None and hit[0] == ident:
+            _SNAPSHOTS[key] = hit  # most recently used goes last
+            return hit[1]
+        try:
+            snap = _load_snapshot(files, tombs, id_col, vec_col, extra, anchors)
+        except FileNotFoundError:  # a concurrent gc moved the live set
+            return None
+        _SNAPSHOTS[key] = (ident, snap, 0 if snap is None else snap.nbytes)
+        total = sum(v[2] for v in _SNAPSHOTS.values())
+        while total > limit:
+            total -= _SNAPSHOTS.pop(next(iter(_SNAPSHOTS)))[2]
+    return snap
+
+
+def _desc_keys(cs: np.ndarray, null: np.ndarray):
+    """Sort keys (class, value) putting ``cs`` in Spark's DESC NULLS
+    LAST order under ascending sorts: NaN first (Spark orders NaN above
+    every number), then numbers descending (-0.0 equal to 0.0), then
+    NULL."""
+    cls = np.where(null, 2, np.where(np.isnan(cs), 0, 1))
+    return cls, np.where(cls == 1, -cs, 0.0)
+
+
+def _serve_from_snapshot(
+    arriving: DataFrame, spark, group_dir: str, anchors, k: int,
+    n_probe: int, id_col: str, vec_col: str, extra: "list[str]",
+) -> "DataFrame | None":
+    """:func:`index_topk`'s expression-kernel answer computed on the
+    driver, or None when the gate sends the call to the Spark plan.
+
+    Gate (caller: expr kernel, no ``stored_filter``): a batch
+    ``arriving`` whose plan-estimated size is known, and a live index
+    whose files, both at most ``spark.sql.autoBroadcastJoinThreshold``
+    bytes (-1 disables this path).  Reads the index (cached) and
+    ``arriving`` now, not when the result is evaluated.
+
+    Every double is the Spark plan's: probe scores and pair cosines use
+    the numpy fold reference and its ``d / (nv * na)`` division tree;
+    probe cells sort like :func:`_sql_probe_cells`; all candidates of
+    one query id (duplicate ids included) rank together on
+    (cs DESC, match_id ASC) under Spark's double ordering, as the
+    Window does; a NULL or malformed vector's cosines are NULL.  A zero
+    divisor yields NULL, or — under ANSI, where Spark raises — hands
+    the call to the Spark plan so it raises the same error.  The
+    result is a local relation; ``F.round`` is Spark's (HALF_UP)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_type
+    from pyspark.sql.types import (
+        ByteType, DoubleType, IntegerType, LongType, ShortType, StructField,
+        StructType,
+    )
+
+    from tubes_spark.sink import Sink
+
+    if arriving.isStreaming:
+        return None
+    limit = _broadcast_threshold(spark)
+    if limit < 0:
+        return None
+    qside = arriving.select(id_col, vec_col)
+    id_field = qside.schema[id_col]
+    if not isinstance(id_field.dataType, (ByteType, ShortType, IntegerType, LongType)):
+        return None
+    est = Sink.plan_bytes(qside)
+    if est is None or est > limit:
+        return None
+    snap = _index_snapshot(group_dir, id_col, vec_col, extra, anchors, limit)
+    if snap is None:
+        return None
+    q = qside.toArrow()
+    qm = _vector_matrix(q.column(vec_col), len(anchors[0]))
+    if qm is None:
+        return None
+    qv, qvalid = qm[0], qm[1]
+
+    def null_or_raise(ok: np.ndarray, div: np.ndarray) -> "np.ndarray | None":
+        """NULL mask of ``d / div`` where ``ok`` marks non-NULL operands;
+        None when a zero divisor would raise in Spark (ANSI mode)."""
+        zero = ok & (div == 0)
+        if zero.any() and spark.conf.get("spark.sql.ansi.enabled") == "true":
+            return None
+        return ~ok | zero
+
+    # probe cells per query row
+    nv = _np_norm(qv)
+    scores, div = _np_anchor_scores(qv, nv, anchors)
+    s_null = null_or_raise(np.broadcast_to(qvalid[:, None], div.shape), div)
+    if s_null is None:
+        return None
+    probes = _np_probe_cells(scores, s_null, n_probe)
+    # per probed cell: cosines of the queries probing it against its
+    # rows (dims x queries x rows products folded over dims, in bounded
+    # chunks), keeping each query row's local top k — the top k of a
+    # query id is among the union of its rows' local top k
+    prow = np.repeat(np.arange(len(qv)), probes.shape[1])
+    pcell = probes.ravel()
+    cand = []
+    for c in np.unique(pcell):
+        a, b = snap.offsets[c], snap.offsets[c + 1]
+        probing = prow[pcell == c]
+        step = max(1, (1 << 21) // max(1, (b - a) * qv.shape[1]))
+        for i in range(0, len(probing) if b > a else 0, step):
+            qr = probing[i:i + step]
+            div = nv[qr][:, None] * snap.norms[None, a:b]
+            with np.errstate(all="ignore"):
+                cs = _fold_sum(qv[qr].T[:, :, None] * snap.vecs_t[:, None, a:b], 0) / div
+            null = null_or_raise(qvalid[qr][:, None] & snap.valid[None, a:b], div)
+            if null is None:
+                return None
+            cls, val = _desc_keys(cs, null)
+            ids = np.broadcast_to(snap.id_rank[a:b], cs.shape)
+            top = np.lexsort((ids, val, cls), axis=-1)[:, :int(k)]
+            at = np.arange(len(qr))[:, None]
+            cand.append((np.repeat(qr, top.shape[1]), (a + top).ravel(),
+                         cs[at, top].ravel(), null[at, top].ravel()))
+    if cand:
+        qrow, srow, cs, c_null = (np.concatenate(x) for x in zip(*cand))
+    else:
+        qrow = srow = np.zeros(0, np.int64)
+        cs, c_null = np.zeros(0), np.zeros(0, bool)
+    # one rank per query id over the candidates, as the Window ranks
+    qid = q.column(id_col).combine_chunks()
+    qnull = qid.is_null().to_numpy(zero_copy_only=False)
+    _, group = np.unique(
+        np.stack([qnull.astype(np.int64), qid.fill_null(0).to_numpy()], axis=1),
+        axis=0, return_inverse=True,
+    )
+    g = group.reshape(-1)[qrow]
+    cls, val = _desc_keys(cs, c_null)
+    order = np.lexsort((snap.id_rank[srow], val, cls, g))
+    gs = g[order]
+    first = np.ones(len(order), dtype=bool)
+    first[1:] = gs[1:] != gs[:-1]
+    pos = np.arange(len(order))
+    rank = pos - np.maximum.accumulate(np.where(first, pos, 0)) + 1
+    keep = rank <= int(k)
+    pick, rank = order[keep], rank[keep]
+    qi, si = pa.array(qrow[pick]), pa.array(srow[pick])
+    mcols = [f"match_{c}" for c in extra]
+    out = pa.table(
+        [qid.take(qi), pa.array(rank, pa.int32()), snap.ids.take(si)]
+        + [snap.payload.column(c).take(si) for c in extra]
+        + [pa.array(cs[pick], mask=c_null[pick])],
+        names=[id_col, "rank", "match_id", *mcols, "cs"],
+    )
+    schema = StructType(
+        [StructField(id_col, id_field.dataType, id_field.nullable),
+         StructField("rank", IntegerType(), False),
+         StructField("match_id", from_arrow_type(snap.ids.type), True)]
+        + [StructField(m, from_arrow_type(snap.payload.schema.field(c).type), True)
+           for m, c in zip(mcols, extra)]
+        + [StructField("cs", DoubleType(), True)]
+    )
+    return spark.createDataFrame(out, schema).select(
+        id_col, "rank", "match_id", *mcols, F.round("cs", 6).alias("match_sim")
+    )
+
+
 def index_topk(
     arriving: DataFrame,
     spark,
@@ -2284,7 +2641,19 @@ def index_topk(
     Scale shape: pairs scanned = |queries| * n_probe * n_c, with n_c
     held flat by the sqrt(N) codebook rule; the recall dial is
     ``n_probe`` exactly as in the screen (`ann_nprobe_boundary_recall`
-    measures the boundary-pair payoff)."""
+    measures the boundary-pair payoff).
+
+    Small indexes are served directly (:func:`_serve_from_snapshot`):
+    with the expr kernel, no ``stored_filter``, a batch (not streaming)
+    ``arriving`` of known plan-estimated size, and both that estimate
+    and the live index files at most the session's
+    ``spark.sql.autoBroadcastJoinThreshold``, the answer is computed on
+    the driver from a cached snapshot of the index, keyed on the
+    identity of every live file, and returned as a local relation.
+    Rows, doubles and schema are bit-identical to the Spark plan's (the
+    tests run every case both ways).  That path reads the index and
+    ``arriving`` when ``index_topk`` is called; the Spark plan — every
+    other call — reads them when the result is evaluated."""
     import functools
 
     if int(k) < 1:
@@ -2315,6 +2684,13 @@ def index_topk(
             StructField("match_id", idt),
             StructField("match_sim", DoubleType()),
         ]))
+    if kernel == "expr" and stored_filter is None:
+        served = _serve_from_snapshot(
+            arriving, spark, group_dir, anchors, k, n_probe, id_col, vec_col,
+            extra,
+        )
+        if served is not None:
+            return served
     # r14 (guide §2.5, same fix as r13's hard-negative probe spread):
     # the query slice fits one parquet split, so the serving join's
     # STREAM side — probe-cell assignment folds AND the per-pair

@@ -5334,6 +5334,23 @@ def _trigram_tfidf_sim(spark, sf_dir):
     )
 
 
+def _postings_partitions(w: DataFrame) -> int:
+    """Partition count for the trigram postings self-join: one per core
+    or one per 256 MiB of plan-estimated postings, whichever is more,
+    capped at 8 per core.  r14 (VERDICT r13 #3, guide §2.2): scale-
+    adaptive instead of a fixed 64, which was 2x the core count at gate
+    SF (A/B at sf0.1/local[32]: cold build 3.3-3.8 s @ 64 -> 2.4-2.7 s
+    @ 32; the 64-task stages spent 4x their CPU in scheduling/wait).
+    The cap exists because plan stats after ``localCheckpoint`` can
+    report a join product (12 GB for a 3 MB result); unknown stats give
+    one per core."""
+    from tubes_spark.sink import Sink
+
+    dp = w.sparkSession.sparkContext.defaultParallelism
+    est = Sink.plan_bytes(w) or 0
+    return min(8 * dp, max(dp, est // (256 << 20)))
+
+
 def _build_trigram_tfidf_sim(spark, sf_dir):
     """Near-duplicate scoring via the INVERTED INDEX: docs as TF-IDF
     vectors over word 3-gram shingles, pairwise cosine computed by
@@ -5377,25 +5394,8 @@ def _build_trigram_tfidf_sim(spark, sf_dir):
     # explicit term partitioning: the postings self-join's pair-event
     # stream (sum df^2 per term) is CPU-heavy relative to its byte
     # size, so AQE would coalesce it to ~3 tasks; an explicit count
-    # keeps the decimal dot-products parallel.  r14 (VERDICT r13 #3,
-    # guide §2.2): the count is now scale-adaptive — one partition per
-    # core with a bytes-per-partition ceiling from the checkpointed
-    # postings' plan stats — instead of the old fixed 64, which was
-    # 2x the core count at gate SF (A/B at sf0.1/local[32]: cold build
-    # 3.3-3.8 s @ 64 -> 2.4-2.7 s @ 32; the 64-task stages spent 4x
-    # their CPU in scheduling/wait) and would be far too FEW partitions
-    # for a 100 TB postings table.
-    try:
-        _est = int(w._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        _est = 0
-    w = w.repartition(
-        max(
-            d.sparkSession.sparkContext.defaultParallelism,
-            _est // (256 << 20),
-        ),
-        "term",
-    )
+    # keeps the decimal dot-products parallel (_postings_partitions)
+    w = w.repartition(_postings_partitions(w), "term")
     norms = w.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("w") * F.col("w")).cast("double")).alias("nrm")
     )
@@ -9390,9 +9390,8 @@ def ann_incremental_semantic_dedup(spark, sf_dir):
     try:
         similarity.write_ann_index(slices[0], tmp, n_anchors=16)
         anchors = similarity._read_anchors(tmp)
-        # _with_cell (hoisted-norm SQL kernel) instead of the inline
-        # Column-built _cell_expr: same argmax values (test-pinned),
-        # one F.expr construction instead of ~6k py4j round trips
+        # _with_cell: the hoisted-norm SQL kernel, one F.expr
+        # construction instead of ~6k py4j round trips
         v0 = similarity._with_cell(slices[0], "embedding", anchors).select(
             "vec_id",
             F.lit(0).cast("int").alias("slice"),

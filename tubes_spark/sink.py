@@ -359,6 +359,37 @@ class Sink:
         return ([compact] if compact is not None else []) + live
 
     @staticmethod
+    def part_files(path: str) -> "list[tuple[str, int, int]]":
+        """The parquet data files directly under ``path`` (what a
+        parquet read of the dir loads: hidden ``.``/``_`` files
+        excluded), sorted, each with its identity ``(path, size,
+        mtime_ns)``.  A missing dir has none."""
+        p = Path(path)
+        if not p.is_dir():
+            return []
+        out = []
+        for f in sorted(p.iterdir()):
+            if f.name.endswith(".parquet") and not f.name.startswith((".", "_")):
+                try:
+                    st = f.stat()
+                except FileNotFoundError:  # removed by a concurrent gc
+                    continue
+                out.append((str(f), st.st_size, st.st_mtime_ns))
+        return out
+
+    @staticmethod
+    def live_part_files(group_dir: str, leaf: str) -> "list[tuple[str, int, int]]":
+        """Every parquet data file of one leaf's live dirs
+        (:meth:`live_leaf_dirs` order), with its identity ``(path, size,
+        mtime_ns)`` — the committed rows of the leaf, file by file.
+        Files of a live dir are immutable, so the identity list changes
+        exactly when an append, consolidation or gc changes the rows."""
+        return [
+            f for d in Sink.live_leaf_dirs(group_dir, leaf)
+            for f in Sink.part_files(d)
+        ]
+
+    @staticmethod
     def _drop_dir(spark, path: str) -> None:
         """Remove a directory of the group together with any external
         bucketed table a reader registered over it (ADVICE r11: a
@@ -394,25 +425,17 @@ class Sink:
         return json.loads(p.read_text())
 
     @staticmethod
-    def size_derived_buckets(df: DataFrame, floor: int = 8, cap: int = 4096) -> int:
-        """Default bucket count for a NEW persisted index: derived from
-        the PLAN-ESTIMATED size of the frame being written (a few py4j
-        stats calls, no job), not from the session's core count (r13
-        optimization — guide §2: partitioning constants tuned to
-        local-mode parallelism are wrong at both ends).  Target:
-        ``_BUCKET_TARGET_BYTES`` (256 MB of plan-estimated — i.e.
-        uncompressed — bytes per bucket, landing near the guide's
-        100 MB-1 GB post-compression file target), clamped to
-        [floor, cap].
+    def plan_bytes(df: DataFrame) -> "int | None":
+        """Plan-estimated size of ``df`` in bytes (a few py4j stats
+        calls, no job), or None when Spark cannot size it.
 
-        Unknown stats give the floor, not the cap: a source Spark
-        cannot size (an RDD-backed ``createDataFrame``) reports
-        ``spark.sql.defaultSizeInBytes`` (Long.MaxValue), and a
-        projection over it scales that placeholder rather than
-        measuring anything — so an estimate at or above the default,
-        at the root or at any leaf of the plan, is treated as unknown.
-        Only the DEFAULT is sized: an explicit ``n_buckets`` and every
-        already-recorded ``_bucketspec`` win."""
+        A source Spark cannot size (an RDD-backed ``createDataFrame``)
+        reports ``spark.sql.defaultSizeInBytes`` (Long.MaxValue), and a
+        projection over it scales that placeholder rather than measuring
+        anything — a projection over a 200-row ``createDataFrame``
+        estimates 4.1e18 — so an estimate at or above the default, at
+        the root or at any leaf of the plan, is unknown.  So is a frame
+        with no JVM plan to ask."""
         from py4j.protocol import Py4JError
 
         try:
@@ -425,9 +448,29 @@ class Sink:
                 int(leaves.apply(i).stats().sizeInBytes()) >= unknown
                 for i in range(leaves.length())
             ):
-                return int(floor)
-        except (AttributeError, Py4JError):  # no JVM plan to ask
-            est = 0
+                return None
+        except (AttributeError, Py4JError):
+            return None
+        return est
+
+    @staticmethod
+    def size_derived_buckets(df: DataFrame, floor: int = 8, cap: int = 4096) -> int:
+        """Default bucket count for a NEW persisted index: derived from
+        the PLAN-ESTIMATED size of the frame being written (a few py4j
+        stats calls, no job), not from the session's core count (r13
+        optimization — guide §2: partitioning constants tuned to
+        local-mode parallelism are wrong at both ends).  Target:
+        ``_BUCKET_TARGET_BYTES`` (256 MB of plan-estimated — i.e.
+        uncompressed — bytes per bucket, landing near the guide's
+        100 MB-1 GB post-compression file target), clamped to
+        [floor, cap].
+
+        Unknown stats (:meth:`plan_bytes` is None) give the floor, not
+        the cap.  Only the DEFAULT is sized: an explicit ``n_buckets``
+        and every already-recorded ``_bucketspec`` win."""
+        est = Sink.plan_bytes(df)
+        if est is None:
+            return int(floor)
         n = math.ceil(est / _BUCKET_TARGET_BYTES) or 1
         return max(int(floor), min(int(cap), n))
 
@@ -511,11 +554,7 @@ class Sink:
         frame emits no part files — and an empty dir has no footer to
         infer a schema from, so readers must skip it (r12; the row set
         it contributes is empty either way)."""
-        p = Path(path)
-        return p.is_dir() and any(
-            f.name.endswith(".parquet") and not f.name.startswith((".", "_"))
-            for f in p.iterdir()
-        )
+        return bool(Sink.part_files(path))
 
     @staticmethod
     def _footer_ddl(path: str) -> "str | None":
@@ -525,16 +564,10 @@ class Sink:
         directory has no part file yet or any column uses a type
         outside the small map below (the persisted-index leaves only
         use these)."""
-        import glob as _glob
-
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        parts = sorted(_glob.glob(os.path.join(path, "*.parquet")))
-        parts = [
-            p for p in parts
-            if not os.path.basename(p).startswith((".", "_"))
-        ]
+        parts = [p for p, _, _ in Sink.part_files(path)]
         if not parts:
             return None
 
