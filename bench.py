@@ -519,7 +519,7 @@ def main() -> None:
         best = float("inf")
         # best-of-3: the first run compiles whole-stage codegen (measured
         # 3-19s one-off on the 64-hash minhash plan vs 2.3s steady-state,
-        # scripts/bench_dedup.py) and the JVM JIT can still be warming on
+        # BASELINE.md round-3 note) and the JVM JIT can still be warming on
         # run 2 under co-tenant load — r2's phantom "6.9x dedup
         # regression" was exactly this with best-of-2.
         runs = 3

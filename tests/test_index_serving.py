@@ -167,18 +167,36 @@ def test_duplicate_and_null_query_ids_merge_like_the_window(spark, tmp_path):
     assert ids.count(3) == 4 and ids.count(None) == 4
 
 
+BAD = "invalid ANN vector"
+
+
+def _raises_bad_vector(spark, call):
+    """``call()`` fails with the named error, ANSI on and off: the
+    snapshot path raises ValueError when called, the Spark path when
+    the probe assignment is evaluated."""
+    for ansi in ("true", "false"):
+        with _conf(spark, "spark.sql.ansi.enabled", ansi):
+            with _conf(spark, THR, "64MB"):
+                with pytest.raises(ValueError, match=BAD):
+                    call()
+            with _conf(spark, THR, "-1"):
+                out = call()  # lazy: nothing is evaluated yet
+                with pytest.raises(Exception, match=BAD):
+                    out.collect()
+
+
 def test_null_and_malformed_vectors_score_null(spark, tmp_path):
-    """A NULL vector, a NULL element and a short vector all give NULL
-    cosines in Spark (ranked after every number, then by match_id);
-    the snapshot reproduces that."""
+    """A NULL vector, a NULL element and a short vector each fail the
+    call with the named error on both paths (they used to score NULL
+    cosines and rank after every number)."""
     V = _corpus()
     d = _index(spark, tmp_path, [i for i in range(90) if i % 3], V)
-    rows = [(1, None), (2, [None] + V[2][1:]), (4, V[4][:5]), (6, V[6])]
-    q = _queries(spark, rows)
-    out = _both(spark, lambda: S.index_topk(q, spark, d, k=2, n_probe=2))
-    sims = {(r["vec_id"], r["rank"]): r["match_sim"] for r in out.collect()}
-    assert all(sims[(i, r)] is None for i in (1, 2, 4) for r in (1, 2))
-    assert sims[(6, 1)] is not None
+    for bad in (None, [None] + V[2][1:], V[4][:5]):
+        q = _queries(spark, [(1, bad), (6, V[6])])
+        _raises_bad_vector(spark, lambda: S.index_topk(q, spark, d, k=2, n_probe=2))
+    ok = _both(spark, lambda: S.index_topk(
+        _queries(spark, [(6, V[6])]), spark, d, k=2, n_probe=2))
+    assert all(r["match_sim"] is not None for r in ok.collect())
 
 
 def test_nan_and_infinite_components_give_nan_cosines(spark, tmp_path):
@@ -193,20 +211,55 @@ def test_nan_and_infinite_components_give_nan_cosines(spark, tmp_path):
 
 
 def test_zero_vector(spark, tmp_path):
-    """A zero vector divides by a zero norm: under ANSI Spark raises and
-    the snapshot hands the call to the Spark plan so it raises the same
-    error; without ANSI the cosines are NULL on both paths."""
+    """A zero vector has no direction: the call fails with the named
+    error on both paths with ANSI on and off (it used to raise
+    DIVIDE_BY_ZERO under ANSI and score NULL without it)."""
     V = _corpus()
     d = _index(spark, tmp_path, [i for i in range(90) if i % 3], V)
     q = _queries(spark, [(1, [0.0] * 8), (2, V[2])])
-    with _conf(spark, "spark.sql.ansi.enabled", "true"):
-        for thr in ("64MB", "-1"):
-            with _conf(spark, THR, thr):
-                with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-                    S.index_topk(q, spark, d, k=2).collect()
-    with _conf(spark, "spark.sql.ansi.enabled", "false"):
-        out = _both(spark, lambda: S.index_topk(q, spark, d, k=2))
-        assert {r["match_sim"] for r in out.collect() if r["vec_id"] == 1} == {None}
+    for n_probe in (1, 2):
+        _raises_bad_vector(spark, lambda: S.index_topk(q, spark, d, k=2,
+                                                       n_probe=n_probe))
+
+
+def test_bad_vectors_in_writes_publish_nothing(spark, tmp_path):
+    """A zero or malformed embedding fails write_ann_index and
+    incremental_ann_new with the named error (ANSI on and off) before
+    any commit marker or anchor record is published."""
+    import os
+
+    V = _corpus(n=40)
+    for ansi in ("true", "false"):
+        with _conf(spark, "spark.sql.ansi.enabled", ansi):
+            for bad in ([0.0] * 8, [None] + V[1][1:], V[1][:5]):
+                rows = pd.DataFrame({
+                    "vec_id": list(range(30)),
+                    "embedding": [V[i] for i in range(29)] + [bad],
+                    "label": [i % 3 for i in range(30)]})
+                d = str(tmp_path / f"new-{ansi}-{len(os.listdir(tmp_path))}")
+                with pytest.raises(Exception, match=BAD):
+                    S.write_ann_index(spark.createDataFrame(rows), d,
+                                      n_anchors=4, n_buckets=4,
+                                      payload_cols=["label"])
+                assert not os.path.exists(f"{d}/_commits")
+                assert not os.path.exists(f"{d}/_anchors.parquet")
+            # a zero vector seeded as an anchor is refused before staging
+            d = str(tmp_path / f"seed-{ansi}")
+            with pytest.raises(ValueError, match=BAD):
+                S.write_ann_index(_frame(spark, range(10), V), d,
+                                  anchors=[V[0], [0.0] * 8])
+            assert not os.path.exists(d)
+    d = _index(spark, tmp_path, range(20), V, n_anchors=4)
+    commits = sorted(os.listdir(f"{d}/_commits"))
+    arriving = spark.createDataFrame(pd.DataFrame({
+        "vec_id": [20, 21], "embedding": [V[20], [0.0] * 8],
+        "label": [2, 0]}))
+    for ansi in ("true", "false"):
+        with _conf(spark, "spark.sql.ansi.enabled", ansi):
+            with pytest.raises(Exception, match=BAD):
+                S.incremental_ann_new(arriving, spark, d, update_index=True)
+    assert sorted(os.listdir(f"{d}/_commits")) == commits
+    assert Sink.read_atomic_group(spark, d, "cells").count() == 20
 
 
 def test_more_probes_than_anchors_and_k_past_candidates(spark, tmp_path):

@@ -202,50 +202,6 @@ def test_kmeans_decimal_overflow_fails_loudly(spark):
 # ------------------------------------------- vectorized assignment kernel
 
 
-def test_vectorized_kernel_matches_expression_kernel(spark):
-    """VERDICT r12 #1 parity pin: at gate SFs the broadcast-matmul
-    kernel assigns every vector to the SAME cell (and the same probe
-    list) as the bit-exact expression kernel."""
-    V = _vec_corpus(n=200)
-    batch = _vecs(range(200), V, spark)
-    anchors = [V[i] for i in range(0, 40, 4)]  # 10 anchors
-    expr = {
-        r["vec_id"]: r["cell"]
-        for r in S._with_cell(batch, "embedding", anchors, kernel="expr").collect()
-    }
-    vec = {
-        r["vec_id"]: r["cell"]
-        for r in S._with_cell(
-            batch, "embedding", anchors, kernel="vectorized"
-        ).collect()
-    }
-    assert expr == vec
-    # probe lists (IVF nprobe rule): same top-3, same order — and the
-    # numpy fold reference agrees with the expression kernel
-    expr_p = {
-        r["vec_id"]: list(r["p"])
-        for r in batch.withColumn("__nv__", F.expr(S._sql_norm("`embedding`")))
-        .withColumn(
-            "p",
-            F.expr(S._sql_probe_cells("`embedding`", anchors, 3, "`__nv__`")),
-        )
-        .collect()
-    }
-    import numpy as np
-
-    m = np.asarray(V, dtype=np.float64)
-    scores, _ = S._np_anchor_scores(m, S._np_norm(m), anchors)
-    probes = S._np_probe_cells(scores, np.zeros(scores.shape, bool), 3)
-    assert expr_p == {i: probes[i].tolist() for i in range(200)}
-    vec_p = {
-        r["vec_id"]: list(r["p"])
-        for r in S._assign_cells_vectorized(
-            batch, "embedding", anchors, out_col="cell", n_probe=3, probes_col="p"
-        ).collect()
-    }
-    assert expr_p == vec_p
-
-
 def test_kernel_dispatch_threshold_and_validation(spark, tmp_path):
     """auto = expr at/below the threshold, vectorized above; unknown
     kernels refuse before compute."""
@@ -451,48 +407,6 @@ def test_hard_negative_mining_matches_numpy(spark, emb001):
     assert len(got) == n_expected
 
 
-def test_mine_hard_negatives_kernel_parity(spark, emb001):
-    """The per-cell matmul mining kernel returns the same ledger as the
-    oracle-exact expression path at gate SF (same negatives, same
-    tiebreaks; neg_sim equal at the 6-dp output rounding)."""
-    e = emb001.select("vec_id", "embedding", "label")
-    anchors = S.kmeans_anchors_decimal(e, n_anchors=8, iters=2)
-    expr = {
-        r["vec_id"]: r
-        for r in S.mine_hard_negatives(e, anchors, kernel="expr").collect()
-    }
-    vec = {
-        r["vec_id"]: r
-        for r in S.mine_hard_negatives(e, anchors, kernel="vectorized").collect()
-    }
-    assert set(expr) == set(vec)
-    for k, r in expr.items():
-        v = vec[k]
-        assert (r["cell"], r["neg_id"], r["neg_label"]) == (
-            v["cell"], v["neg_id"], v["neg_label"]
-        ), (k, r, v)
-        assert abs(r["neg_sim"] - v["neg_sim"]) <= 1e-6
-
-
-def test_cluster_prototypes_kernel_parity(spark, emb001):
-    """The matmul score path returns the same prototype sample as the
-    oracle-exact expression path at gate SF."""
-    e = emb001.select("vec_id", "embedding")
-    anchors = S.kmeans_anchors_decimal(e, n_anchors=8, iters=2)
-    expr = sorted(
-        (r["cell"], r["rnk"], r["vec_id"], r["cos_centroid"])
-        for r in S.cluster_prototypes(e, anchors, m=5, kernel="expr").collect()
-    )
-    vec = sorted(
-        (r["cell"], r["rnk"], r["vec_id"], r["cos_centroid"])
-        for r in S.cluster_prototypes(e, anchors, m=5, kernel="vectorized").collect()
-    )
-    assert len(expr) == len(vec)
-    for a, b in zip(expr, vec):
-        assert a[:3] == b[:3], (a, b)
-        assert abs(a[3] - b[3]) <= 1e-6
-
-
 # ------------------------------ index payload + index-backed mining
 
 def _lvecs(ids, V, spark):
@@ -540,7 +454,9 @@ def test_index_payload_survives_append_compact_rebuild(spark, tmp_path):
 
 def test_index_hard_negatives_matches_batch_miner_and_kernels(spark, tmp_path):
     """Index-backed mining == the batch miner restricted to stored
-    candidates; the per-cell matmul variant matches the fold path."""
+    candidates (a numpy replay); the matmul kernel's parity with the
+    fold path is the index_hard_negatives case of
+    tests/test_ann_kernels.py."""
     V = _vec_corpus(n=80)
     d = str(tmp_path / "idx")
     stored_ids = list(range(0, 80, 2))
@@ -552,15 +468,6 @@ def test_index_hard_negatives_matches_batch_miner_and_kernels(spark, tmp_path):
     arr = _lvecs(arr_ids, V, spark)
     expr = {r["vec_id"]: r for r in
             S.index_hard_negatives(arr, spark, d, kernel="expr").collect()}
-    vec = {r["vec_id"]: r for r in
-           S.index_hard_negatives(arr, spark, d, kernel="vectorized").collect()}
-    assert set(expr) == set(vec)
-    for k in expr:
-        a, b = expr[k], vec[k]
-        assert (a["cell"], a["neg_id"], a["neg_label"]) == (
-            b["cell"], b["neg_id"], b["neg_label"]
-        )
-        assert abs(a["neg_sim"] - b["neg_sim"]) <= 1e-6
     # ground truth via numpy: best cross-label STORED neighbor per cell
     import numpy as np
 
@@ -605,55 +512,6 @@ def test_index_hard_negatives_zero_index_side_exchange(spark, tmp_path):
 
 
 # ------------------------------------------------ index-backed top-k
-
-def test_index_topk_kernels_match_and_numpy_truth(spark, tmp_path):
-    """index_topk expr == vectorized kernel; both match a numpy replay
-    of probe-2 IVF top-k with the (cos DESC, id ASC) tiebreak."""
-    import numpy as np
-
-    V = _vec_corpus(n=90)
-    d = str(tmp_path / "idx")
-    stored_ids = [i for i in range(90) if i % 3 != 0]
-    q_ids = [i for i in range(90) if i % 3 == 0]
-    S.write_ann_index(
-        _lvecs(stored_ids, V, spark), d, n_anchors=5, n_buckets=4,
-        payload_cols=["label"],
-    )
-    q = _lvecs(q_ids, V, spark).select("vec_id", "embedding")
-    out_e = S.index_topk(q, spark, d, k=3, n_probe=2, kernel="expr").collect()
-    out_v = S.index_topk(
-        q, spark, d, k=3, n_probe=2, kernel="vectorized"
-    ).collect()
-    key = lambda r: (r["vec_id"], r["rank"])
-    ebr = {key(r): r for r in out_e}
-    vbr = {key(r): r for r in out_v}
-    assert set(ebr) == set(vbr)
-    for kk in ebr:
-        a, b = ebr[kk], vbr[kk]
-        assert (a["match_id"], a["match_label"]) == (
-            b["match_id"], b["match_label"]
-        )
-        assert abs(a["match_sim"] - b["match_sim"]) <= 1e-6
-    # numpy ground truth
-    anchors = S._read_anchors(d)
-    Vn = np.asarray(V) / np.linalg.norm(np.asarray(V), axis=1, keepdims=True)
-    An = np.asarray(anchors) / np.linalg.norm(
-        np.asarray(anchors), axis=1, keepdims=True
-    )
-    scores = Vn @ An.T
-    scell = {s: int(scores[s].argmax()) for s in stored_ids}
-    n_rows = 0
-    for qi in q_ids:
-        probes = set(np.argsort(-scores[qi], kind="stable")[:2])
-        cand = [s for s in stored_ids if scell[s] in probes]
-        best = sorted(((-(Vn[s] @ Vn[qi]), s) for s in cand))[:3]
-        n_rows += len(best)
-        for r, (negsim, sid) in enumerate(best, start=1):
-            row = ebr[(qi, r)]
-            assert row["match_id"] == sid, (qi, r, row, best)
-            assert abs(row["match_sim"] - (-negsim)) <= 1e-6
-    assert len(ebr) == n_rows
-
 
 def test_index_topk_filter_is_pre_rank_not_post(spark, tmp_path):
     """stored_filter restricts CANDIDATES before ranking: every query
@@ -768,42 +626,6 @@ def test_write_ann_index_payload_contract_on_extend(spark, tmp_path):
         _lvecs(range(10, 20), V, spark), d, epoch=1, payload_cols=["label"]
     )
     assert Sink.read_atomic_group(spark, d, "cells").count() == 20
-
-
-def test_mining_kernels_null_label_parity(spark, tmp_path):
-    """A NULL label pairs with nothing in SQL (NULL <> x drops the
-    pair); the matmul kernels must reproduce that, not NaN != NaN."""
-    V = _vec_corpus(n=24)
-    rows = pd.DataFrame({
-        "vec_id": list(range(24)),
-        "embedding": [V[i] for i in range(24)],
-        "label": [None if i % 4 == 0 else i % 3 for i in range(24)],
-    })
-    df = spark.createDataFrame(rows)
-    anchors = S.kmeans_anchors_decimal(
-        df.select("vec_id", "embedding"), n_anchors=2, iters=1
-    )
-    out_e = S.mine_hard_negatives(df, anchors, kernel="expr").collect()
-    out_v = S.mine_hard_negatives(df, anchors, kernel="vectorized").collect()
-    assert all(r["label"] is not None for r in out_e)
-    assert all(r["neg_label"] is not None for r in out_e)
-    ke = sorted((r["vec_id"], r["neg_id"]) for r in out_e)
-    kv = sorted((r["vec_id"], r["neg_id"]) for r in out_v)
-    assert ke == kv
-    # index-backed miner: same contract
-    d = str(tmp_path / "idx")
-    stored = df.filter(F.col("vec_id") % 2 == 0)
-    S.write_ann_index(
-        stored, d, n_anchors=3, n_buckets=2, payload_cols=["label"]
-    )
-    arr = df.filter(F.col("vec_id") % 2 == 1)
-    ie = S.index_hard_negatives(arr, spark, d, kernel="expr").collect()
-    iv = S.index_hard_negatives(arr, spark, d, kernel="vectorized").collect()
-    assert sorted((r["vec_id"], r["neg_id"]) for r in ie) == sorted(
-        (r["vec_id"], r["neg_id"]) for r in iv
-    )
-    assert all(r["label"] is not None and r["neg_label"] is not None
-               for r in ie)
 
 
 def test_index_ops_on_empty_index_return_empty(spark, tmp_path):

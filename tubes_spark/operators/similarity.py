@@ -19,11 +19,18 @@ Design for scale:
   cached in-memory snapshot of the index — bit-identical to the Spark
   plan, which stays the path for everything larger (the Drizzle point:
   at small batch sizes per-batch coordination dominates).
-
-Column helpers (dot/norm/cosine) are kept for small/inline use and for
-oracle-matched queries where scoring must be expression-deterministic;
-the numpy fold reference (:func:`_fold_sum`) reproduces their doubles
-bit for bit.
+* The persisted index (write, screen, top-k, PQ top-k, both hard-negative
+  miners) is one core composed in series: probe assignment
+  (:func:`_probe_assign`), within-cell scoring (:func:`_score_cells`, or
+  the per-cell matmul :func:`_cell_topk_vectorized`), and one rank
+  (:func:`_rank`).  Every cosine is the SQL-rendered sequential fold
+  ``d / (nq * ns)``; the numpy fold reference (:func:`_fold_sum`)
+  reproduces its doubles bit for bit.
+* Bad vectors fail loudly: a vector that is NULL, holds a NULL element,
+  has another length than the anchors or has a zero norm fails the call
+  with ``invalid ANN vector`` — the same error with ANSI on or off,
+  raised at call time by the snapshot path and by the job that
+  evaluates the assignment on the Spark path.
 """
 
 from __future__ import annotations
@@ -37,37 +44,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-# ---------------------------------------------------------------- Column form
-
-def dot(a: Column, b: Column) -> Column:
-    """Dot product of two array columns — JVM expression form (use for
-    small inline cases; hot paths go through numpy below)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 # ------------------------------------------------------------ SQL-string form
 #
-# The Column builders above compose expression trees through py4j one
-# call at a time: a 16-anchor x 64-dim cell assignment is ~6,000 round
-# trips (every F.lit, every lambda), measured at ~1.7 s of DRIVER time
-# per construction — and the heavy ANN queries build it 6+ times each
-# (guide §1: the profile showed 40k py4j round trips per query, 65% of
-# wall in driver-side gaps).  These helpers render the same fold as ONE
-# SQL string parsed by ONE F.expr call.  tests/test_round14.py pins
+# Cosine folds are rendered as SQL text parsed by ONE F.expr call: the
+# same Catalyst expression built through py4j one Column call at a time
+# costs ~6,000 round trips for a 16-anchor x 64-dim cell assignment
+# (~1.7 s of driver time per construction).  tests/test_round14.py pins
 # their doubles bit for bit against the numpy fold reference below.
 
 def _sql_double(v: float) -> str:
@@ -87,8 +69,8 @@ def _sql_arr(vals) -> str:
 
 
 def _sql_dot(a: str, b: str) -> str:
-    """SQL form of :func:`dot` — same zip_with/aggregate fold, same
-    dim order, same double."""
+    """Dot product of two array columns: a left fold from 0.0 over the
+    dims in index order."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
         f"CAST(y AS DOUBLE)), 0.0D, (acc, v) -> acc + v)"
@@ -96,7 +78,8 @@ def _sql_dot(a: str, b: str) -> str:
 
 
 def _sql_norm(a: str) -> str:
-    """SQL form of :func:`norm` — same sequential fold."""
+    """Norm of an array column: the square root of the same sequential
+    fold of squares."""
     return (
         f"SQRT(aggregate({a}, 0.0D, (acc, v) -> acc + "
         f"CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
@@ -181,7 +164,7 @@ def _fold_sum(p: np.ndarray, axis: int = -1) -> np.ndarray:
 
 
 def _np_norm(m: np.ndarray, axis: int = -1) -> np.ndarray:
-    """:func:`norm` of each vector of ``m`` (vectors along ``axis``)."""
+    """:func:`_sql_norm` of each vector of ``m`` (vectors along ``axis``)."""
     return np.sqrt(_fold_sum(m * m, axis))
 
 
@@ -975,7 +958,12 @@ def _spread_broadcast_probe(df: DataFrame) -> DataFrame:
     count is below ``defaultParallelism``; a corpus past the threshold
     is returned unchanged — there the planner keys both sides on the
     cell and that exchange provides the parallelism.  Unknown stats
-    (:meth:`Sink.plan_bytes` is None) leave the frame unchanged."""
+    (:meth:`Sink.plan_bytes` is None) leave the frame unchanged.
+
+    Applied to the batch miner's probe side and to the query side of
+    both top-k paths: a query slice that fits one split ran its probe
+    folds and pair scoring as ONE task (profiled on
+    ``index_topk_search``: a 1.5 s single-task stage of a 3.0 s query)."""
     from py4j.protocol import Py4JError
 
     from tubes_spark.sink import Sink
@@ -1368,7 +1356,11 @@ def write_ann_index(
     to ``_VEC_KERNEL_ANCHOR_THRESHOLD`` anchors, and ONE Arrow-batched
     broadcast matmul per batch above it (``kernel="auto"``, r13 — how
     a sqrt(N)-sized codebook stays assignable); the bucketed write is
-    the only shuffle."""
+    the only shuffle.
+
+    A NULL, NULL-element, wrong-length or zero embedding (or seed
+    anchor) fails the call with ``invalid ANN vector`` before any epoch
+    commits or anchor record is published (:func:`_probe_assign`)."""
     if kernel not in _KERNELS:  # before any staging/commit side effect
         raise ValueError(f"unknown kernel {kernel!r}; pick one of {_KERNELS}")
     payload = list(payload_cols or [])
@@ -1395,9 +1387,9 @@ def write_ann_index(
                 "carry the leaf's exact schema (rebuild the index to "
                 "change it)"
             )
-    cells = _with_cell(
+    cells = _probe_assign(
         batch.select(id_col, vec_col, *payload), vec_col, cell_anchors,
-        kernel=kernel,
+        _resolve_kernel(kernel, len(cell_anchors)),
     ).select(id_col, "cell", vec_col, *payload)
     _commit_index_epoch(cells, batch, group_dir, n_buckets, epoch, ["_anchors.parquet"])
 
@@ -1439,6 +1431,11 @@ def _seed_anchors(
             .collect()
         ]
     cell_anchors = [[float(x) for x in a] for a in anchors]
+    if any(
+        len(a) != len(cell_anchors[0]) or _anchor_norm(a) == 0
+        for a in cell_anchors
+    ):  # every cosine to such an anchor divides by zero
+        raise ValueError(_bad_vector_msg("anchors", len(cell_anchors[0])))
     _stage_table(group_dir, "_anchors.parquet", {
         "aid": list(range(len(cell_anchors))), "vec": cell_anchors,
     })
@@ -1589,6 +1586,283 @@ def _read_index_sides(spark, group_dir: str) -> "list[DataFrame]":
     return sides
 
 
+# ---------------------------------------- persisted-index core
+#
+# Every reader and writer of the persisted index composes the same
+# stages in series: probe assignment (:func:`_probe_assign`), a join of
+# the probe rows to the stored rows of the same cell scored with the
+# SQL fold (:func:`_score_cells`) or one per-cell matmul
+# (:func:`_cell_topk_vectorized`), and one rank (:func:`_rank`).
+
+
+def _bad_vector_msg(vec_col: str, dim: int) -> str:
+    return (
+        f"invalid ANN vector in column {vec_col}: NULL, a NULL element, a "
+        f"length other than the anchors' {dim}, or a zero norm"
+    )
+
+
+def _probe_assign(
+    df: DataFrame,
+    vec_col: str,
+    anchors: "list[list[float]]",
+    kernel: str,
+    n_probe: int = 1,
+) -> DataFrame:
+    """``df`` plus ``__nv__`` (the vector's norm, carried so pair
+    scoring divides by it instead of re-folding it per candidate pair),
+    ``cell`` (the primary, argmax cell) and, for ``n_probe`` > 1,
+    ``__probes__`` (the top-``n_probe`` cells, primary first) — the
+    one cell assignment of index writes, screens, serving and mining.
+    ``kernel`` is resolved: the expression kernel is
+    :func:`_sql_cell_expr` at ``n_probe`` = 1 and
+    :func:`_sql_probe_cells` above it, over the hoisted norm; the
+    vectorized kernel is one matmul (:func:`_assign_cells_vectorized`).
+
+    The norm is guarded in the fold's finish step, at no extra pass
+    over the vector: a NULL vector (folded as an empty one), a NULL
+    element (a NULL sum), a length other than the anchors' or a zero
+    sum of squares makes it ``raise_error`` — the error surfaces from
+    the job that evaluates the assignment, ahead of any division, with
+    ANSI on or off (:func:`_serve_from_snapshot` mirrors it).  Its
+    double is :func:`_sql_norm`'s: the same fold, then ``SQRT``."""
+    vq = f"`{vec_col}`"
+    dim = len(anchors[0]) if anchors else 0
+    msg = _bad_vector_msg(vec_col, dim).replace("\\", "\\\\").replace("'", "\\'")
+    df = df.withColumn("__nv__", F.expr(
+        f"aggregate(coalesce({vq}, array()), 0.0D, (acc, v) -> acc + "
+        f"CAST(v AS DOUBLE) * CAST(v AS DOUBLE), acc -> IF(acc > 0.0D AND "
+        f"size({vq}) = {dim}, SQRT(acc), raise_error('{msg}')))"
+    ))
+    if kernel == "vectorized":
+        return _assign_cells_vectorized(
+            df, vec_col, anchors, out_col="cell", n_probe=int(n_probe),
+            probes_col="__probes__" if n_probe > 1 else None,
+        )
+    if n_probe == 1:
+        return df.withColumn(
+            "cell", F.expr(_sql_cell_expr(vq, anchors, "`__nv__`"))
+        )
+    return df.withColumn(
+        "__probes__",
+        F.expr(_sql_probe_cells(vq, anchors, int(n_probe), "`__nv__`")),
+    ).withColumn("cell", F.element_at("__probes__", 1))
+
+
+def _or_empty(sides: "list[DataFrame]", like: DataFrame) -> "list[DataFrame]":
+    """``sides``, or — for an index with no live row file — one empty
+    frame shaped like ``like``, so an empty index runs the same plan to
+    an empty result typed from the query side."""
+    return sides or [like.limit(0)]
+
+
+def _cell_pairs(
+    ab: DataFrame, n_probe: int, sides: "list[DataFrame]", cols: list,
+    on: "Column | None" = None,
+) -> DataFrame:
+    """Every probe row of ``ab`` (alias ``a``; one row per probed cell)
+    joined to the rows of the same cell of each stored frame (alias
+    ``s``; the bucketed inverted lists, so the index side crosses no
+    Exchange), ``on`` an extra join condition, projected to ``cols`` and
+    unioned across frames."""
+    import functools
+
+    key = "cell"
+    if n_probe > 1:
+        ab, key = ab.withColumn("__pcell__", F.explode("__probes__")), "__pcell__"
+    frames = []
+    for s in sides:
+        cond = F.col(f"a.{key}") == F.col("s.cell")
+        frames.append(
+            ab.alias("a")
+            .join(s.alias("s"), cond if on is None else cond & on)
+            .select(*cols)
+        )
+    return functools.reduce(DataFrame.union, frames)
+
+
+def _score_cells(
+    ab: DataFrame, n_probe: int, sides: "list[DataFrame]", vec_col: str,
+    cols: list, on: "Column | None" = None,
+) -> DataFrame:
+    """:func:`_cell_pairs` plus the pair cosine ``cs`` — the SQL fold
+    ``dot / (a.__nv__ * s.__ns__)``, the stored norm folded once per
+    stored row (a narrow projection over the bucketed scan, so its
+    partitioning on ``cell`` is kept)."""
+    vq = f"`{vec_col}`"
+    cs = F.expr(_sql_dot(f"a.{vq}", f"s.{vq}")) / (
+        F.col("a.__nv__") * F.col("s.__ns__")
+    )
+    sides = [s.withColumn("__ns__", F.expr(_sql_norm(vq))) for s in sides]
+    return _cell_pairs(ab, n_probe, sides, [*cols, cs.alias("cs")], on)
+
+
+def _rank(scored: DataFrame, id_col: str, k: int, score: Column) -> DataFrame:
+    """The top ``k`` rows per ``id_col`` ordered by ``score`` then
+    ``match_id`` ascending, numbered in ``rank``."""
+    w = Window.partitionBy(id_col).orderBy(score, F.col("match_id").asc())
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= int(k)
+    )
+
+
+def _kernel_input(
+    ab: DataFrame, n_probe: int, sides: "list[DataFrame]", id_col: str,
+    vec_col: str, payload: "list[str]",
+) -> DataFrame:
+    """:func:`_cell_topk_vectorized`'s input: every stored row
+    (``__stored__`` = 1) and one row per (query, probed cell)
+    (``__stored__`` = 0), payload the query's own column or NULL."""
+    import functools
+
+    stored = functools.reduce(
+        DataFrame.unionByName,
+        [s.select(id_col, "cell", vec_col, *payload) for s in sides],
+    )
+    if n_probe > 1:
+        ab = ab.drop("cell").withColumn("cell", F.explode("__probes__"))
+    return stored.withColumn("__stored__", F.lit(1)).unionByName(
+        ab.select(
+            id_col, "cell", vec_col,
+            *[c if c in ab.columns
+              else F.lit(None).cast(stored.schema[c].dataType).alias(c)
+              for c in payload],
+        ).withColumn("__stored__", F.lit(0))
+    )
+
+
+def _cell_topk_vectorized(
+    cells: DataFrame, id_col: str, vec_col: str, k: int,
+    payload: "list[str]", label_col: "str | None" = None,
+    self_join: bool = False,
+) -> DataFrame:
+    """Per-cell matmul kernel: one Arrow-batched group per cell; for
+    each query row its LOCAL top ``k`` stored rows of the cell by
+    unrounded cosine, as (id, [label_col], cell, match_<payload>,
+    match_id, cs).  Queries are the ``__stored__`` = 0 rows and
+    candidates the ``__stored__`` = 1 rows (:func:`_kernel_input`), or —
+    ``self_join`` (the batch miner) — every row is both, so no row is
+    shuffled twice.  ``label_col`` masks candidates whose label equals
+    the query's or either label is NULL (SQL: ``NULL <> x`` drops the
+    pair).
+
+    Candidates are id-sorted, so numpy's first argmax (``k`` = 1) and
+    stable argsort reproduce the fold path's (cosine DESC, match_id ASC)
+    tiebreak — ties at the k-th place included (duplicate stored vectors
+    are a designed-for state under ``append_scope="all"``).  Queries are
+    row-blocked (1024 at a time) so the (block x cell) cosine matrix
+    stays bounded.  BLAS summation can differ from the sequential fold
+    by ~1 ulp, so this path waives the bit-exact oracle contract; the
+    caller merges per-cell locals with one global :func:`_rank`, which
+    sees at most ``n_probe * k`` rows per query."""
+    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+    id_f = cells.schema[id_col].dataType
+    schema = StructType(
+        [StructField(id_col, id_f, False)]
+        + ([StructField(label_col, cells.schema[label_col].dataType, True)]
+           if label_col is not None else [])
+        + [StructField("cell", IntegerType(), False)]
+        + [StructField(f"match_{c}", cells.schema[c].dataType, True)
+           for c in payload]
+        + [StructField("match_id", id_f, False),
+           StructField("cs", DoubleType(), False)]
+    )
+
+    def unit(pdf: pd.DataFrame) -> np.ndarray:
+        m = _to_matrix(pdf[vec_col])
+        return m / np.linalg.norm(m, axis=1, keepdims=True)
+
+    def topk(pdf: pd.DataFrame) -> pd.DataFrame:
+        if self_join:
+            stored = arr = pdf.sort_values(
+                id_col, kind="mergesort"
+            ).reset_index(drop=True)
+        else:
+            is_s = pdf["__stored__"] == 1
+            stored = pdf[is_s].sort_values(
+                id_col, kind="mergesort"
+            ).reset_index(drop=True)
+            arr = pdf[~is_s].reset_index(drop=True)
+        if len(stored) == 0 or len(arr) == 0:
+            return pd.DataFrame({f.name: pd.Series(dtype="object") for f in schema})
+        Sn = unit(stored)
+        An = Sn if self_join else unit(arr)
+        s_ids, a_ids = stored[id_col].to_numpy(), arr[id_col].to_numpy()
+        if label_col is not None:
+            s_lab, a_lab = stored[label_col].to_numpy(), arr[label_col].to_numpy()
+            s_na = pd.isna(stored[label_col]).to_numpy()
+            a_na = pd.isna(arr[label_col]).to_numpy()
+        kk = min(int(k), len(stored))
+        outs = []
+        for s in range(0, len(arr), 1024):
+            b = slice(s, s + 1024)
+            sims = An[b] @ Sn.T
+            if label_col is not None:
+                sims[(a_lab[b, None] == s_lab[None, :])
+                     | a_na[b, None] | s_na[None, :]] = -np.inf
+            pick = (
+                sims.argmax(axis=1)[:, None] if kk == 1
+                else np.argsort(-sims, axis=1, kind="stable")[:, :kk]
+            )
+            top = np.take_along_axis(sims, pick, axis=1).ravel()
+            keep = ~np.isneginf(top)  # a masked candidate never ranks
+            rows = np.repeat(np.arange(s, s + len(pick)), kk)[keep]
+            cols = pick.ravel()[keep]
+            out = {id_col: a_ids[rows]}
+            if label_col is not None:
+                out[label_col] = a_lab[rows]
+            out["cell"] = int(pdf["cell"].iloc[0])
+            for c in payload:
+                out[f"match_{c}"] = stored[c].to_numpy()[cols]
+            out["match_id"], out["cs"] = s_ids[cols], top[keep]
+            outs.append(pd.DataFrame(out))
+        return pd.concat(outs, ignore_index=True)
+
+    return cells.groupBy("cell").applyInPandas(topk, schema)
+
+
+def _hard_negatives(
+    ab: DataFrame, sides: "list[DataFrame] | None", id_col: str,
+    vec_col: str, label_col: str, kernel: str,
+) -> DataFrame:
+    """Both miners' ledger (id, label, cell, neg_id, neg_label, neg_sim):
+    per query row of ``ab`` (:func:`_probe_assign`, one cell), the best
+    stored row of its cell with a different ``label_col``, ranked
+    (cosine DESC, neg_id ASC) and rounded by Spark.  ``sides`` None is
+    the batch miner, whose stored rows are ``ab`` itself."""
+    if kernel == "vectorized":
+        cells = ab if sides is None else _kernel_input(
+            ab, 1, sides, id_col, vec_col, [label_col]
+        )
+        scored = _cell_topk_vectorized(
+            cells, id_col, vec_col, 1, [label_col], label_col,
+            self_join=sides is None,
+        )
+    else:
+        # the batch miner's probe side is spread: its pair fan-out
+        # (|cell|^2 dot folds) must not run in one scan task when the
+        # stored side is broadcast (guide §2.5 input under-parallelism)
+        probe = _spread_broadcast_probe(ab) if sides is None else ab
+        scored = _rank(
+            _score_cells(
+                probe, 1, [ab] if sides is None else sides, vec_col,
+                [F.col(f"a.{id_col}").alias(id_col),
+                 F.col(f"a.{label_col}").alias(label_col),
+                 F.col("a.cell").alias("cell"),
+                 F.col(f"s.{label_col}").alias(f"match_{label_col}"),
+                 F.col(f"s.{id_col}").alias("match_id")],
+                on=F.col(f"s.{label_col}") != F.col(f"a.{label_col}"),
+            ),
+            id_col, 1, F.col("cs").desc(),
+        )
+    return scored.select(
+        id_col, label_col, "cell", F.col("match_id").alias("neg_id"),
+        F.col(f"match_{label_col}").alias("neg_label"),
+        F.round("cs", 6).alias("neg_sim"),
+    )
+
+
 def incremental_ann_new(
     arriving: DataFrame,
     spark,
@@ -1644,9 +1918,9 @@ def incremental_ann_new(
     chains; tests pin a disagreement case).  Maintenance knobs are
     shared: ``compact_after=K`` consolidates + gc's once K epochs
     accumulate past the compaction point — cells-leaf rows are unique
-    per vector, so no key-dedupe applies."""
-    import functools
-
+    per vector, so no key-dedupe applies.  A NULL, NULL-element,
+    wrong-length or zero arriving vector fails the call with ``invalid
+    ANN vector`` in the assignment checkpoint, before any append."""
     from tubes_spark.sink import Sink
 
     # argument contract first (ADVICE r11) — a guaranteed-invalid call
@@ -1678,87 +1952,27 @@ def incremental_ann_new(
             f"arriving batch is missing {missing} (update_index appends "
             "must carry the leaf's full schema)"
         )
-    asel = arriving.select(id_col, vec_col, *extra)
-    # r13 (optimization): the arriving-side norm is computed ONCE per
-    # row here and CARRIED through the checkpoint — the screen join
-    # below divides by it instead of re-folding norm(a.vec) per
-    # CANDIDATE PAIR (the pair count is |arriving| x cell size; the
-    # interpreted O(dims) fold per pair was ~2/3 of the screen stage's
-    # CPU).  The division tree is unchanged — d / (nv * ns) — so every
-    # double, and every oracle gate built on it, is bit-identical.
-    vq = f"`{vec_col}`"
-    if kernel == "vectorized" and n_probe > 1:
-        # one matmul yields both the primary cell and the probe list
-        ab = _assign_cells_vectorized(
-            asel, vec_col, anchors,
-            out_col="cell", n_probe=int(n_probe), probes_col="__probes__",
-        ).withColumn("__nv__", F.expr(_sql_norm(vq))).localCheckpoint(eager=True)
-    elif kernel == "vectorized":
-        ab = _assign_cells_vectorized(
-            asel, vec_col, anchors, out_col="cell"
-        ).withColumn("__nv__", F.expr(_sql_norm(vq))).localCheckpoint(eager=True)
-    elif n_probe == 1:
-        ab = (
-            asel
-            .withColumn("__nv__", F.expr(_sql_norm(vq)))
-            .withColumn(
-                "cell", F.expr(_sql_cell_expr(vq, anchors, "`__nv__`"))
-            )
-            .localCheckpoint(eager=True)
-        )
-    else:
-        ab = (
-            asel
-            .withColumn("__nv__", F.expr(_sql_norm(vq)))
-            .withColumn(
-                "__probes__",
-                F.expr(_sql_probe_cells(vq, anchors, int(n_probe), "`__nv__`")),
-            )
-            .withColumn("cell", F.element_at("__probes__", 1))
-            .localCheckpoint(eager=True)
-        )
-    sides = _read_index_sides(spark, group_dir)
-    # stored-side norm: once per stored ROW (a narrow projection over
-    # the bucketed scan — hash partitioning on `cell` is preserved, so
-    # the index side still joins with zero Exchange)
-    sides = [s.withColumn("__ns__", F.expr(_sql_norm(vq))) for s in sides]
-    sim = F.expr(_sql_dot(f"a.{vq}", f"s.{vq}")) / (
-        F.col("a.__nv__") * F.col("s.__ns__")
+    # the arriving-side norm is folded ONCE per row and CARRIED through
+    # the checkpoint (``__nv__``), so the screen join divides by it
+    # instead of re-folding it per CANDIDATE PAIR (|arriving| x cell
+    # size; the per-pair fold was ~2/3 of the screen stage's CPU)
+    ab = _probe_assign(
+        arriving.select(id_col, vec_col, *extra), vec_col, anchors, kernel,
+        int(n_probe),
+    ).localCheckpoint(eager=True)
+    sides = _or_empty(
+        _read_index_sides(spark, group_dir), ab.select(id_col, "cell", vec_col)
     )
-    if n_probe == 1:
-        probe_side, probe_key = ab, "cell"
-    else:
-        # one probe row per (vector, candidate cell); stored vectors are
-        # single-cell, so each (arriving, stored) pair appears once
-        probe_side = ab.select(
-            id_col, vec_col, "__nv__", F.explode("__probes__").alias("__pcell__")
+    hits = (
+        _score_cells(ab, int(n_probe), sides, vec_col,
+                     [F.col(f"a.{id_col}").alias(id_col)])
+        .where(F.col("cs") >= F.lit(float(threshold)))
+        .groupBy(id_col)
+        .agg(
+            F.count(F.lit(1)).cast("int").alias("n_prior_hits"),
+            F.max("cs").alias("__best__"),
         )
-        probe_key = "__pcell__"
-    hit_frames = [
-        probe_side.alias("a")
-        .join(s.alias("s"), F.col(f"a.{probe_key}") == F.col("s.cell"))
-        .where(sim >= F.lit(float(threshold)))
-        .select(
-            F.col(f"a.{id_col}").alias(id_col),
-            sim.alias("__sim__"),
-        )
-        for s in sides
-    ]
-    if hit_frames:
-        hits = (
-            functools.reduce(DataFrame.union, hit_frames)
-            .groupBy(id_col)
-            .agg(
-                F.count(F.lit(1)).cast("int").alias("n_prior_hits"),
-                F.max("__sim__").alias("__best__"),
-            )
-        )
-    else:
-        hits = (
-            ab.select(id_col).limit(0)
-            .withColumn("n_prior_hits", F.lit(0))
-            .withColumn("__best__", F.lit(0.0))
-        )
+    )
     out = (
         ab.select(id_col, "cell")
         .join(hits, id_col, "left")
@@ -1784,82 +1998,6 @@ def incremental_ann_new(
 
 # --------------------------------------------------- hard-negative mining
 
-def _mine_hard_negatives_vectorized(
-    cells: DataFrame, id_col: str, vec_col: str, label_col: str
-) -> DataFrame:
-    """Per-cell matmul mining kernel (r13): one Arrow-batched group per
-    cell, rows sorted by id, queries row-blocked (1024 at a time) so
-    the (block x cell) cosine matrix stays bounded, same-label entries
-    masked to -inf, numpy first-argmax — which on the id-sorted matrix
-    reproduces the expression path's (cosine DESC, neg_id ASC)
-    tiebreak.  BLAS pairwise summation can differ from the sequential
-    fold by ~1 ulp, so this path (like the assignment kernel) waives
-    the bit-exact oracle contract; gate-SF parity vs the expression
-    path is test-pinned and the gated query stays on the fold.
-
-    Scale shape: the shuffle is ONE exchange keyed on the cell (the
-    same partitioning the persisted index stores, so index-resident
-    corpora skip it); per-cell cost is an O(n_c * n_c * dims) matmul
-    instead of interpreted folds — with C ~ sqrt(N) cells that is the
-    ~N^1.5/C total the operator docstring prices, at BLAS rates."""
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    id_f = cells.schema[id_col].dataType
-    lb_f = cells.schema[label_col].dataType
-    schema = StructType([
-        StructField(id_col, id_f, False),
-        StructField(label_col, lb_f, True),
-        StructField("cell", IntegerType(), False),
-        StructField("neg_id", id_f, False),
-        StructField("neg_label", lb_f, True),
-        StructField("neg_sim", DoubleType(), False),
-    ])
-
-    def mine(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
-        V = _to_matrix(pdf[vec_col])
-        Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-        labels = pdf[label_col].to_numpy()
-        # a NULL label pairs with nothing (SQL: NULL <> x is NULL, the
-        # join drops it) — mask those rows/columns like same-label ones
-        # so the kernel matches the expression path on nullable labels
-        lab_na = pd.isna(pdf[label_col]).to_numpy()
-        ids = pdf[id_col].to_numpy()
-        cell = int(pdf["cell"].iloc[0])
-        outs = []
-        B = 1024
-        for s in range(0, len(pdf), B):
-            sims = Vn[s : s + B] @ Vn.T
-            sims[
-                (labels[s : s + B, None] == labels[None, :])
-                | lab_na[s : s + B, None] | lab_na[None, :]
-            ] = -np.inf
-            j = sims.argmax(axis=1)  # first max = smallest id on ties
-            best = sims[np.arange(len(j)), j]
-            keep = best > -np.inf  # rows with no cross-label candidate
-            if not keep.any():
-                continue
-            outs.append(pd.DataFrame({
-                id_col: ids[s : s + B][keep],
-                label_col: labels[s : s + B][keep],
-                "cell": cell,
-                "neg_id": ids[j[keep]],
-                "neg_label": labels[j[keep]],
-                "neg_sim": np.round(best[keep], 6),
-            }))
-        if not outs:
-            return pd.DataFrame({f.name: pd.Series(dtype="object") for f in schema})
-        return pd.concat(outs, ignore_index=True)
-
-    return cells.groupBy("cell").applyInPandas(mine, schema)
-
-
 def mine_hard_negatives(
     df: DataFrame,
     anchors: "list[list[float]]",
@@ -1883,44 +2021,15 @@ def mine_hard_negatives(
     tree ``d / (nq * nn)``) — the oracle-gated regime.  Above it, both
     go through broadcast-matmul kernels
     (:func:`_assign_cells_vectorized`, then the per-cell blocked
-    matmul of :func:`_mine_hard_negatives_vectorized`), which is the
+    matmul of :func:`_cell_topk_vectorized` in its self-join mode —
+    each row shuffled once), which is the
     100 TB path: the fold pays |dims| interpreted ops per pair, the
     matmul runs at BLAS rates (~100x), and the within-cell pair count
     is what sqrt(N) codebook growth keeps at ~N^1.5/C."""
     k = _resolve_kernel(kernel, len(anchors))
-    c = _with_cell(df, vec_col, anchors, kernel=k)
-    if k == "vectorized":
-        return _mine_hard_negatives_vectorized(c, id_col, vec_col, label_col)
-    c = c.withColumn("__hn_nv__", norm(F.col(vec_col)))
-    # probe side spread: the pair fan-out (|cell|^2 dot folds) must not
-    # run in one scan task when the stored side is broadcast (guide §2.5
-    # input under-parallelism; result-invariant round-robin)
-    pairs = _spread_broadcast_probe(c).alias("q").join(
-        c.alias("n"),
-        (F.col("n.cell") == F.col("q.cell"))
-        & (F.col(f"n.{label_col}") != F.col(f"q.{label_col}")),
-    )
-    scored = pairs.select(
-        F.col(f"q.{id_col}").alias(id_col),
-        F.col(f"q.{label_col}").alias(label_col),
-        F.col("q.cell").alias("cell"),
-        F.col(f"n.{id_col}").alias("neg_id"),
-        F.col(f"n.{label_col}").alias("neg_label"),
-        (
-            dot(F.col(f"q.{vec_col}"), F.col(f"n.{vec_col}"))
-            / (F.col("q.__hn_nv__") * F.col("n.__hn_nv__"))
-        ).alias("cs"),
-    )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("cs").desc(), F.col("neg_id").asc()
-    )
-    return (
-        scored.withColumn("__rn__", F.row_number().over(w))
-        .filter(F.col("__rn__") == 1)
-        .select(
-            id_col, label_col, "cell", "neg_id", "neg_label",
-            F.round("cs", 6).alias("neg_sim"),
-        )
+    return _hard_negatives(
+        _probe_assign(df, vec_col, anchors, k), None, id_col, vec_col,
+        label_col, k,
     )
 
 
@@ -1988,81 +2097,6 @@ def cluster_prototypes(
     )
 
 
-def _mine_vs_stored_vectorized(
-    cells: DataFrame, id_col: str, vec_col: str, label_col: str
-) -> DataFrame:
-    """Per-cell matmul kernel for INDEX-BACKED mining: ``cells`` holds
-    stored rows (``__stored__`` = 1) and arriving rows (0) of one
-    logical corpus; for each arriving row, the best cross-label
-    neighbor among the STORED rows of its cell.  Stored candidates are
-    id-sorted before the matmul so numpy's first-argmax reproduces the
-    fold path's (cosine DESC, neg_id ASC) tiebreak; arriving rows are
-    query-blocked like :func:`_mine_hard_negatives_vectorized`."""
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    id_f = cells.schema[id_col].dataType
-    lb_f = cells.schema[label_col].dataType
-    schema = StructType([
-        StructField(id_col, id_f, False),
-        StructField(label_col, lb_f, True),
-        StructField("cell", IntegerType(), False),
-        StructField("neg_id", id_f, False),
-        StructField("neg_label", lb_f, True),
-        StructField("neg_sim", DoubleType(), False),
-    ])
-
-    def mine(pdf: pd.DataFrame) -> pd.DataFrame:
-        stored = pdf[pdf["__stored__"] == 1].sort_values(
-            id_col, kind="mergesort"
-        ).reset_index(drop=True)
-        arr = pdf[pdf["__stored__"] == 0].reset_index(drop=True)
-        empty = pd.DataFrame({f.name: pd.Series(dtype="object") for f in schema})
-        if len(stored) == 0 or len(arr) == 0:
-            return empty
-        S_ = _to_matrix(stored[vec_col])
-        Sn = S_ / np.linalg.norm(S_, axis=1, keepdims=True)
-        A = _to_matrix(arr[vec_col])
-        An = A / np.linalg.norm(A, axis=1, keepdims=True)
-        s_lab = stored[label_col].to_numpy()
-        s_na = pd.isna(stored[label_col]).to_numpy()
-        s_ids = stored[id_col].to_numpy()
-        a_lab = arr[label_col].to_numpy()
-        a_na = pd.isna(arr[label_col]).to_numpy()
-        a_ids = arr[id_col].to_numpy()
-        cell = int(pdf["cell"].iloc[0])
-        outs = []
-        B = 1024
-        for s in range(0, len(arr), B):
-            sims = An[s : s + B] @ Sn.T
-            # NULL labels pair with nothing, matching the fold path's
-            # SQL null semantics (NULL <> x drops the pair)
-            sims[
-                (a_lab[s : s + B, None] == s_lab[None, :])
-                | a_na[s : s + B, None] | s_na[None, :]
-            ] = -np.inf
-            j = sims.argmax(axis=1)
-            best = sims[np.arange(len(j)), j]
-            keep = best > -np.inf
-            if not keep.any():
-                continue
-            outs.append(pd.DataFrame({
-                id_col: a_ids[s : s + B][keep],
-                label_col: a_lab[s : s + B][keep],
-                "cell": cell,
-                "neg_id": s_ids[j[keep]],
-                "neg_label": s_lab[j[keep]],
-                "neg_sim": np.round(best[keep], 6),
-            }))
-        return pd.concat(outs, ignore_index=True) if outs else empty
-
-    return cells.groupBy("cell").applyInPandas(mine, schema)
-
-
 def index_hard_negatives(
     arriving: DataFrame,
     spark,
@@ -2088,194 +2122,35 @@ def index_hard_negatives(
     sequential-fold forms under the DuckDB value-hash gate (norms
     hoisted on BOTH sides — one fold per row per side, one dot fold
     per pair); above it, matmul assignment + the per-cell blocked
-    matmul of :func:`_mine_vs_stored_vectorized`.
+    matmul of :func:`_cell_topk_vectorized`.
 
     Scale shape: arriving re-aligns on ``cell`` once (the tiny side);
     stored inverted lists are read in place per live epoch dir
     (``compact_after`` on the maintenance path bounds the dir count);
     within-cell candidates are STORED-side only, so the pair count is
     |arriving| * n_c — the sqrt(N) codebook rule keeps n_c flat."""
-    import functools
-
     if kernel not in _KERNELS:
         raise ValueError(f"unknown kernel {kernel!r}; pick one of {_KERNELS}")
     anchors = _read_anchors(group_dir)
     kernel = _resolve_kernel(kernel, len(anchors))
     if label_col not in arriving.columns:
         raise ValueError(f"arriving batch is missing {label_col!r}")
+    # None: no live row file, so nothing to mine against (empty result)
     extra = _leaf_extra_cols(group_dir, id_col, vec_col, default=None)
-    if extra is None:
-        # the index holds no stored rows at all (every live dir is
-        # file-less) — nothing to mine against; empty result, typed
-        # from the arriving frame
-        from pyspark.sql.types import (
-            DoubleType, IntegerType, StructField, StructType,
-        )
-
-        idt = arriving.schema[id_col].dataType
-        lbt = arriving.schema[label_col].dataType
-        return spark.createDataFrame([], StructType([
-            StructField(id_col, idt),
-            StructField(label_col, lbt),
-            StructField("cell", IntegerType()),
-            StructField("neg_id", idt),
-            StructField("neg_label", lbt),
-            StructField("neg_sim", DoubleType()),
-        ]))
-    if label_col not in extra:
+    if extra is not None and label_col not in extra:
         raise ValueError(
             f"index {group_dir} does not store {label_col!r} (leaf payload: "
             f"{extra}); write it with payload_cols=[{label_col!r}] to mine "
             "against the index"
         )
-    ab = _with_cell(
-        arriving.select(id_col, vec_col, label_col), vec_col, anchors,
-        kernel=kernel,
+    ab = _probe_assign(
+        arriving.select(id_col, vec_col, label_col), vec_col, anchors, kernel
     )
-    sides = _read_index_sides(spark, group_dir)
-    if kernel == "vectorized":
-        stored = functools.reduce(
-            DataFrame.unionByName,
-            [s.select(id_col, "cell", vec_col, label_col) for s in sides],
-        )
-        both = stored.withColumn("__stored__", F.lit(1)).unionByName(
-            ab.select(id_col, "cell", vec_col, label_col).withColumn(
-                "__stored__", F.lit(0)
-            )
-        )
-        return _mine_vs_stored_vectorized(both, id_col, vec_col, label_col)
-    aq = ab.withColumn("__nq__", norm(F.col(vec_col)))
-    frames = []
-    for s in sides:
-        sn = s.withColumn("__ns__", norm(F.col(vec_col)))
-        frames.append(
-            aq.alias("a")
-            .join(
-                sn.alias("s"),
-                (F.col("s.cell") == F.col("a.cell"))
-                & (F.col(f"s.{label_col}") != F.col(f"a.{label_col}")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias(id_col),
-                F.col(f"a.{label_col}").alias(label_col),
-                F.col("a.cell").alias("cell"),
-                F.col(f"s.{id_col}").alias("neg_id"),
-                F.col(f"s.{label_col}").alias("neg_label"),
-                (
-                    dot(F.col(f"a.{vec_col}"), F.col(f"s.{vec_col}"))
-                    / (F.col("a.__nq__") * F.col("s.__ns__"))
-                ).alias("cs"),
-            )
-        )
-    scored = functools.reduce(DataFrame.unionByName, frames)
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("cs").desc(), F.col("neg_id").asc()
+    sides = _or_empty(
+        _read_index_sides(spark, group_dir),
+        ab.select(id_col, "cell", vec_col, label_col),
     )
-    return (
-        scored.withColumn("__rn__", F.row_number().over(w))
-        .filter(F.col("__rn__") == 1)
-        .select(
-            id_col, label_col, "cell", "neg_id", "neg_label",
-            F.round("cs", 6).alias("neg_sim"),
-        )
-    )
-
-
-# --------------------------------------------------- index-backed top-k
-
-def _topk_vs_stored_vectorized(
-    cells: DataFrame, id_col: str, vec_col: str, k: int,
-    payload: "list[str]",
-) -> DataFrame:
-    """Per-cell matmul kernel for INDEX-BACKED top-k retrieval:
-    ``cells`` holds stored rows (``__stored__`` = 1) and
-    probe-replicated query rows (0); for each query row, its LOCAL
-    top-k among the stored rows of that cell.  The caller merges the
-    per-cell locals with one global rank — with ``n_probe`` cells per
-    query the merge sees at most ``n_probe * k`` candidate rows per
-    query, independent of list sizes.  Stored candidates are id-sorted
-    before the matmul so numpy's stable argsort reproduces the fold
-    path's (cosine DESC, match_id ASC) tiebreak."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    id_f = cells.schema[id_col].dataType
-    schema = StructType(
-        [StructField(id_col, id_f, False)]
-        + [StructField(f"match_{c}", cells.schema[c].dataType, True)
-           for c in payload]
-        + [StructField("match_id", id_f, False),
-           StructField("cs", DoubleType(), False)]
-    )
-
-    def topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        stored = pdf[pdf["__stored__"] == 1].sort_values(
-            id_col, kind="mergesort"
-        ).reset_index(drop=True)
-        arr = pdf[pdf["__stored__"] == 0].reset_index(drop=True)
-        empty = pd.DataFrame({f.name: pd.Series(dtype="object") for f in schema})
-        if len(stored) == 0 or len(arr) == 0:
-            return empty
-        S_ = _to_matrix(stored[vec_col])
-        Sn = S_ / np.linalg.norm(S_, axis=1, keepdims=True)
-        A = _to_matrix(arr[vec_col])
-        An = A / np.linalg.norm(A, axis=1, keepdims=True)
-        s_ids = stored[id_col].to_numpy()
-        a_ids = arr[id_col].to_numpy()
-        outs = []
-        B = 1024
-        for s in range(0, len(arr), B):
-            sims = An[s : s + B] @ Sn.T
-            kk = min(int(k), sims.shape[1])
-            # stored columns are id-ascending, so ONE stable argsort of
-            # -sims == the fold path's (cos DESC, id ASC) tiebreak even
-            # when ties land exactly at the k-th place (an argpartition
-            # prefilter would keep an arbitrary subset of boundary ties
-            # — duplicate stored vectors are a designed-for state under
-            # append_scope="all", so tie-exactness is part of the
-            # kernel-parity contract, worth the O(m log m) vs O(m))
-            pick = np.argsort(-sims, axis=1, kind="stable")[:, :kk]
-            top = np.take_along_axis(sims, pick, axis=1)
-            out = {
-                id_col: np.repeat(a_ids[s : s + B], kk),
-                "match_id": s_ids[pick.ravel()],
-                "cs": top.ravel(),
-            }
-            for c in payload:
-                out[f"match_{c}"] = stored[c].to_numpy()[pick.ravel()]
-            outs.append(pd.DataFrame(out))
-        return pd.concat(outs, ignore_index=True) if outs else empty
-
-    return cells.groupBy("cell").applyInPandas(topk, schema)
-
-
-def _probe_assign(
-    arriving: DataFrame,
-    id_col: str,
-    vec_col: str,
-    anchors: "list[list[float]]",
-    kernel: str,
-    n_probe: int,
-) -> DataFrame:
-    """Probe-cell assignment shared by the serving paths (full-vector
-    and PQ top-k): (id, vec, __probes__) with the primary cell first —
-    matmul above the kernel-dispatch threshold, the bit-exact hoisted-
-    norm fold expression under it.  One definition so a tiebreak or
-    threshold fix cannot diverge the two."""
-    if kernel == "vectorized":
-        return _assign_cells_vectorized(
-            arriving.select(id_col, vec_col), vec_col, anchors,
-            out_col="cell", n_probe=int(n_probe), probes_col="__probes__",
-        )
-    vq = f"`{vec_col}`"
-    return (
-        arriving.select(id_col, vec_col)
-        .withColumn("__nv__", F.expr(_sql_norm(vq)))
-        .withColumn(
-            "__probes__",
-            F.expr(_sql_probe_cells(vq, anchors, int(n_probe), "`__nv__`")),
-        )
-        .drop("__nv__")
-    )
+    return _hard_negatives(ab, sides, id_col, vec_col, label_col, kernel)
 
 
 # ----------------------------------- driver-resident serving of small indexes
@@ -2483,13 +2358,15 @@ def _serve_from_snapshot(
 
     Every double is the Spark plan's: probe scores and pair cosines use
     the numpy fold reference and its ``d / (nv * na)`` division tree;
-    probe cells sort like :func:`_sql_probe_cells`; all candidates of
-    one query id (duplicate ids included) rank together on
-    (cs DESC, match_id ASC) under Spark's double ordering, as the
-    Window does; a NULL or malformed vector's cosines are NULL.  A zero
-    divisor yields NULL, or — under ANSI, where Spark raises — hands
-    the call to the Spark plan so it raises the same error.  The
-    result is a local relation; ``F.round`` is Spark's (HALF_UP)."""
+    probe cells follow :func:`_sql_cell_expr` / :func:`_sql_probe_cells`;
+    all candidates of one query id (duplicate ids included) rank
+    together on (cs DESC, match_id ASC) under Spark's double ordering,
+    as the Window does.  A bad query vector raises now with the Spark
+    path's ``invalid ANN vector`` message; a stored row the Spark plan
+    scores NULL (NULL/malformed vector, zero divisor) is NULL here, or —
+    under ANSI, where a zero divisor raises — the call goes to the
+    Spark plan so it raises the same error.  The result is a local
+    relation; ``F.round`` is Spark's (HALF_UP)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import from_arrow_type
     from pyspark.sql.types import (
@@ -2519,6 +2396,9 @@ def _serve_from_snapshot(
     if qm is None:
         return None
     qv, qvalid = qm[0], qm[1]
+    nv = _np_norm(qv)
+    if not (qvalid & (nv != 0)).all():  # :func:`_probe_assign`'s guard
+        raise ValueError(_bad_vector_msg(vec_col, len(anchors[0])))
 
     def null_or_raise(ok: np.ndarray, div: np.ndarray) -> "np.ndarray | None":
         """NULL mask of ``d / div`` where ``ok`` marks non-NULL operands;
@@ -2528,13 +2408,17 @@ def _serve_from_snapshot(
             return None
         return ~ok | zero
 
-    # probe cells per query row
-    nv = _np_norm(qv)
+    # probe cells per query row: the first maximum (numpy's argmax puts
+    # NaN first, as Spark's array_max does) at n_probe = 1, else the
+    # sorted probe list; a zero-norm anchor's NULL or raising cosine is
+    # left to the Spark plan
     scores, div = _np_anchor_scores(qv, nv, anchors)
-    s_null = null_or_raise(np.broadcast_to(qvalid[:, None], div.shape), div)
-    if s_null is None:
+    if (div == 0).any():
         return None
-    probes = _np_probe_cells(scores, s_null, n_probe)
+    probes = (
+        scores.argmax(axis=1)[:, None] if n_probe == 1
+        else _np_probe_cells(scores, np.zeros(scores.shape, bool), n_probe)
+    )
     # per probed cell: cosines of the queries probing it against its
     # rows (dims x queries x rows products folded over dims, in bounded
     # chunks), keeping each query row's local top k — the top k of a
@@ -2551,7 +2435,9 @@ def _serve_from_snapshot(
             div = nv[qr][:, None] * snap.norms[None, a:b]
             with np.errstate(all="ignore"):
                 cs = _fold_sum(qv[qr].T[:, :, None] * snap.vecs_t[:, None, a:b], 0) / div
-            null = null_or_raise(qvalid[qr][:, None] & snap.valid[None, a:b], div)
+            null = null_or_raise(
+                np.broadcast_to(snap.valid[None, a:b], div.shape), div
+            )
             if null is None:
                 return None
             cls, val = _desc_keys(cs, null)
@@ -2635,8 +2521,12 @@ def index_topk(
     ``kernel`` follows the assignment dispatch rule (128-anchor
     threshold): the fold forms under the DuckDB value-hash gate; above
     it, matmul assignment + the per-cell blocked matmul of
-    :func:`_topk_vs_stored_vectorized`, whose local-top-k bounds the
+    :func:`_cell_topk_vectorized`, whose local-top-k bounds the
     global merge at ``n_probe * k`` candidate rows per query.
+
+    A query vector that is NULL, holds a NULL element, has another
+    length than the anchors or has a zero norm fails the call with
+    ``invalid ANN vector`` (:func:`_probe_assign`) on either path.
 
     Scale shape: pairs scanned = |queries| * n_probe * n_c, with n_c
     held flat by the sqrt(N) codebook rule; the recall dial is
@@ -2654,8 +2544,6 @@ def index_topk(
     tests run every case both ways).  That path reads the index and
     ``arriving`` when ``index_topk`` is called; the Spark plan — every
     other call — reads them when the result is evaluated."""
-    import functools
-
     if int(k) < 1:
         raise ValueError("k must be >= 1")
     if int(n_probe) < 1:
@@ -2669,42 +2557,19 @@ def index_topk(
         )
     anchors = _read_anchors(group_dir)
     kernel = _resolve_kernel(kernel, len(anchors))
+    # None: no live row file (an empty result, and no payload columns)
     extra = _leaf_extra_cols(group_dir, id_col, vec_col, default=None)
-    if extra is None:
-        # the index holds no stored rows — empty result (no payload
-        # columns can exist when no leaf file does)
-        from pyspark.sql.types import (
-            DoubleType, IntegerType, StructField, StructType,
-        )
-
-        idt = arriving.schema[id_col].dataType
-        return spark.createDataFrame([], StructType([
-            StructField(id_col, idt),
-            StructField("rank", IntegerType()),
-            StructField("match_id", idt),
-            StructField("match_sim", DoubleType()),
-        ]))
-    if kernel == "expr" and stored_filter is None:
+    if kernel == "expr" and stored_filter is None and extra is not None:
         served = _serve_from_snapshot(
             arriving, spark, group_dir, anchors, k, n_probe, id_col, vec_col,
             extra,
         )
         if served is not None:
             return served
-    # r14 (guide §2.5, same fix as r13's hard-negative probe spread):
-    # the query slice fits one parquet split, so the serving join's
-    # STREAM side — probe-cell assignment folds AND the per-pair
-    # scoring after the broadcast join — ran as ONE task (profiled on
-    # index_topk_search: a 1.5 s single-task stage at 1.49 s CPU inside
-    # a 3.0 s query).  Round-robin the arriving side across cores; the
-    # guard makes this a no-op past the broadcast threshold, where the
-    # cell exchange parallelizes anyway.
+    extra = extra or []
     ab = _probe_assign(
         _spread_broadcast_probe(arriving.select(id_col, vec_col)),
-        id_col, vec_col, anchors, kernel, n_probe,
-    )
-    probe = ab.select(
-        id_col, vec_col, F.explode("__probes__").alias("__pcell__")
+        vec_col, anchors, kernel, int(n_probe),
     )
     sides = _read_index_sides(spark, group_dir)
     if stored_filter is not None:
@@ -2713,51 +2578,23 @@ def index_topk(
             else stored_filter
         )
         sides = [s.filter(pred) for s in sides]
+    sides = _or_empty(sides, ab.select(id_col, "cell", vec_col))
     mcols = [f"match_{c}" for c in extra]
     if kernel == "vectorized":
-        stored = functools.reduce(
-            DataFrame.unionByName,
-            [s.select(id_col, "cell", vec_col, *extra) for s in sides],
-        )
-        both = stored.withColumn("__stored__", F.lit(1)).unionByName(
-            probe.withColumnRenamed("__pcell__", "cell")
-            .withColumns({c: F.lit(None).cast(stored.schema[c].dataType)
-                          for c in extra})
-            .select(id_col, "cell", vec_col, *extra)
-            .withColumn("__stored__", F.lit(0))
-        )
-        scored = _topk_vs_stored_vectorized(
-            both, id_col, vec_col, int(k), extra
+        scored = _cell_topk_vectorized(
+            _kernel_input(ab, int(n_probe), sides, id_col, vec_col, extra),
+            id_col, vec_col, int(k), extra,
         )
     else:
-        aq = probe.withColumn("__nq__", norm(F.col(vec_col)))
-        frames = []
-        for s in sides:
-            sn = s.withColumn("__ns__", norm(F.col(vec_col)))
-            frames.append(
-                aq.alias("a")
-                .join(sn.alias("s"), F.col("s.cell") == F.col("a.__pcell__"))
-                .select(
-                    F.col(f"a.{id_col}").alias(id_col),
-                    *[F.col(f"s.{c}").alias(f"match_{c}") for c in extra],
-                    F.col(f"s.{id_col}").alias("match_id"),
-                    (
-                        dot(F.col(f"a.{vec_col}"), F.col(f"s.{vec_col}"))
-                        / (F.col("a.__nq__") * F.col("s.__ns__"))
-                    ).alias("cs"),
-                )
-            )
-        scored = functools.reduce(DataFrame.unionByName, frames)
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("cs").desc(), F.col("match_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= int(k))
-        .select(
-            id_col, F.col("rank").cast("int").alias("rank"), "match_id",
-            *mcols, F.round("cs", 6).alias("match_sim"),
+        scored = _score_cells(
+            ab, int(n_probe), sides, vec_col,
+            [F.col(f"a.{id_col}").alias(id_col),
+             *[F.col(f"s.{c}").alias(m) for c, m in zip(extra, mcols)],
+             F.col(f"s.{id_col}").alias("match_id")],
         )
+    return _rank(scored, id_col, k, F.col("cs").desc()).select(
+        id_col, F.col("rank").cast("int").alias("rank"), "match_id",
+        *mcols, F.round("cs", 6).alias("match_sim"),
     )
 
 
@@ -3035,9 +2872,9 @@ def write_pq_ann_index(
             "j": [j for j, _ in mk], "c": [c for _, c in mk],
             "vals": [[float(x) for x in books[j, c]] for j, c in mk],
         })
-    kernel = _resolve_kernel(kernel, len(cell_anchors))
-    cells = _with_cell(
-        batch.select(id_col, vec_col), vec_col, cell_anchors, kernel=kernel
+    cells = _probe_assign(
+        batch.select(id_col, vec_col), vec_col, cell_anchors,
+        _resolve_kernel(kernel, len(cell_anchors)),
     )
     leaf = pq_encode(cells, books, id_col, vec_col, keep_cols=["cell"]).select(
         id_col, "cell", "pq_code"
@@ -3078,8 +2915,6 @@ def index_topk_pq(
     by brute-force tests (`tests/test_round13.py`), and the candidate
     law is the serving law (`SCALE_PROBE .ann_topk_scale`) — pairs =
     |Q| * n_probe * n_c at ~m bytes each."""
-    import functools
-
     if int(k) < 1:
         raise ValueError("k must be >= 1")
     if int(n_probe) < 1:
@@ -3090,44 +2925,19 @@ def index_topk_pq(
     books = _read_pq_codebooks(group_dir)
     kernel = _resolve_kernel(kernel, len(anchors))
     mm, _kk, sub = books.shape
-    # r14 (guide §2.5, same fix as r13's hard-negative probe spread):
-    # the query slice fits one parquet split, so the serving join's
-    # STREAM side — probe-cell assignment folds AND the per-pair
-    # scoring after the broadcast join — ran as ONE task (profiled on
-    # index_topk_search: a 1.5 s single-task stage at 1.49 s CPU inside
-    # a 3.0 s query).  Round-robin the arriving side across cores; the
-    # guard makes this a no-op past the broadcast threshold, where the
-    # cell exchange parallelizes anyway.
     ab = _probe_assign(
         _spread_broadcast_probe(arriving.select(id_col, vec_col)),
-        id_col, vec_col, anchors, kernel, n_probe,
+        vec_col, anchors, kernel, int(n_probe),
     )
-    probe = ab.select(
-        id_col, vec_col, F.explode("__probes__").alias("__pcell__")
+    sides = _or_empty(
+        _read_index_sides(spark, group_dir),
+        ab.select(id_col, "cell", F.lit(None).cast("array<long>").alias("pq_code")),
     )
-    sides = _read_index_sides(spark, group_dir)
-    if not sides:
-        from pyspark.sql.types import (
-            DoubleType, IntegerType, StructField, StructType,
-        )
-
-        idt = arriving.schema[id_col].dataType
-        return spark.createDataFrame([], StructType([
-            StructField(id_col, idt),
-            StructField("rank", IntegerType()),
-            StructField("match_id", idt),
-            StructField("adc_dist", DoubleType()),
-        ]))
-    pairs = functools.reduce(DataFrame.unionByName, [
-        probe.alias("a")
-        .join(s.alias("s"), F.col("s.cell") == F.col("a.__pcell__"))
-        .select(
-            F.col(f"a.{id_col}").alias(id_col),
-            F.col(f"a.{vec_col}").alias("__qv__"),
-            F.col(f"s.{id_col}").alias("match_id"),
-            F.col("s.pq_code").alias("__code__"),
-        )
-        for s in sides
+    pairs = _cell_pairs(ab, int(n_probe), sides, [
+        F.col(f"a.{id_col}").alias(id_col),
+        F.col(f"a.{vec_col}").alias("__qv__"),
+        F.col(f"s.{id_col}").alias("match_id"),
+        F.col("s.pq_code").alias("__code__"),
     ])
 
     def adc(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
@@ -3150,20 +2960,12 @@ def index_topk_pq(
 
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    # id dtypes from the actual frames (query side / stored side), so
-    # the result schema matches the empty-index branch whatever the
-    # caller's id type is
+    # id dtypes from the joined frames (query side / stored side)
     scored = pairs.mapInPandas(adc, schema=StructType([
         StructField(id_col, pairs.schema[id_col].dataType),
         StructField("match_id", pairs.schema["match_id"].dataType),
         StructField("adc_dist", DoubleType()),
     ]))
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("adc_dist").asc(), F.col("match_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= int(k))
-        .select(id_col, F.col("rank").cast("int").alias("rank"),
-                "match_id", "adc_dist")
+    return _rank(scored, id_col, k, F.col("adc_dist").asc()).select(
+        id_col, F.col("rank").cast("int").alias("rank"), "match_id", "adc_dist"
     )
