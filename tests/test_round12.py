@@ -337,10 +337,17 @@ def test_gc_drops_stale_bucketed_catalog_tables(spark, tmp_path):
         _vecs(range(10, 20), V, spark), spark, idx,
         threshold=0.95, update_index=True,
     ).collect()
-    # force reader registration of both epoch dirs
-    S.incremental_ann_new(
-        _vecs(range(20, 25), V, spark), spark, idx, threshold=0.95
-    ).collect()
+    # force reader registration of both epoch dirs: the Spark screen
+    # registers one bucketed table per dir (a small index is otherwise
+    # screened on the driver, which reads the files with pyarrow)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        S.incremental_ann_new(
+            _vecs(range(20, 25), V, spark), spark, idx, threshold=0.95
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     epoch_tables = [
         Sink._bucket_table_name(f"{idx}/cells/data/epoch={e}") for e in (0, 1)
     ]

@@ -11,14 +11,20 @@ Design for scale:
   final per-query top-k (tiny).
 * Scale path: sign-LSH bucketing — corpus shuffles ONCE on a small int
   bucket key; only same-bucket pairs are scored.
-* Serving a small persisted index (:func:`index_topk`): when the live
-  index files AND the query batch both fit under the session's
-  ``spark.sql.autoBroadcastJoinThreshold``, the fixed cost of planning
-  and scheduling a multi-job Spark query dwarfs the arithmetic (a few
-  million multiply-adds), so the call is answered on the driver from a
-  cached in-memory snapshot of the index — bit-identical to the Spark
-  plan, which stays the path for everything larger (the Drizzle point:
-  at small batch sizes per-batch coordination dominates).
+* Serving and screening a small persisted index (:func:`index_topk`,
+  :func:`incremental_ann_new`): with the expression kernel, when the
+  live index files AND the batch both fit under the session's
+  ``spark.sql.autoBroadcastJoinThreshold`` (-1 disables it), the call
+  is answered on the driver from a cached in-memory snapshot of the
+  index, reading the index and the batch at call time — bit-identical
+  to the Spark plan (rows, doubles, schema; a screen's appended rows
+  and footers too), which stays the path for everything larger.  At
+  small batches the fixed cost of planning and scheduling a multi-job
+  Spark query dominates (the Drizzle point); at the bound the numpy
+  fold still beats the interpreted SQL fold — on 4 cores, a screen of
+  17.5k vectors against a 19.5k-vector, 16-cell, 64-dim index (both
+  ~9 MiB, ~1.4e9 multiply-adds) took 6.4-9.7 s on the driver and
+  53-68 s in Spark.
 * The persisted index (write, screen, top-k, PQ top-k, both hard-negative
   miners) is one core composed in series: probe assignment
   (:func:`_probe_assign`), within-cell scoring (:func:`_score_cells`, or
@@ -1067,33 +1073,18 @@ def _with_cell(
     out_col: str = "cell",
     kernel: str = "auto",
 ) -> DataFrame:
-    """``df`` + an anchor-argmax ``cell`` column.
-
-    ``kernel="expr"`` (the default resolution under
-    ``_VEC_KERNEL_ANCHOR_THRESHOLD`` anchors): pure per-row expressions
-    with the vector norm HOISTED into its own projection, so the
-    interpreted O(dims) norm fold runs once per row instead of once per
-    anchor (ADVICE r11).  Catalyst keeps the two projections separate —
-    CollapseProject refuses to inline a non-cheap alias referenced
-    |anchors| times — which tests/test_round12.py pins by counting fold
-    expressions in the optimized plan.  Values are bit-identical to the
-    inline form (same division tree), so every oracle gate is
-    untouched.
-
-    ``kernel="vectorized"`` (auto above the threshold): the broadcast
-    matmul kernel (:func:`_assign_cells_vectorized`) — the 100 TB path
-    for codebooks grown ~ sqrt(N)."""
-    if _resolve_kernel(kernel, len(anchors)) == "vectorized":
-        return _assign_cells_vectorized(df, vec_col, anchors, out_col=out_col)
-    # r13 (optimization): the assignment tree is rendered as one SQL
-    # string (see the SQL-string-form section) — the same Catalyst
-    # expression, built in 2 py4j calls instead of ~6,000
-    vq = f"`{vec_col}`"
-    return (
-        df.withColumn("__nv__", F.expr(_sql_norm(vq)))
-        .withColumn(out_col, F.expr(_sql_cell_expr(vq, anchors, "`__nv__`")))
-        .drop("__nv__")
-    )
+    """``df`` + an anchor-argmax ``out_col`` column: the primary cell of
+    :func:`_probe_assign` (k-means training and the ``ann_*`` queries),
+    so a bad vector fails with ``invalid ANN vector`` here too.
+    ``kernel`` resolves by :func:`_resolve_kernel`: the expression kernel
+    up to ``_VEC_KERNEL_ANCHOR_THRESHOLD`` anchors, whose norm fold is
+    hoisted into its own projection and runs once per row
+    (tests/test_round12.py counts it in the optimized plan), and the
+    broadcast matmul above it — the 100 TB path for codebooks grown
+    ~ sqrt(N)."""
+    return _probe_assign(
+        df, vec_col, anchors, _resolve_kernel(kernel, len(anchors))
+    ).drop("__nv__").withColumnRenamed("cell", out_col)
 
 
 def _read_published_table(group_dir: str, fname: str, missing_msg: str):
@@ -1624,7 +1615,7 @@ def _probe_assign(
     element (a NULL sum), a length other than the anchors' or a zero
     sum of squares makes it ``raise_error`` — the error surfaces from
     the job that evaluates the assignment, ahead of any division, with
-    ANSI on or off (:func:`_serve_from_snapshot` mirrors it).  Its
+    ANSI on or off (:func:`_snapshot_stage` mirrors it).  Its
     double is :func:`_sql_norm`'s: the same fold, then ``SQRT``."""
     vq = f"`{vec_col}`"
     dim = len(anchors[0]) if anchors else 0
@@ -1669,7 +1660,12 @@ def _cell_pairs(
 
     key = "cell"
     if n_probe > 1:
-        ab, key = ab.withColumn("__pcell__", F.explode("__probes__")), "__pcell__"
+        # explode_outer: a probe list is never empty or NULL (bad vectors
+        # raise first), and unlike explode it makes Catalyst infer no
+        # size(__probes__) > 0 filter that would re-evaluate the whole
+        # probe-cell expression below the assignment
+        ab = ab.withColumn("__pcell__", F.explode_outer("__probes__"))
+        key = "__pcell__"
     frames = []
     for s in sides:
         cond = F.col(f"a.{key}") == F.col("s.cell")
@@ -1720,7 +1716,7 @@ def _kernel_input(
         [s.select(id_col, "cell", vec_col, *payload) for s in sides],
     )
     if n_probe > 1:
-        ab = ab.drop("cell").withColumn("cell", F.explode("__probes__"))
+        ab = ab.drop("cell").withColumn("cell", F.explode_outer("__probes__"))
     return stored.withColumn("__stored__", F.lit(1)).unionByName(
         ab.select(
             id_col, "cell", vec_col,
@@ -1920,7 +1916,24 @@ def incremental_ann_new(
     accumulate past the compaction point — cells-leaf rows are unique
     per vector, so no key-dedupe applies.  A NULL, NULL-element,
     wrong-length or zero arriving vector fails the call with ``invalid
-    ANN vector`` in the assignment checkpoint, before any append."""
+    ANN vector`` before any append (in the assignment checkpoint, or at
+    call time on the driver path below).
+
+    Small indexes are screened on the driver
+    (:func:`_screen_from_snapshot`) under :func:`index_topk`'s gate:
+    with the expr kernel, a batch (not streaming) ``arriving`` of known
+    plan-estimated size, and both that estimate and the live index
+    files at most the session's ``spark.sql.autoBroadcastJoinThreshold``
+    (-1 disables it), the ledger is computed from the cached index
+    snapshot with the numpy fold reference and returned as a local
+    relation, and the appended cells rows are a local relation written
+    through the same :meth:`Sink.append_bucketed_epoch` — no assignment
+    plan, no checkpoint.  Rows, doubles, schema (nullability included),
+    appended rows and parquet footers are bit-identical to the Spark
+    plan's (the tests run every case both ways).  That path reads the
+    index and ``arriving`` when ``incremental_ann_new`` is called; the
+    Spark plan reads ``arriving`` then (its checkpoint) and the index
+    dirs live then when the result is evaluated."""
     from tubes_spark.sink import Sink
 
     # argument contract first (ADVICE r11) — a guaranteed-invalid call
@@ -1942,9 +1955,11 @@ def incremental_ann_new(
         )
     anchors = _read_anchors(group_dir)
     kernel = _resolve_kernel(kernel, len(anchors))
+    # None: no live row file (no payload columns to carry)
+    leaf_extra = _leaf_extra_cols(group_dir, id_col, vec_col, default=None)
     # a payload-carrying leaf (r13) makes its columns part of the
     # append contract: every appended epoch must hold the same schema
-    extra = _leaf_extra_cols(group_dir, id_col, vec_col) if update_index else []
+    extra = (leaf_extra or []) if update_index else []
     missing = [c for c in extra if c not in arriving.columns]
     if missing:
         raise ValueError(
@@ -1952,6 +1967,14 @@ def incremental_ann_new(
             f"arriving batch is missing {missing} (update_index appends "
             "must carry the leaf's full schema)"
         )
+    if kernel == "expr":
+        served = _screen_from_snapshot(
+            arriving, spark, group_dir, anchors, threshold, int(n_probe),
+            id_col, vec_col, leaf_extra or [], extra, update_index,
+            append_scope, compact_after,
+        )
+        if served is not None:
+            return served
     # the arriving-side norm is folded ONCE per row and CARRIED through
     # the checkpoint (``__nv__``), so the screen join divides by it
     # instead of re-folding it per CANDIDATE PAIR (|arriving| x cell
@@ -2156,10 +2179,13 @@ def index_hard_negatives(
 # ----------------------------------- driver-resident serving of small indexes
 #
 # index_topk's Spark plan costs ~5 jobs and ~1,100 py4j round trips of
-# planning per call, while a small index's arithmetic is a few million
-# multiply-adds.  Under the gate in :func:`_serve_from_snapshot` the call
-# is answered from a cached snapshot of the live ``cells`` rows with the
-# expression kernel's exact arithmetic (the numpy fold reference).
+# planning per call, and the incremental screen's ~8 jobs — most of a
+# call at the few-hundred-row batches of a serving or ingest loop, and
+# still the slower path at the gate's bound (module docstring).  Under
+# the gate in :func:`_snapshot_stage` both are answered from a cached
+# snapshot of the live ``cells`` rows with the expression kernel's exact
+# arithmetic (the numpy fold reference): :func:`_serve_from_snapshot`
+# ranks the candidates, :func:`_screen_from_snapshot` counts the hits.
 
 class _IndexSnapshot:
     """The live ``cells`` rows of one index, tombstoned ids excluded,
@@ -2249,7 +2275,7 @@ def _load_snapshot(files, tomb_files, id_col, vec_col, extra, anchors):
     path does not reproduce exactly (non-integer ids, payload types
     outside :func:`_simple_arrow_type`, stored vectors of another
     length, anchors Spark would refuse) — such an index is served by
-    the Spark plan."""
+    the Spark plan.  No live part file loads as an empty snapshot."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -2263,6 +2289,9 @@ def _load_snapshot(files, tomb_files, id_col, vec_col, extra, anchors):
     try:
         tbl = pa.concat_tables(
             [pq.ParquetFile(p).read(columns=cols) for p, _, _ in files]
+            or [pa.table({id_col: pa.array([], pa.int64()),
+                          "cell": pa.array([], pa.int32()),
+                          vec_col: pa.array([], pa.list_(pa.float64()))})]
         )
     except (KeyError, ValueError):  # a missing column, diverging footers
         return None
@@ -2343,35 +2372,43 @@ def _desc_keys(cs: np.ndarray, null: np.ndarray):
     return cls, np.where(cls == 1, -cs, 0.0)
 
 
-def _serve_from_snapshot(
-    arriving: DataFrame, spark, group_dir: str, anchors, k: int,
-    n_probe: int, id_col: str, vec_col: str, extra: "list[str]",
-) -> "DataFrame | None":
-    """:func:`index_topk`'s expression-kernel answer computed on the
-    driver, or None when the gate sends the call to the Spark plan.
+def _snapshot_stage(
+    arriving: DataFrame, spark, group_dir: str, anchors, n_probe: int,
+    id_col: str, vec_col: str, extra: "list[str]", cols: "list[str]",
+):
+    """The driver-side stage both snapshot readers share, or None when
+    the gate sends the call to the Spark plan.
 
-    Gate (caller: expr kernel, no ``stored_filter``): a batch
-    ``arriving`` whose plan-estimated size is known, and a live index
-    whose files, both at most ``spark.sql.autoBroadcastJoinThreshold``
-    bytes (-1 disables this path).  Reads the index (cached) and
-    ``arriving`` now, not when the result is evaluated.
+    Gate (callers: expr kernel; :func:`index_topk` also no
+    ``stored_filter``): a batch ``arriving`` with integer ids whose
+    plan-estimated size is known, a vector column typed as an array of
+    integers or floats, ``cols`` of :func:`_simple_arrow_type` types,
+    anchors of nonzero norm, and both that estimate and the live index
+    files at most ``spark.sql.autoBroadcastJoinThreshold`` bytes (-1
+    disables this path) — all decided before ``arriving`` is read, so a
+    refused call reads it only in the Spark plan; only a zero divisor
+    found in the data hands a call over after the read.  ``extra`` is
+    the leaf's payload (the snapshot is cached per index, so every
+    caller loads the same columns).
 
-    Every double is the Spark plan's: probe scores and pair cosines use
-    the numpy fold reference and its ``d / (nv * na)`` division tree;
-    probe cells follow :func:`_sql_cell_expr` / :func:`_sql_probe_cells`;
-    all candidates of one query id (duplicate ids included) rank
-    together on (cs DESC, match_id ASC) under Spark's double ordering,
-    as the Window does.  A bad query vector raises now with the Spark
-    path's ``invalid ANN vector`` message; a stored row the Spark plan
-    scores NULL (NULL/malformed vector, zero divisor) is NULL here, or —
-    under ANSI, where a zero divisor raises — the call goes to the
-    Spark plan so it raises the same error.  The result is a local
-    relation; ``F.round`` is Spark's (HALF_UP)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import from_arrow_type
+    Returns (``side``: the Spark schema of ``arriving``'s id, vector
+    and ``cols``; ``q``: those columns read now with ``toArrow``; the
+    snapshot; ``probes``: rows x probed cells, primary first; a
+    generator of (query rows, first stored row, cosines, NULL mask) per
+    chunk of the query rows probing one cell, which yields None where
+    Spark would raise).  A bad query vector raises now with
+    :func:`_probe_assign`'s ``invalid ANN vector`` message.  Probe cells
+    follow :func:`_sql_cell_expr` / :func:`_sql_probe_cells` (numpy's
+    argmax puts the first NaN first, as Spark's array_max does) and
+    every double is the Spark plan's ``d / (nv * ns)`` through the numpy
+    fold reference.  A stored row the Spark plan scores NULL
+    (NULL/malformed vector, zero divisor) is NULL here — except that
+    under ANSI, where a zero divisor raises, the generator yields None
+    so the caller hands the call to the Spark plan to raise it."""
+    from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import (
-        ByteType, DoubleType, IntegerType, LongType, ShortType, StructField,
-        StructType,
+        ArrayType, ByteType, DoubleType, FloatType, IntegerType, LongType,
+        ShortType,
     )
 
     from tubes_spark.sink import Sink
@@ -2381,71 +2418,99 @@ def _serve_from_snapshot(
     limit = _broadcast_threshold(spark)
     if limit < 0:
         return None
-    qside = arriving.select(id_col, vec_col)
-    id_field = qside.schema[id_col]
-    if not isinstance(id_field.dataType, (ByteType, ShortType, IntegerType, LongType)):
+    side = arriving.select(id_col, vec_col, *cols)
+    ints = (ByteType, ShortType, IntegerType, LongType)
+    vec_t = side.schema[vec_col].dataType
+    if not isinstance(side.schema[id_col].dataType, ints) or not (
+        isinstance(vec_t, ArrayType)
+        and isinstance(vec_t.elementType, (*ints, FloatType, DoubleType))
+    ) or not all(
+        _simple_arrow_type(to_arrow_type(side.schema[c].dataType)) for c in cols
+    ):
         return None
-    est = Sink.plan_bytes(qside)
+    # a zero-norm anchor's NULL or raising cosine is left to the Spark plan
+    if any(_anchor_norm(a) == 0 for a in anchors):
+        return None
+    est = Sink.plan_bytes(side)
     if est is None or est > limit:
         return None
     snap = _index_snapshot(group_dir, id_col, vec_col, extra, anchors, limit)
     if snap is None:
         return None
-    q = qside.toArrow()
-    qm = _vector_matrix(q.column(vec_col), len(anchors[0]))
-    if qm is None:
-        return None
-    qv, qvalid = qm[0], qm[1]
+    q = side.toArrow()
+    dim = len(anchors[0])
+    qv, qvalid, _ = _vector_matrix(q.column(vec_col), dim)
     nv = _np_norm(qv)
     if not (qvalid & (nv != 0)).all():  # :func:`_probe_assign`'s guard
-        raise ValueError(_bad_vector_msg(vec_col, len(anchors[0])))
-
-    def null_or_raise(ok: np.ndarray, div: np.ndarray) -> "np.ndarray | None":
-        """NULL mask of ``d / div`` where ``ok`` marks non-NULL operands;
-        None when a zero divisor would raise in Spark (ANSI mode)."""
-        zero = ok & (div == 0)
-        if zero.any() and spark.conf.get("spark.sql.ansi.enabled") == "true":
-            return None
-        return ~ok | zero
-
-    # probe cells per query row: the first maximum (numpy's argmax puts
-    # NaN first, as Spark's array_max does) at n_probe = 1, else the
-    # sorted probe list; a zero-norm anchor's NULL or raising cosine is
-    # left to the Spark plan
+        raise ValueError(_bad_vector_msg(vec_col, dim))
     scores, div = _np_anchor_scores(qv, nv, anchors)
-    if (div == 0).any():
+    if (div == 0).any():  # nv * na underflowed: the Spark plan decides
         return None
     probes = (
         scores.argmax(axis=1)[:, None] if n_probe == 1
         else _np_probe_cells(scores, np.zeros(scores.shape, bool), n_probe)
     )
-    # per probed cell: cosines of the queries probing it against its
-    # rows (dims x queries x rows products folded over dims, in bounded
-    # chunks), keeping each query row's local top k — the top k of a
-    # query id is among the union of its rows' local top k
-    prow = np.repeat(np.arange(len(qv)), probes.shape[1])
-    pcell = probes.ravel()
+
+    def blocks():
+        # per probed cell: cosines of the queries probing it against its
+        # rows (dims x queries x rows products folded over dims), in
+        # chunks bounded to ~2M products
+        prow = np.repeat(np.arange(len(qv)), probes.shape[1])
+        pcell = probes.ravel()
+        for c in np.unique(pcell):
+            a, b = snap.offsets[c], snap.offsets[c + 1]
+            probing = prow[pcell == c]
+            step = max(1, (1 << 21) // max(1, (b - a) * dim))
+            for i in range(0, len(probing) if b > a else 0, step):
+                qr = probing[i:i + step]
+                div = nv[qr][:, None] * snap.norms[None, a:b]
+                with np.errstate(all="ignore"):
+                    cs = _fold_sum(
+                        qv[qr].T[:, :, None] * snap.vecs_t[:, None, a:b], 0
+                    ) / div
+                ok = np.broadcast_to(snap.valid[None, a:b], div.shape)
+                zero = ok & (div == 0)
+                if zero.any() and spark.conf.get("spark.sql.ansi.enabled") == "true":
+                    yield None
+                    return
+                yield qr, a, cs, ~ok | zero
+
+    return side.schema, q, snap, probes, blocks()
+
+
+def _serve_from_snapshot(
+    arriving: DataFrame, spark, group_dir: str, anchors, k: int,
+    n_probe: int, id_col: str, vec_col: str, extra: "list[str]",
+) -> "DataFrame | None":
+    """:func:`index_topk`'s expression-kernel answer computed on the
+    driver (:func:`_snapshot_stage`), or None for the Spark plan.
+
+    Each query row keeps its local top ``k`` per probed cell; all
+    candidates of one query id (duplicate ids included) then rank
+    together on (cs DESC, match_id ASC) under Spark's double ordering,
+    as the Window does.  The result is a local relation; ``F.round`` is
+    Spark's (HALF_UP)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_type
+    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+    stage = _snapshot_stage(
+        arriving, spark, group_dir, anchors, n_probe, id_col, vec_col, extra, []
+    )
+    if stage is None:
+        return None
+    side, q, snap, _, blocks = stage
     cand = []
-    for c in np.unique(pcell):
-        a, b = snap.offsets[c], snap.offsets[c + 1]
-        probing = prow[pcell == c]
-        step = max(1, (1 << 21) // max(1, (b - a) * qv.shape[1]))
-        for i in range(0, len(probing) if b > a else 0, step):
-            qr = probing[i:i + step]
-            div = nv[qr][:, None] * snap.norms[None, a:b]
-            with np.errstate(all="ignore"):
-                cs = _fold_sum(qv[qr].T[:, :, None] * snap.vecs_t[:, None, a:b], 0) / div
-            null = null_or_raise(
-                np.broadcast_to(snap.valid[None, a:b], div.shape), div
-            )
-            if null is None:
-                return None
-            cls, val = _desc_keys(cs, null)
-            ids = np.broadcast_to(snap.id_rank[a:b], cs.shape)
-            top = np.lexsort((ids, val, cls), axis=-1)[:, :int(k)]
-            at = np.arange(len(qr))[:, None]
-            cand.append((np.repeat(qr, top.shape[1]), (a + top).ravel(),
-                         cs[at, top].ravel(), null[at, top].ravel()))
+    for blk in blocks:
+        if blk is None:
+            return None
+        qr, a, cs, null = blk
+        cls, val = _desc_keys(cs, null)
+        ids = np.broadcast_to(snap.id_rank[a:a + cs.shape[1]], cs.shape)
+        top = np.lexsort((ids, val, cls), axis=-1)[:, :int(k)]
+        at = np.arange(len(qr))[:, None]
+        cand.append((np.repeat(qr, top.shape[1]), (a + top).ravel(),
+                     cs[at, top].ravel(), null[at, top].ravel()))
     if cand:
         qrow, srow, cs, c_null = (np.concatenate(x) for x in zip(*cand))
     else:
@@ -2477,7 +2542,7 @@ def _serve_from_snapshot(
         names=[id_col, "rank", "match_id", *mcols, "cs"],
     )
     schema = StructType(
-        [StructField(id_col, id_field.dataType, id_field.nullable),
+        [side[id_col],
          StructField("rank", IntegerType(), False),
          StructField("match_id", from_arrow_type(snap.ids.type), True)]
         + [StructField(m, from_arrow_type(snap.payload.schema.field(c).type), True)
@@ -2487,6 +2552,104 @@ def _serve_from_snapshot(
     return spark.createDataFrame(out, schema).select(
         id_col, "rank", "match_id", *mcols, F.round("cs", 6).alias("match_sim")
     )
+
+
+def _screen_from_snapshot(
+    arriving: DataFrame, spark, group_dir: str, anchors, threshold: float,
+    n_probe: int, id_col: str, vec_col: str, leaf_extra: "list[str]",
+    extra: "list[str]", update_index: bool, append_scope: str,
+    compact_after: "int | None",
+) -> "DataFrame | None":
+    """:func:`incremental_ann_new`'s expression-kernel verdict ledger
+    computed on the driver (:func:`_snapshot_stage`), or None for the
+    Spark plan.
+
+    Spark's semantics, reproduced: a pair is a hit when ``cs >=
+    threshold`` (NaN compares above every number, so a NaN cosine is a
+    hit; a NULL one never is); hits are counted and maxed (NaN first)
+    per id over every row and probe cell of that id, so duplicate ids
+    share one count and best score, as ``groupBy(id)`` joined back does;
+    a NULL id never joins its hits, so it is new.  The ledger and the
+    appended cells rows ``(id, cell, vec, *extra)`` — every row, or the
+    new ones under ``append_scope="survivors"``, each at its primary
+    (first-probe) cell — are local relations; the append runs through
+    :meth:`Sink.append_bucketed_epoch` with nothing to pin."""
+    import pyarrow as pa
+    from pyspark.sql.types import (
+        BooleanType, DoubleType, IntegerType, StructField, StructType,
+    )
+
+    from tubes_spark.sink import Sink
+
+    stage = _snapshot_stage(
+        arriving, spark, group_dir, anchors, n_probe, id_col, vec_col,
+        leaf_extra, extra,
+    )
+    if stage is None:
+        return None
+    side, q, _, probes, blocks = stage
+    n = q.num_rows
+    # per row: its hit count and best hit cosine — the highest number,
+    # or the first NaN hit itself (its bits: Spark's max keeps the NaN
+    # it met first and F.round passes NaN through)
+    hits = np.zeros(n, np.int64)
+    best = np.full(n, -np.inf)
+    for blk in blocks:
+        if blk is None:
+            return None
+        qr, _, cs, null = blk
+        nan = np.isnan(cs)
+        hit = ~null & (nan | (cs >= float(threshold)))
+        hits[qr] += hit.sum(axis=1)  # a row probes a cell once: qr is unique
+        top = np.where(hit & ~nan, cs, -np.inf).max(axis=1)
+        first_nan = cs[np.arange(len(qr)), (hit & nan).argmax(axis=1)]
+        cur = best[qr]
+        best[qr] = np.where(
+            np.isnan(cur), cur,
+            np.where((hit & nan).any(axis=1), first_nan, np.maximum(cur, top)),
+        )
+    # groupBy(id) over the hits, joined back on id (NULL ids never join)
+    qid = q.column(id_col).combine_chunks()
+    has_id = ~qid.is_null().to_numpy(zero_copy_only=False)
+    _, group = np.unique(qid.fill_null(0).to_numpy(), return_inverse=True)
+    g_hits = np.zeros(n, np.int64)
+    np.add.at(g_hits, group[has_id], hits[has_id])
+    num = has_id & ~np.isnan(best)
+    g_best = np.full(n, -np.inf)
+    np.maximum.at(g_best, group[num], best[num])
+    nan_rows = np.flatnonzero(has_id & np.isnan(best))
+    nan_groups, first = np.unique(group[nan_rows], return_index=True)
+    g_best[nan_groups] = best[nan_rows[first]]
+    n_hits = np.where(has_id, g_hits[group], 0)
+    is_new = n_hits == 0
+    ledger = pa.table(
+        [qid, pa.array(probes[:, 0], pa.int32()), pa.array(is_new),
+         pa.array(n_hits, pa.int32()), pa.array(g_best[group], mask=is_new)],
+        names=[id_col, "cell", "is_new", "n_prior_hits", "__best__"],
+    )
+    cell = StructField("cell", IntegerType(), True)  # nullable, as in Spark
+    out = spark.createDataFrame(ledger, StructType([
+        side[id_col], cell, StructField("is_new", BooleanType(), False),
+        StructField("n_prior_hits", IntegerType(), False),
+        StructField("__best__", DoubleType(), True),
+    ])).select(id_col, "cell", "is_new", "n_prior_hits",
+               F.round("__best__", 6).alias("best_sim"))
+    if update_index:
+        keep = is_new if append_scope == "survivors" else np.ones(n, bool)
+        rows = q.filter(pa.array(keep))
+        appended = pa.table(
+            [rows.column(id_col).combine_chunks(),
+             pa.array(probes[keep, 0], pa.int32())]
+            + [rows.column(c).combine_chunks() for c in (vec_col, *extra)],
+            names=[id_col, "cell", vec_col, *extra],
+        )
+        Sink.append_bucketed_epoch(
+            spark.createDataFrame(appended, StructType(
+                [side[id_col], cell, side[vec_col], *[side[c] for c in extra]]
+            )),
+            group_dir, "cells", ["cell"], compact_after=compact_after,
+        )
+    return out
 
 
 def index_topk(
