@@ -432,15 +432,32 @@ def test_incremental_minhash_reads_no_old_document_text(spark, tmp_path):
     dedup.write_minhash_index(spark.read.parquet(old_dir), idx_dir, epoch=0)
 
     arriving = spark.read.parquet(arr_dir)
-    out = dedup.incremental_minhash_new(arriving, spark, idx_dir, update_index=True)
-    # inputFiles() walks every FileIndex in the plan (explain strings
-    # truncate locations): the incremental lineage touches the arriving
-    # batch and the stored index, never the old corpus
-    files = out.inputFiles()
+    # a small batch and index are screened on the driver: the result
+    # reads the arriving batch only (the index through its snapshot)
+    probe = dedup.incremental_minhash_new(arriving, spark, idx_dir)
+    files = probe.inputFiles()
+    assert files and all("arriving_docs" in f for f in files), files
+    # the Spark screen (broadcasts off), which appends the next epoch
+    thr = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(thr)
+    spark.conf.set(thr, "-1")
+    try:
+        out = dedup.incremental_minhash_new(
+            arriving, spark, idx_dir, update_index=True
+        )
+        # inputFiles() walks every FileIndex in the plan (explain strings
+        # truncate locations): the incremental lineage touches the
+        # arriving batch and the stored index, never the old corpus
+        files = out.inputFiles()
+    finally:
+        spark.conf.set(thr, prev)
     assert files, "expected file-backed scans in the incremental plan"
     assert all("old_docs" not in f for f in files), files
     assert any("arriving_docs" in f for f in files), files
     assert any("mh_index" in f for f in files), files
+    assert {r["doc_id"] for r in probe.collect()} == {
+        r["doc_id"] for r in out.collect()
+    }
 
     got = {r["doc_id"] for r in out.collect()}
     # ground truth from the band frames themselves

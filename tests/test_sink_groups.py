@@ -76,13 +76,23 @@ def test_minhash_index_survives_delete_and_compact_to_latest(spark, tmp_path):
         [_doc_text(3), _doc_text(33), "entirely fresh words here " * 3],
         spark,
     )
+    # the Spark screen (broadcasts off) scans every live dir bucketed
+    thr = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(thr)
+    spark.conf.set(thr, "-1")
+    try:
+        got = dedup.incremental_minhash_new(arr, spark, idx)
+        want = dedup.incremental_minhash_new(arr, spark, fresh)
+        assert {r["doc_id"] for r in got.collect()} == {
+            r["doc_id"] for r in want.collect()
+        } == {101, 102}
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "Bucketed: true" in plan
+    finally:
+        spark.conf.set(thr, prev)
+    # the driver screen reads the rewritten leaf's files directly
     got = dedup.incremental_minhash_new(arr, spark, idx)
-    want = dedup.incremental_minhash_new(arr, spark, fresh)
-    assert {r["doc_id"] for r in got.collect()} == {
-        r["doc_id"] for r in want.collect()
-    } == {101, 102}
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "Bucketed: true" in plan
+    assert {r["doc_id"] for r in got.collect()} == {101, 102}
 
 
 def test_ann_index_survives_delete_and_compact_to_latest(spark, tmp_path):

@@ -12,7 +12,23 @@ Four tiers, all shuffle-frugal:
 * n-gram Jaccard — exact verify step on LSH candidates.
 
 Everything below is built-in Column expressions (xxhash64, transform,
-aggregate); no Python in the hot path.
+aggregate); no Python in the hot path — except the screen of a small
+persisted MinHash index (:func:`incremental_minhash_new`).  When the
+arriving batch's plan-estimated size and the live ``bands`` files both
+fit under the session's ``spark.sql.autoBroadcastJoinThreshold`` (-1
+disables it), that screen runs on the driver against a cached snapshot
+of the live (band, key) set: one Spark projection yields the shingle
+hashes (every string rule stays Spark's), integer numpy the minima and
+band keys, and the duplicate ids and appended band rows are local
+relations.  Survivors and stored rows are identical to the Spark plan,
+which stays the path for everything else.  At ingest-sized batches the
+Spark plan's fixed coordination cost dominates (the Drizzle point), and
+the driver path still won at the largest size measured — on 4 cores,
+warm JVM, ``update_index=True`` plus a count of the survivors, 500 docs
+against a 1.1 MiB index took 0.69-0.78 s on the driver and 1.41-1.77 s
+in Spark; 20,000 docs (plan estimate 2.6 MiB) against 9.1 MiB,
+2.4-2.5 s and 4.0-4.5 s; 80,000 docs (10.2 MiB) against 39 MiB,
+8.1-8.7 s and 10.5-11.9 s.
 
 BEHAVIOR CHANGES (r10/r11, ADVICE-r10 notes):
 
@@ -34,6 +50,7 @@ BEHAVIOR CHANGES (r10/r11, ADVICE-r10 notes):
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -50,21 +67,6 @@ def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
         .withColumn("__rn__", F.row_number().over(w))
         .filter(F.col("__rn__") == 1)
         .drop("__h__", "__rn__")
-    )
-
-
-def minhash_signature(shingle_hashes: Column, k: int = 64, seed: int = 1337) -> Column:
-    """k minhash values over pre-hashed shingles (array<long>).
-
-    Cost discipline: each shingle string is hashed to 64 bits ONCE
-    upstream; the k-member hash family is derived from that long via
-    xxhash64(h, seed_i) — hashing 8 bytes, not re-hashing the string
-    k times.  array<long>, all JVM transform/array_min, no UDF."""
-    return F.array(
-        *[
-            F.array_min(F.transform(shingle_hashes, lambda h, i=i: F.xxhash64(h, F.lit(seed + i))))
-            for i in range(k)
-        ]
     )
 
 
@@ -619,6 +621,27 @@ def arith_shingle_hash(shingle: Column) -> Column:
     )
 
 
+def _arith_sql(text_col: str, shingle_k: int) -> "tuple[str, str, str]":
+    """The arithmetic MinHash's shingle SQL, rendered in one place for
+    :func:`arith_minhash_bands` and the driver screen's projection:
+    (the token array of the normalised ``text_col`` — lower-cased,
+    whitespace runs collapsed, trimmed, split on spaces; the distinct
+    word ``shingle_k``-shingles of a token array column ``toks``, one
+    shingle of every token when there are fewer; the hash of one
+    shingle ``sh``).  Shingles are the string form the ``_SHINGLES``
+    DuckDB macro reproduces (oracles.py)."""
+    k = shingle_k
+    toks = f"split(trim(regexp_replace(lower(`{text_col}`), '\\\\s+', ' ')), ' ')"
+    shingles = (
+        f"array_distinct(CASE WHEN size(toks) < {k} "
+        f"THEN array(array_join(toks, ' ')) "
+        f"ELSE transform(sequence(0, greatest(size(toks) - {k}, 0)), "
+        f"i -> array_join(slice(toks, i + 1, {k}), ' ')) END)"
+    )
+    x = f"CAST(conv(substring(md5(sh), 1, 8), 16, 10) AS BIGINT) % {ARITH_P}"
+    return toks, shingles, x
+
+
 def arith_minhash_bands(
     df: DataFrame,
     text_col: str = "text",
@@ -650,24 +673,14 @@ def arith_minhash_bands(
     fam = arith_hash_family(num_hashes)
     n_parts = max(df.sparkSession.sparkContext.defaultParallelism, 8)
     qid = f"`{id_col}`"
-    norm_sql = f"trim(regexp_replace(lower(`{text_col}`), '\\\\s+', ' '))"
+    toks_sql, shingles_sql, hash_sql = _arith_sql(text_col, shingle_k)
     toks = (
-        df.selectExpr(qid, f"split({norm_sql}, ' ') AS toks")
+        df.selectExpr(qid, f"{toks_sql} AS toks")
         .repartition(n_parts, F.col(id_col))
     )
-    # word_shingles_from_tokens over the materialized token column
-    sh_sql = (
-        f"CASE WHEN size(toks) < {shingle_k} "
-        f"THEN array(array_join(toks, ' ')) "
-        f"ELSE transform(sequence(0, greatest(size(toks) - {shingle_k}, 0)), "
-        f"i -> array_join(slice(toks, i + 1, {shingle_k}), ' ')) END"
-    )
     ex = toks.selectExpr(
-        qid, f"explode(array_distinct({sh_sql})) AS sh"
-    ).selectExpr(
-        qid,
-        f"CAST(conv(substring(md5(sh), 1, 8), 16, 10) AS BIGINT) % {ARITH_P} AS x",
-    )
+        qid, f"explode({shingles_sql}) AS sh"
+    ).selectExpr(qid, f"{hash_sql} AS x")
     mins = ex.groupBy(id_col).agg(
         *[
             F.expr(f"min(({a} * x + {b}) % {ARITH_P}) AS m{i}")
@@ -775,6 +788,197 @@ def compact_minhash_index(spark, group_dir: str) -> int:
     )
 
 
+# ----------------------------------- driver-side screening of small indexes
+#
+# The Spark screen below costs a multi-job plan per call (an eager
+# signature checkpoint, a semi-join per live index dir, a bucketed-table
+# registration per new epoch dir) — most of a call at the few-hundred-row
+# batches of an ingest loop.  Under the gate in :func:`_screen_on_driver`
+# the same decisions come from one narrow Spark projection (the shingle
+# hashes, string semantics all Spark's) plus integer numpy, checked
+# against a cached snapshot of the live (band, key) set.
+
+def _load_band_keys(files):
+    """The distinct live ``"<band> <key>"`` strings of the ``bands``
+    files, read with pyarrow (no Spark job), or None when a file lacks
+    an integer ``band`` or a string ``key`` column (the Spark plan
+    decides those).  NULLs never match, so they are dropped."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    parts = []
+    for path, _, _ in files:
+        t = pq.ParquetFile(path).read(columns=_BAND_KEYS)  # skips absent ones
+        if sorted(t.column_names) != _BAND_KEYS:
+            return None
+        band, key = t.column("band"), t.column("key")
+        if not pa.types.is_integer(band.type) or not pa.types.is_string(key.type):
+            return None
+        parts += _band_key_strings(band, key).chunks
+    return pc.unique(pa.chunked_array(parts, pa.string()).drop_null())
+
+
+def _band_key_strings(band, key):
+    """``"<band> <key>"`` per row: one string per (band, key) pair (a
+    key holds digits and ``_`` only), NULL where either is NULL."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    return pc.binary_join_element_wise(pc.cast(band, pa.string()), key, " ")
+
+
+def _band_keys(q, id_col: str, num_hashes: int, bands: int):
+    """The arithmetic MinHash of each distinct id of the batch ``q``
+    (``id_col``, ``xs``: the shingle hashes of one row), as
+    :func:`arith_minhash_bands` groups it: rows of one id merge (NULL
+    ids are one id), a NULL hash is skipped by every minimum, an id with
+    only NULL hashes keys every band ``''`` (``concat_ws`` drops NULLs)
+    and an id with no hash at all has no band rows.
+
+    Returns (``ids``: the distinct ids; ``gid``: the index into ``ids``
+    of every id with band rows; ``band``, ``key``: their band rows,
+    band-major — the rows of band ``b`` are ``b * len(gid)`` onwards, in
+    ``gid`` order).  Minima are int64 numpy (products stay below
+    2^62)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    enc = pc.dictionary_encode(
+        q.column(id_col).combine_chunks(), null_encoding="encode"
+    )
+    xs = q.column("xs").combine_chunks()
+    row = np.repeat(
+        enc.indices.to_numpy(),
+        pc.fill_null(pc.list_value_length(xs), 0).to_numpy(),
+    )
+    flat = pc.list_flatten(xs)
+    null = flat.is_null().to_numpy(zero_copy_only=False)
+    x = pc.fill_null(flat, 0).to_numpy()
+    order = np.argsort(row, kind="stable")
+    row, x, null = row[order], x[order], null[order]
+    start = np.flatnonzero(np.diff(row, prepend=-1))  # each id's first row
+    mins = np.empty((len(start), num_hashes), np.int64)
+    for i, (a, b) in enumerate(arith_hash_family(num_hashes)):
+        h = (a * x + b) % ARITH_P
+        h[null] = ARITH_P  # above every hash: min() skips it
+        if len(start):
+            mins[:, i] = np.minimum.reduceat(h, start)
+    # an id's minima are all NULL (only NULL hashes) or none is
+    no_hash = mins[:, 0] == ARITH_P
+    digits = [
+        pa.array(mins[:, i], mask=no_hash).cast(pa.string())
+        for i in range(num_hashes)
+    ]
+    per = num_hashes // bands
+    key = pa.concat_arrays([
+        pc.fill_null(
+            digits[b * per] if per == 1
+            else pc.binary_join_element_wise(*digits[b * per:(b + 1) * per], "_"),
+            "",
+        )
+        for b in range(bands)
+    ])
+    band = np.repeat(np.arange(bands, dtype=np.int32), len(start))
+    return enc.dictionary, row[start], pa.array(band), key
+
+
+def _screen_on_driver(
+    arriving: DataFrame, spark, group_dir: str, id_col: str, text_col: str,
+    shingle_k: int, num_hashes: int, bands: int, update_index: bool,
+    append_scope: str, compact_after: "int | None",
+) -> "DataFrame | None":
+    """:func:`incremental_minhash_new` computed on the driver, or None
+    when the gate sends the call to the Spark plan.
+
+    Gate, decided before ``arriving`` is read: a batch (not streaming)
+    ``arriving`` with integer or string ids whose plan-estimated size
+    (:meth:`Sink.plan_bytes` of the id and text columns) is known, and
+    both that estimate and the live ``bands`` files at most
+    ``spark.sql.autoBroadcastJoinThreshold`` bytes (-1 disables this
+    path).  The shingle hashes come from one narrow projection of the
+    batch read with ``toArrow``; minima, band keys and hits are computed
+    here (:func:`_band_keys`) against the cached live (band, key) set
+    (:meth:`Sink.leaf_snapshot`).  The result anti-joins ``arriving``
+    with a local relation of the duplicate ids (a NULL id never joins,
+    so it survives, as on the Spark path); it reads no index dir, so the
+    append needs nothing pinned.  The appended epoch — the min id per
+    (band, key) of every id, or of the kept ones under
+    ``append_scope="survivors"`` — is a local relation too."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import (
+        IntegerType, IntegralType, StringType, StructField, StructType,
+    )
+
+    from tubes_spark.sink import Sink
+
+    if arriving.isStreaming:
+        return None
+    limit = Sink.broadcast_threshold(spark)
+    spec = Sink._bucket_spec(group_dir)
+    if limit < 0 or spec is None:  # no spec: the Spark plan refuses it
+        return None
+    side = arriving.select(id_col, text_col)
+    id_field = side.schema[id_col]
+    if not isinstance(id_field.dataType, (IntegralType, StringType)):
+        return None
+    est = Sink.plan_bytes(side)
+    if est is None or est > limit:
+        return None
+    seen = Sink.leaf_snapshot(
+        group_dir, spec["leaf"], tuple(_BAND_KEYS), _load_band_keys, limit
+    )
+    if seen is None:
+        return None
+    toks_sql, shingles_sql, hash_sql = _arith_sql(text_col, shingle_k)
+    qid = f"`{id_col}`"
+    q = (
+        # a single-file batch arrives as one partition: spread the
+        # shingle work over the cores, as arith_minhash_bands does
+        side.repartition(spark.sparkContext.defaultParallelism)
+        .selectExpr(qid, f"{toks_sql} AS toks")
+        .selectExpr(qid, f"transform({shingles_sql}, sh -> {hash_sql}) AS xs")
+        .toArrow()
+    )
+    ids, gid, band, key = _band_keys(q, id_col, num_hashes, bands)
+    hit = pc.is_in(_band_key_strings(band, key), value_set=seen).to_numpy(
+        zero_copy_only=False
+    )
+    dup = hit.reshape(bands, -1).any(axis=0) & ids.is_valid().to_numpy(
+        zero_copy_only=False
+    )[gid]
+    dups = spark.createDataFrame(
+        pa.table([ids.take(pa.array(gid[dup]))], names=[id_col]),
+        StructType([id_field]),
+    )
+    out = arriving.join(dups, id_col, "left_anti")
+    if update_index:
+        keep = np.ones(len(gid), bool) if append_scope == "all" else ~dup
+        rows = pa.array(np.tile(keep, bands))
+        per_key = pa.table({
+            id_col: ids.take(pa.array(np.tile(gid[keep], bands))),
+            "band": band.filter(rows), "key": key.filter(rows),
+        }).group_by(_BAND_KEYS).aggregate([(id_col, "min")])
+        appended = spark.createDataFrame(
+            pa.table(
+                [per_key.column(f"{id_col}_min"), per_key.column("band"),
+                 per_key.column("key")],
+                names=[id_col, "band", "key"],
+            ),
+            StructType([
+                StructField(id_col, id_field.dataType, True),
+                StructField("band", IntegerType(), False),
+                StructField("key", StringType(), False),
+            ]),
+        )
+        Sink.append_bucketed_epoch(
+            appended, group_dir, "bands", _BAND_KEYS,
+            compact_after=compact_after, dedupe_keys={"bands": _BAND_KEYS},
+        )
+    return out
+
+
 def incremental_minhash_new(
     arriving: DataFrame,
     spark,
@@ -807,6 +1011,13 @@ def incremental_minhash_new(
     whole point of the layout at 100 TB.  A group without
     ``_bucketspec.json`` is refused with a ``ValueError``: rebuild it
     with :func:`write_minhash_index`.
+
+    Small batches and indexes are screened on the driver instead
+    (:func:`_screen_on_driver`; gate and timings in the module
+    docstring): the same survivors and stored band rows, and a result
+    that reads only ``arriving``, anti-joined with a local relation of
+    the duplicate ids — so the index is never scanned and the append
+    pins nothing.
 
     ``update_index=True`` appends the arriving batch's band rows as
     the next committed epoch (the daily maintenance step), atomic
@@ -847,6 +1058,12 @@ def incremental_minhash_new(
     if append_scope not in ("all", "survivors"):
         raise ValueError(f"unknown append_scope {append_scope!r}")
 
+    out = _screen_on_driver(
+        arriving, spark, group_dir, id_col, text_col, shingle_k, num_hashes,
+        bands, update_index, append_scope, compact_after,
+    )
+    if out is not None:
+        return out
     ab = arith_minhash_bands(
         arriving, text_col, id_col, shingle_k, num_hashes, bands
     ).localCheckpoint(eager=True)

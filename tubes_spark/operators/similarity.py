@@ -41,7 +41,6 @@ Design for scale:
 
 from __future__ import annotations
 
-import threading
 from typing import Iterator
 
 import numpy as np
@@ -977,7 +976,7 @@ def _spread_broadcast_probe(df: DataFrame) -> DataFrame:
     try:
         par = df.sparkSession.sparkContext.defaultParallelism
         est = Sink.plan_bytes(df)
-        thr = _broadcast_threshold(df.sparkSession)
+        thr = Sink.broadcast_threshold(df.sparkSession)
         if (
             est is not None and 0 < est <= max(thr, 0)
             and df.rdd.getNumPartitions() < par
@@ -986,14 +985,6 @@ def _spread_broadcast_probe(df: DataFrame) -> DataFrame:
     except (AttributeError, Py4JError):  # no JVM plan to ask
         pass
     return df
-
-
-def _broadcast_threshold(spark) -> int:
-    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes
-    (-1: broadcasting disabled)."""
-    return int(
-        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    )
 
 
 def _assign_cells_vectorized(
@@ -2217,10 +2208,6 @@ class _IndexSnapshot:
         )
 
 
-# (group dir, id col, vec col) -> (file identity, snapshot or None, bytes)
-_SNAPSHOTS: "dict[tuple, tuple]" = {}
-_SNAPSHOT_LOCK = threading.Lock()
-
 def _simple_arrow_type(t) -> bool:
     """Numbers, booleans, strings, binaries and lists of them — payload
     types that round-trip through ``createDataFrame`` unchanged."""
@@ -2323,13 +2310,12 @@ def _load_snapshot(files, tomb_files, id_col, vec_col, extra, anchors):
 
 
 def _index_snapshot(group_dir, id_col, vec_col, extra, anchors, limit):
-    """The cached snapshot of the index, reloaded whenever the identity
-    (path, size, mtime_ns) of any live part file, tombstone file or the
-    anchor record changes — so every append, compaction, delete, purge
-    or rebuild at the same path is seen by the next call.  None when the
-    live files exceed ``limit`` bytes or the rows are not servable here.
-    The cache holds at most ``limit`` bytes of snapshots, evicting the
-    least recently used; one lock covers check-then-load."""
+    """The cached snapshot of the index (:meth:`Sink.leaf_snapshot`),
+    reloaded whenever any live part file, tombstone file or the anchor
+    record changes, so every append, compaction, delete, purge or
+    rebuild at the same path is seen by the next call.  None when the
+    live files exceed ``limit`` bytes or the rows are not servable
+    here."""
     import os
 
     from tubes_spark.sink import Sink
@@ -2337,30 +2323,17 @@ def _index_snapshot(group_dir, id_col, vec_col, extra, anchors, limit):
     spec = Sink._bucket_spec(group_dir)
     if spec is None:  # not an index this version reads (the plan raises)
         return None
-    files = Sink.live_part_files(group_dir, spec["leaf"])
-    if sum(size for _, size, _ in files) > limit:
-        return None
     tombs = [f for d in _tombstone_dirs(group_dir) for f in Sink.part_files(d)]
     try:
         st = os.stat(f"{group_dir}/_anchors.parquet")
     except FileNotFoundError:  # served from a staged record (read-only mount)
         return None
-    ident = (tuple(files), tuple(tombs), (st.st_size, st.st_mtime_ns))
-    key = (os.path.realpath(group_dir), id_col, vec_col)
-    with _SNAPSHOT_LOCK:
-        hit = _SNAPSHOTS.pop(key, None)
-        if hit is not None and hit[0] == ident:
-            _SNAPSHOTS[key] = hit  # most recently used goes last
-            return hit[1]
-        try:
-            snap = _load_snapshot(files, tombs, id_col, vec_col, extra, anchors)
-        except FileNotFoundError:  # a concurrent gc moved the live set
-            return None
-        _SNAPSHOTS[key] = (ident, snap, 0 if snap is None else snap.nbytes)
-        total = sum(v[2] for v in _SNAPSHOTS.values())
-        while total > limit:
-            total -= _SNAPSHOTS.pop(next(iter(_SNAPSHOTS)))[2]
-    return snap
+    return Sink.leaf_snapshot(
+        group_dir, spec["leaf"], (id_col, vec_col),
+        lambda files: _load_snapshot(files, tombs, id_col, vec_col, extra,
+                                     anchors),
+        limit, also=(tuple(tombs), (st.st_size, st.st_mtime_ns)),
+    )
 
 
 def _desc_keys(cs: np.ndarray, null: np.ndarray):
@@ -2415,7 +2388,7 @@ def _snapshot_stage(
 
     if arriving.isStreaming:
         return None
-    limit = _broadcast_threshold(spark)
+    limit = Sink.broadcast_threshold(spark)
     if limit < 0:
         return None
     side = arriving.select(id_col, vec_col, *cols)

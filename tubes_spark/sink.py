@@ -44,6 +44,7 @@ import json
 import math
 import os
 import shutil
+import threading
 import uuid
 from pathlib import Path
 from typing import Callable, Sequence
@@ -78,6 +79,12 @@ _BUCKET_TBL_REGISTERED: "set[tuple[str, str]]" = set()
 
 # plan-estimated (uncompressed) bytes per bucket of a new index
 _BUCKET_TARGET_BYTES = 256 * 1024 * 1024
+
+# Sink.leaf_snapshot's cache, shared by every reader of every group:
+# (realpath of the group, leaf, reader key) -> (file identity, snapshot
+# or None, bytes), least recently used first
+_SNAPSHOTS: "dict[tuple, tuple]" = {}
+_SNAPSHOT_LOCK = threading.Lock()
 
 
 class Sink:
@@ -388,6 +395,54 @@ class Sink:
             f for d in Sink.live_leaf_dirs(group_dir, leaf)
             for f in Sink.part_files(d)
         ]
+
+    @staticmethod
+    def broadcast_threshold(spark) -> int:
+        """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes
+        (-1: broadcasting disabled) — also the bound of every driver-side
+        snapshot (:meth:`leaf_snapshot`)."""
+        return int(
+            spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        )
+
+    @staticmethod
+    def leaf_snapshot(
+        group_dir: str, leaf: str, reader, load: Callable, limit: int,
+        also: tuple = (),
+    ):
+        """A driver-resident snapshot of one leaf's live rows, cached, or
+        None when the live files exceed ``limit`` bytes or ``load``
+        declines them.
+
+        ``load(files)`` builds the snapshot from the :meth:`live_part_files`
+        list (anything with ``nbytes``; None when the rows hold something
+        the reader does not reproduce).  It is reloaded whenever the
+        identity (path, size, mtime_ns) of any live part file — or
+        ``also``, the reader's other inputs — changes, so every append,
+        consolidation, gc or rebuild at the same path is seen by the next
+        call.  One cache serves every reader (keyed on the group's real
+        path, ``leaf`` and the ``reader`` key): it holds at most ``limit``
+        bytes of snapshots, evicting the least recently used, and one lock
+        covers check-then-load."""
+        files = Sink.live_part_files(group_dir, leaf)
+        if sum(size for _, size, _ in files) > limit:
+            return None
+        key = (os.path.realpath(group_dir), leaf, reader)
+        ident = (tuple(files), tuple(also))
+        with _SNAPSHOT_LOCK:
+            hit = _SNAPSHOTS.pop(key, None)
+            if hit is not None and hit[0] == ident:
+                _SNAPSHOTS[key] = hit  # most recently used goes last
+                return hit[1]
+            try:
+                snap = load(files)
+            except FileNotFoundError:  # a concurrent gc moved the live set
+                return None
+            _SNAPSHOTS[key] = (ident, snap, 0 if snap is None else snap.nbytes)
+            total = sum(v[2] for v in _SNAPSHOTS.values())
+            while total > limit:
+                total -= _SNAPSHOTS.pop(next(iter(_SNAPSHOTS)))[2]
+        return snap
 
     @staticmethod
     def _drop_dir(spark, path: str) -> None:
