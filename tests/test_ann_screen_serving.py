@@ -1,13 +1,15 @@
 """Screening ``similarity.incremental_ann_new`` on the driver.
 
 A small index is screened from the cached index snapshot (the ledger is
-a ``LocalTableScan``, the appended rows a local relation); everything
-else runs the Spark screen (a checkpointed assignment, ``ExistingRDD``
-in the plan).  ``spark.sql.autoBroadcastJoinThreshold=-1`` forces the
-Spark path, so every case runs on twin indexes, one per path, and after
-every call the two must agree on the verdict rows (doubles compared bit
-for bit), the schema (nullability included), the live cells rows and
-the parquet footer schemas.
+a ``LocalTableScan``, the appended rows bucket files written from the
+driver); everything else runs the Spark screen (a checkpointed
+assignment, ``ExistingRDD`` in the plan) and Spark's bucketed writer.
+``spark.sql.autoBroadcastJoinThreshold=-1`` forces the Spark path, so
+every case runs on twin indexes, one per path, and after every call the
+two must agree on the verdict rows (doubles compared bit for bit), the
+schema (nullability included) and the live ``cells`` leaf file for file
+(``tests/leaf_files.py``: rows, bucket ids, footers) — compactions at
+``compact_after`` included.
 """
 
 import os
@@ -16,12 +18,13 @@ from contextlib import contextmanager
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from tubes_spark.operators import similarity as S
 from tubes_spark.sink import Sink
+
+from tests.leaf_files import assert_twin_leaves
 
 THR = "spark.sql.autoBroadcastJoinThreshold"
 BAD = "invalid ANN vector"
@@ -57,17 +60,6 @@ def _path(df) -> str:
         return "spark"
     assert "LocalTableScan" in plan and "FileScan" not in plan, plan
     return "driver"
-
-
-def _leaf(d):
-    """(live cells rows, footer schemas) of index ``d``."""
-    files = [p for p, _, _ in Sink.live_part_files(d, "cells")]
-    tables = [pq.read_table(p) for p in files]
-    rows = sorted(
-        tuple(_bits(v) for v in r.values())
-        for t in tables for r in t.to_pylist()
-    )
-    return rows, sorted(str(pq.ParquetFile(p).schema_arrow) for p in files)
 
 
 def _corpus(n=120, dims=8, seed=3):
@@ -117,7 +109,7 @@ class Twins:
             ref_rows = _rows(ref)
         assert got.schema == ref.schema
         assert _rows(got) == ref_rows
-        assert _leaf(self.driver) == _leaf(self.ref)
+        assert_twin_leaves(self.driver, self.ref)
         # (epochs, compaction point); compaction dir names are random
         assert (Sink._committed_epochs(self.driver)[:2]
                 == Sink._committed_epochs(self.ref)[:2])
@@ -291,7 +283,7 @@ def test_bad_vector_raises_and_publishes_nothing(spark, tmp_path, V):
                 with _conf(spark, THR, "-1"), pytest.raises(Exception, match=BAD):
                     S.incremental_ann_new(arr, spark, tw.ref, update_index=True)
     assert [sorted(os.listdir(f"{d}/_commits")) for d in (tw.driver, tw.ref)] == before
-    assert _leaf(tw.driver) == _leaf(tw.ref)
+    assert_twin_leaves(tw.driver, tw.ref)
 
 
 # ------------------------------------------------------------------- gate

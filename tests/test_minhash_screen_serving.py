@@ -2,14 +2,15 @@
 
 A small MinHash index is screened from the cached snapshot of its live
 (band, key) set: the shingle hashes come from one Spark projection, the
-minima, band keys and hits from numpy, and the duplicate ids and the
-appended band rows are local relations.  Everything else runs the Spark
-screen (a checkpointed signature frame semi-joined to every live index
-dir).  ``spark.sql.autoBroadcastJoinThreshold=-1`` forces the Spark
-path, so every case runs on twin indexes, one per path, and after every
-call the two must agree on the survivor rows, the schema (nullability
-included), the live ``bands`` rows ``(doc_id, band, key)`` and the
-parquet footer schemas.
+minima, band keys and hits from numpy; the duplicate ids are a local
+relation and the appended band rows bucket files written from the
+driver.  Everything else runs the Spark screen (a checkpointed signature
+frame semi-joined to every live index dir) and Spark's bucketed writer.
+``spark.sql.autoBroadcastJoinThreshold=-1`` forces the Spark path, so
+every case runs on twin indexes, one per path, and after every call the
+two must agree on the survivor rows, the schema (nullability included)
+and the live ``bands`` leaf file for file (``tests/leaf_files.py``:
+rows, bucket ids, footers) — compactions at ``compact_after`` included.
 """
 
 import shutil
@@ -17,11 +18,12 @@ from contextlib import contextmanager
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
 from tubes_spark.operators import dedup as D
 from tubes_spark.sink import Sink
+
+from tests.leaf_files import assert_twin_leaves
 
 THR = "spark.sql.autoBroadcastJoinThreshold"
 
@@ -57,16 +59,6 @@ def _rows(df):
     return sorted(tuple((v is None, v) for v in r) for r in df.collect())
 
 
-def _leaf(d):
-    """(live bands rows, footer schemas) of index ``d``."""
-    files = [p for p, _, _ in Sink.live_part_files(d, "bands")]
-    rows = sorted(
-        tuple((v is None, v) for v in r.values())
-        for p in files for r in pq.read_table(p).to_pylist()
-    )
-    return rows, sorted(str(pq.ParquetFile(p).schema_arrow) for p in files)
-
-
 def _frame(spark, rows, id_type="long"):
     """(doc_id, text) rows as a local relation."""
     ids, texts = zip(*rows) if rows else ((), ())
@@ -100,7 +92,7 @@ class Twins:
             ref_rows = _rows(ref)
         assert got.schema == ref.schema
         assert _rows(got) == ref_rows
-        assert _leaf(self.driver) == _leaf(self.ref)
+        assert_twin_leaves(self.driver, self.ref)
         # (epochs, compaction point); compaction dir names are random
         assert (Sink._committed_epochs(self.driver)[:2]
                 == Sink._committed_epochs(self.ref)[:2])

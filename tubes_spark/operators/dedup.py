@@ -19,16 +19,19 @@ fit under the session's ``spark.sql.autoBroadcastJoinThreshold`` (-1
 disables it), that screen runs on the driver against a cached snapshot
 of the live (band, key) set: one Spark projection yields the shingle
 hashes (every string rule stays Spark's), integer numpy the minima and
-band keys, and the duplicate ids and appended band rows are local
-relations.  Survivors and stored rows are identical to the Spark plan,
-which stays the path for everything else.  At ingest-sized batches the
-Spark plan's fixed coordination cost dominates (the Drizzle point), and
-the driver path still won at the largest size measured — on 4 cores,
-warm JVM, ``update_index=True`` plus a count of the survivors, 500 docs
-against a 1.1 MiB index took 0.69-0.78 s on the driver and 1.41-1.77 s
-in Spark; 20,000 docs (plan estimate 2.6 MiB) against 9.1 MiB,
-2.4-2.5 s and 4.0-4.5 s; 80,000 docs (10.2 MiB) against 39 MiB,
-8.1-8.7 s and 10.5-11.9 s.
+band keys, the duplicate ids are a local relation, and the appended band
+rows are written as bucket files from the driver
+(:meth:`Sink._write_bucket_files`).  Survivors and stored rows are
+identical to the Spark plan, which stays the path for everything else.
+At ingest-sized batches the Spark plan's fixed coordination cost
+dominates (the Drizzle point); at the largest size measured the two
+paths tie — on 4 cores, warm JVM, ``update_index=True`` plus a count of
+the survivors, 3 runs each: 500 docs against a 0.6 MiB index took
+0.36-0.48 s on the driver (0.73-0.81 s when the append still went
+through Spark's writer) and 1.29-1.48 s in Spark; 20,000 docs (plan
+estimate 11.2 MiB) against 4.5 MiB, 1.91-2.16 s (2.72-2.88 s) and
+2.71-2.82 s; 80,000 docs (44.3 MiB) against 18.4 MiB, 7.47-8.44 s
+(9.68-10.21 s) and 7.65-8.00 s.
 
 BEHAVIOR CHANGES (r10/r11, ADVICE-r10 notes):
 
@@ -904,7 +907,9 @@ def _screen_on_driver(
     so it survives, as on the Spark path); it reads no index dir, so the
     append needs nothing pinned.  The appended epoch — the min id per
     (band, key) of every id, or of the kept ones under
-    ``append_scope="survivors"`` — is a local relation too."""
+    ``append_scope="survivors"`` — is handed to
+    :meth:`Sink.append_bucketed_epoch` as the Arrow table it already is,
+    and written from the driver."""
     import pyarrow as pa
     import pyarrow.compute as pc
     from pyspark.sql.types import (
@@ -960,7 +965,7 @@ def _screen_on_driver(
             id_col: ids.take(pa.array(np.tile(gid[keep], bands))),
             "band": band.filter(rows), "key": key.filter(rows),
         }).group_by(_BAND_KEYS).aggregate([(id_col, "min")])
-        appended = spark.createDataFrame(
+        appended = (
             pa.table(
                 [per_key.column(f"{id_col}_min"), per_key.column("band"),
                  per_key.column("key")],
@@ -975,6 +980,7 @@ def _screen_on_driver(
         Sink.append_bucketed_epoch(
             appended, group_dir, "bands", _BAND_KEYS,
             compact_after=compact_after, dedupe_keys={"bands": _BAND_KEYS},
+            spark=spark,
         )
     return out
 

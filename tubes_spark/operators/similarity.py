@@ -24,7 +24,13 @@ Design for scale:
   fold still beats the interpreted SQL fold — on 4 cores, a screen of
   17.5k vectors against a 19.5k-vector, 16-cell, 64-dim index (both
   ~9 MiB, ~1.4e9 multiply-adds) took 6.4-9.7 s on the driver and
-  53-68 s in Spark.
+  53-68 s in Spark.  A screen's appended epoch (and, under the same
+  bound, the index's compaction) is written as bucket files from the
+  driver: a 500-doc ``update_index=True`` screen against a 4,000-doc
+  index took 0.16-0.18 s, against 0.39-0.47 s with Spark's bucketed
+  writer and 1.35-1.76 s for the Spark screen (warm JVM, 3 runs each);
+  with a compaction on every append, 0.24-0.27 s, 0.77-0.84 s and
+  1.54-1.81 s.
 * The persisted index (write, screen, top-k, PQ top-k, both hard-negative
   miners) is one core composed in series: probe assignment
   (:func:`_probe_assign`), within-cell scoring (:func:`_score_cells`, or
@@ -1917,9 +1923,11 @@ def incremental_ann_new(
     files at most the session's ``spark.sql.autoBroadcastJoinThreshold``
     (-1 disables it), the ledger is computed from the cached index
     snapshot with the numpy fold reference and returned as a local
-    relation, and the appended cells rows are a local relation written
-    through the same :meth:`Sink.append_bucketed_epoch` — no assignment
-    plan, no checkpoint.  Rows, doubles, schema (nullability included),
+    relation, and the appended cells rows go to the same
+    :meth:`Sink.append_bucketed_epoch` as an Arrow table, written as
+    bucket files from the driver (and compacted there at
+    ``compact_after``) — no assignment plan, no checkpoint, no write
+    job (timings in the module docstring).  Rows, doubles, schema (nullability included),
     appended rows and parquet footers are bit-identical to the Spark
     plan's (the tests run every case both ways).  That path reads the
     index and ``arriving`` when ``incremental_ann_new`` is called; the
@@ -2545,8 +2553,10 @@ def _screen_from_snapshot(
     a NULL id never joins its hits, so it is new.  The ledger and the
     appended cells rows ``(id, cell, vec, *extra)`` — every row, or the
     new ones under ``append_scope="survivors"``, each at its primary
-    (first-probe) cell — are local relations; the append runs through
-    :meth:`Sink.append_bucketed_epoch` with nothing to pin."""
+    (first-probe) cell — are Arrow tables: the ledger goes out as a local
+    relation, and the appended rows go to
+    :meth:`Sink.append_bucketed_epoch` as they are, written from the
+    driver with nothing to pin."""
     import pyarrow as pa
     from pyspark.sql.types import (
         BooleanType, DoubleType, IntegerType, StructField, StructType,
@@ -2617,10 +2627,11 @@ def _screen_from_snapshot(
             names=[id_col, "cell", vec_col, *extra],
         )
         Sink.append_bucketed_epoch(
-            spark.createDataFrame(appended, StructType(
+            (appended, StructType(
                 [side[id_col], cell, side[vec_col], *[side[c] for c in extra]]
             )),
             group_dir, "cells", ["cell"], compact_after=compact_after,
+            spark=spark,
         )
     return out
 

@@ -49,6 +49,7 @@ import uuid
 from pathlib import Path
 from typing import Callable, Sequence
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -85,6 +86,146 @@ _BUCKET_TARGET_BYTES = 256 * 1024 * 1024
 # or None, bytes), least recently used first
 _SNAPSHOTS: "dict[tuple, tuple]" = {}
 _SNAPSHOT_LOCK = threading.Lock()
+
+# spark.sql.parquet.compression.codec -> (pyarrow codec, Spark's file
+# name extension); the driver-side bucket writer leaves any other codec
+# to Spark's writer
+_PARQUET_CODECS = {
+    "snappy": ("snappy", ".snappy"), "zstd": ("zstd", ".zstd"),
+    "gzip": ("gzip", ".gz"), "none": ("none", ""), "uncompressed": ("none", ""),
+}
+
+# the live-file bytes above which a compaction stays on Spark even under
+# the broadcast threshold.  Timed on 4 cores against Spark's read, window
+# and bucketed write: a deduping compaction of a MinHash `bands` leaf
+# (about 24 bytes per row) wins up to 21 MiB of live files (1.07-1.19 s
+# against 1.25-1.49 s), ties at 32-40 MiB and loses at 72 MiB (4.4-5.2 s
+# against 2.9-3.6 s) — the pyarrow sorts and the numpy hash are single
+# threaded — while holding 5-8x the live bytes in driver memory; an
+# ANN `cells` leaf still wins at 65 MiB (1.06-1.09 s against 1.24-1.34 s).
+_LOCAL_COMPACT_BYTES = 16 * 1024 * 1024
+
+# Spark's Murmur3_x86_32 (the `hash` expression, seed 42, whose pmod is
+# the bucket id of a bucketBy write) over uint32 numpy lanes
+_M3_C1, _M3_C2 = np.uint32(0xCC9E2D51), np.uint32(0x1B873593)
+
+
+def _m3_rotl(x, r: int):
+    return (x << np.uint32(r)) | (x >> np.uint32(32 - r))
+
+
+def _m3_mix_k1(k):
+    return _m3_rotl(k * _M3_C1, 15) * _M3_C2
+
+
+def _m3_mix_h1(h, k):
+    return _m3_rotl(h ^ k, 13) * np.uint32(5) + np.uint32(0xE6546B64)
+
+
+def _m3_fmix(h, length):
+    h = h ^ length
+    h = (h ^ (h >> np.uint32(16))) * np.uint32(0x85EBCA6B)
+    h = (h ^ (h >> np.uint32(13))) * np.uint32(0xC2B2AE35)
+    return h ^ (h >> np.uint32(16))
+
+
+def _m3_column(col, h):
+    """One column's step of Spark's ``hash(c1, c2, ...)``: each row's
+    running hash ``h`` (uint32) re-seeds the hash of its value — an int
+    as ``hashInt``, a bigint as ``hashLong``, a string's UTF-8 bytes as
+    ``hashUnsafeBytes`` (little-endian 4-byte blocks, then each tail
+    byte sign-extended on its own).  A NULL leaves the row's hash as it
+    was."""
+    import pyarrow as pa
+
+    if pa.types.is_int32(col.type):
+        out = _m3_fmix(
+            _m3_mix_h1(h, _m3_mix_k1(col.fill_null(0).to_numpy().view(np.uint32))),
+            np.uint32(4),
+        )
+    elif pa.types.is_int64(col.type):
+        u = col.fill_null(0).to_numpy().view(np.uint64)
+        out = _m3_mix_h1(h, _m3_mix_k1((u & np.uint64(0xFFFFFFFF)).astype(np.uint32)))
+        out = _m3_fmix(
+            _m3_mix_h1(out, _m3_mix_k1((u >> np.uint64(32)).astype(np.uint32))),
+            np.uint32(8),
+        )
+    else:  # string
+        _, offs, buf = col.buffers()
+        off = np.frombuffer(offs, np.int32)[col.offset:col.offset + len(col) + 1]
+        data = np.zeros(0, np.uint8) if buf is None else np.frombuffer(buf, np.uint8)
+        start, n = off[:-1].astype(np.int64), np.diff(off).astype(np.int64)
+        out = h.copy()
+        # block j of every row that has one; rows with the most blocks
+        # first, so the rows of step j are a prefix
+        blocks = n // 4
+        order = np.argsort(-blocks, kind="stable")
+        desc = -blocks[order]
+        for j in range(int(-desc[0]) if len(desc) else 0):
+            r = order[:np.searchsorted(desc, -j)]
+            p = start[r] + 4 * j
+            k = data[p].astype(np.uint32)
+            for b in (1, 2, 3):
+                k |= data[p + b].astype(np.uint32) << np.uint32(8 * b)
+            out[r] = _m3_mix_h1(out[r], _m3_mix_k1(k))
+        tail = start + 4 * blocks
+        for t in (0, 1, 2):
+            r = np.flatnonzero(n % 4 > t)
+            k = data[tail[r] + t].view(np.int8).astype(np.int32).view(np.uint32)
+            out[r] = _m3_mix_h1(out[r], _m3_mix_k1(k))
+        out = _m3_fmix(out, n.astype(np.uint32))
+    return np.where(col.is_valid().to_numpy(zero_copy_only=False), out, h)
+
+
+def bucket_ids(table, cols: "Sequence[str]", n: int) -> np.ndarray:
+    """Spark's bucket id of every row of the Arrow ``table``:
+    ``pmod(hash(cols), n)`` — what a ``bucketBy(n, *cols)`` write puts
+    in the file name of the row's file.  ``cols`` are int32, int64 or
+    string columns."""
+    h = np.full(table.num_rows, 42, np.uint32)
+    for c in cols:
+        h = _m3_column(table.column(c).combine_chunks(), h)
+    return np.mod(h.view(np.int32).astype(np.int64), int(n))
+
+
+def _arrow_type(dt):
+    """The Arrow type the driver-side bucket writer stores the Spark
+    type ``dt`` as, or None for a type it leaves to Spark's writer:
+    numbers, booleans, strings (binary collation), binaries and arrays
+    of them."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    simple = {
+        T.BooleanType: pa.bool_(), T.ByteType: pa.int8(), T.ShortType: pa.int16(),
+        T.IntegerType: pa.int32(), T.LongType: pa.int64(), T.FloatType: pa.float32(),
+        T.DoubleType: pa.float64(), T.BinaryType: pa.binary(),
+    }
+    if type(dt) in simple:
+        return simple[type(dt)]
+    if type(dt) is T.StringType:
+        return pa.string() if dt.collation == "UTF8_BINARY" else None
+    if isinstance(dt, T.ArrayType) and not isinstance(dt.elementType, T.ArrayType):
+        inner = _arrow_type(dt.elementType)
+        return None if inner is None else pa.list_(
+            pa.field("element", inner, dt.containsNull)
+        )
+    return None
+
+
+def _as_nullable(dt):
+    """Spark's ``asNullable``: what a parquet read reports for a written
+    type — every field and array element nullable."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    return dt
 
 
 class Sink:
@@ -235,7 +376,13 @@ class Sink:
         deterministic.  On a real cluster the marker rename maps to an
         HDFS rename / S3 conditional put — both atomic publish
         primitives; task-side data writes stay distributed, only the
-        tiny marker touches the driver."""
+        tiny marker touches the driver.  (The one exception is a SMALL
+        bucket leaf — :meth:`append_bucketed_epoch` given an Arrow table
+        the driver already holds, or :meth:`compact_atomic_group` on a
+        group under :meth:`_local_compact_limit` — written
+        from the driver by :meth:`_write_bucket_files` into the same
+        uncommitted dir, so the marker protocol and its crash contract
+        are unchanged.)"""
 
         def run(df: DataFrame) -> None:
             epoch = _CURRENT_EPOCH.get()
@@ -406,6 +553,14 @@ class Sink:
         )
 
     @staticmethod
+    def _local_compact_limit(spark) -> int:
+        """The live-file bytes up to which :meth:`_consolidate` compacts
+        a small group on the driver: ``spark.sql.autoBroadcastJoinThreshold``
+        capped at :data:`_LOCAL_COMPACT_BYTES` (-1: never)."""
+        limit = Sink.broadcast_threshold(spark)
+        return limit if limit < 0 else min(limit, _LOCAL_COMPACT_BYTES)
+
+    @staticmethod
     def leaf_snapshot(
         group_dir: str, leaf: str, reader, load: Callable, limit: int,
         also: tuple = (),
@@ -467,6 +622,16 @@ class Sink:
     # corpus age.  The marker protocol is unchanged — bucketed epoch
     # dirs are still invisible until the group commit marker lands, and
     # every consolidation (:meth:`_consolidate`) keeps the layout.
+    # A SMALL leaf write (an epoch the driver screens already hold as
+    # an Arrow table, or a compaction of a group whose live files fit
+    # under _LOCAL_COMPACT_BYTES and the broadcast threshold) skips the
+    # Spark job: :meth:`_write_bucket_files` writes the same files from
+    # the driver.
+    # That is safe because the file is the whole contract — Spark's
+    # bucket id (pmod of its murmur3 hash, reproduced bit for bit by
+    # `bucket_ids`) in the file name, rows sorted as sortBy sorts them,
+    # and a footer with Spark's parquet schema and row metadata — so no
+    # reader, Spark's bucketed scan included, reads them differently.
 
     @staticmethod
     def _bucket_spec(group_dir: str) -> "dict | None":
@@ -586,7 +751,12 @@ class Sink:
         a table from them in any later session).  The pre-repartition
         aligns write tasks 1:1 with buckets (same murmur3-pmod hash),
         so an upstream 400-partition scan can't emit 400 near-empty
-        files per bucket (sources.write_bucketed has the same note)."""
+        files per bucket (sources.write_bucketed has the same note).
+
+        This is the writer of every large leaf and of every DML rewrite,
+        and the reference :meth:`_write_bucket_files` is tested against:
+        it costs a job, a shuffle and two catalog DDLs per write, which
+        is most of a small epoch append."""
         spark = df.sparkSession
         Sink._drop_dir(spark, path)  # torn uncommitted rewrite
         tbl = Sink._bucket_table_name(path)
@@ -599,6 +769,170 @@ class Sink:
             .saveAsTable(tbl)
         )
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")  # external: files stay
+
+    @staticmethod
+    def _bucket_files_ok(spark, schema, cols: "Sequence[str]") -> bool:
+        """Whether :meth:`_write_bucket_files` reproduces what Spark's
+        writer would write for ``schema`` bucketed on ``cols`` in this
+        session: int, bigint or string bucket columns; every column of a
+        type :func:`_arrow_type` maps, with no field metadata (Spark may
+        turn it into parquet field ids); a codec pyarrow writes; the
+        standard (non-legacy) parquet layout."""
+        from pyspark.sql import types as T
+
+        conf = spark.conf
+        if conf.get("spark.sql.parquet.writeLegacyFormat", "false").lower() == "true":
+            return False
+        if conf.get("spark.sql.parquet.compression.codec").lower() not in _PARQUET_CODECS:
+            return False
+        types = {f.name: type(f.dataType) for f in schema.fields}
+        if not all(types.get(c) in (T.IntegerType, T.LongType, T.StringType) for c in cols):
+            return False
+        return all(
+            not f.metadata and _arrow_type(f.dataType) is not None
+            for f in schema.fields
+        )
+
+    @staticmethod
+    def _write_bucket_files(
+        spark, table, schema, path: str, cols: "Sequence[str]", n: int
+    ) -> None:
+        """Write the Arrow ``table`` — the rows of the Spark ``schema`` —
+        to ``path`` from the driver, as :meth:`_write_bucketed_dir` would
+        write them in ``spark``'s session (callers check
+        :meth:`_bucket_files_ok` first):
+
+        * one file per non-empty bucket, named
+          ``part-00000-<uuid>_<bucket:05d>.c000.<codec>.parquet`` with
+          the bucket id :func:`bucket_ids` computes; an empty table
+          writes no file;
+        * rows sorted by ``cols`` ascending, NULLs first, strings by
+          unsigned bytes (Spark's sortBy);
+        * the parquet schema Spark writes (repetition, physical and
+          logical types, the 3-level list), and Spark's two key-value
+          metadata entries, ``org.apache.spark.version`` and
+          ``org.apache.spark.sql.parquet.row.metadata`` (the JVM's
+          ``StructType.json``), written as Arrow schema metadata — so
+          the footer also holds pyarrow's ``ARROW:schema`` key, which
+          Spark ignores and which restores the same Arrow types a
+          pyarrow read derives from the parquet schema;
+        * the codec of ``spark.sql.parquet.compression.codec``.
+
+        Like the Spark writer it replaces ``path`` wholesale (a torn
+        uncommitted write) together with any registration over it."""
+        import re
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        codec, ext = _PARQUET_CODECS[
+            spark.conf.get("spark.sql.parquet.compression.codec").lower()
+        ]
+        target = pa.schema(
+            [pa.field(f.name, _arrow_type(f.dataType), f.nullable) for f in schema.fields],
+            metadata={
+                "org.apache.spark.version":
+                    re.match(r"\d+\.\d+\.\d+", spark.version).group(),
+                # the JVM's StructType.json, byte for byte (Python's
+                # json orders the keys differently)
+                "org.apache.spark.sql.parquet.row.metadata":
+                    spark.sparkContext._jvm.org.apache.spark.sql.types.DataType
+                    .fromJson(schema.json()).json(),
+            },
+        )
+        table = table.select(schema.names).cast(target)
+        Sink._drop_dir(spark, path)
+        os.makedirs(path)
+        if not table.num_rows:
+            return
+        bucket = pa.array(bucket_ids(table, cols, n))
+        order = pc.sort_indices(
+            table.select(list(cols)).append_column("__bucket__", bucket),
+            [("__bucket__", "ascending")] + [(c, "ascending") for c in cols],
+            null_placement="at_start",
+        )
+        table, bucket = table.take(order), bucket.take(order).to_numpy()
+        starts = np.flatnonzero(np.diff(bucket, prepend=-1))
+        uid = uuid.uuid4()
+        for a, b in zip(starts, [*starts[1:], len(bucket)]):
+            name = f"part-00000-{uid}_{bucket[a]:05d}.c000{ext}.parquet"
+            pq.write_table(
+                table.slice(a, b - a), f"{path}/{name}", compression=codec
+            )
+
+    @staticmethod
+    def _write_bucket_leaf(data, path: str, cols: "Sequence[str]", n: int) -> None:
+        """Write one bucketed leaf dir from ``data``: a DataFrame goes
+        through Spark's writer (:meth:`_write_bucketed_dir`); a
+        ``(spark, pyarrow.Table, StructType)`` triple is written from the
+        driver (:meth:`_write_bucket_files`) when the table fits under
+        ``spark``'s ``spark.sql.autoBroadcastJoinThreshold`` (-1
+        disables) and :meth:`_bucket_files_ok`, else as a local relation
+        through Spark's writer."""
+        if isinstance(data, DataFrame):
+            Sink._write_bucketed_dir(data, path, cols, n)
+            return
+        spark, table, schema = data
+        if table.nbytes <= Sink.broadcast_threshold(spark) and Sink._bucket_files_ok(
+            spark, schema, cols
+        ):
+            Sink._write_bucket_files(spark, table, schema, path, cols, n)
+        else:
+            Sink._write_bucketed_dir(
+                spark.createDataFrame(table, schema), path, cols, n
+            )
+
+    @staticmethod
+    def _read_leaf_local(group_dir: str, leaf: str, limit: int):
+        """``(pyarrow.Table, StructType)`` of the committed rows of
+        ``leaf`` exactly as :meth:`read_atomic_group` reads them — the
+        compact dir's rows with their stored ``epoch``, then each live
+        epoch dir's rows with ``epoch`` from the dir name; columns in
+        that read's order, every type nullable — read with pyarrow, or
+        None when the live files exceed ``limit`` bytes (-1: always),
+        hold no row, a live dir is missing (Spark's read then fails
+        loudly rather than a compaction dropping its rows), or their
+        Spark schema records are missing or disagree."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import IntegerType, StructField, StructType
+
+        epochs, compact, live = Sink._sources(group_dir, leaf)
+        past = epochs[len(epochs) - len(live):]  # the epochs of `live`
+        srcs = ([] if compact is None else [(compact, None)]) + list(zip(live, past))
+        if not all(os.path.isdir(d) for d, _ in srcs):
+            return None
+        files = [(f, size, e) for d, e in srcs for f, size, _ in Sink.part_files(d)]
+        if not files or sum(size for _, size, _ in files) > limit:
+            return None
+        schema, parts = None, []
+        for f, _, e in files:
+            pf = pq.ParquetFile(f)
+            meta = (pf.metadata.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+            if meta is None:
+                return None
+            st = _as_nullable(StructType.fromJson(json.loads(meta)))
+            if e is not None:
+                st = st.add(StructField("epoch", IntegerType(), True))
+            if schema is None:
+                schema = st
+            elif {x.name: x.dataType for x in st.fields} != {
+                x.name: x.dataType for x in schema.fields
+            }:
+                return None  # unionByName would widen or fail: Spark decides
+            t = pf.read()
+            if e is not None:
+                t = t.append_column("epoch", pa.array(np.full(t.num_rows, e, np.int32)))
+            parts.append(t)
+        if any(_arrow_type(f.dataType) is None for f in schema.fields):
+            return None
+        target = pa.schema(
+            [pa.field(f.name, _arrow_type(f.dataType), True) for f in schema.fields]
+        )
+        return pa.concat_tables(
+            [t.select(schema.names).cast(target) for t in parts]
+        ), schema
 
     @staticmethod
     def _has_parquet(path: str) -> bool:
@@ -710,17 +1044,18 @@ class Sink:
         """:meth:`atomic_parquet_group` for a single bucket-laid-out
         leaf: identical marker protocol (epoch dir first, group commit
         marker last, clean replays skip), but the epoch directory is
-        written through :meth:`_write_bucketed_dir` so every committed
+        written bucketed (:meth:`_write_bucket_leaf`: a DataFrame, or a
+        ``(spark, pyarrow.Table, StructType)`` triple) so every committed
         directory joins shuffle-free on ``cols``.  Records the group's
         bucket spec on first use."""
 
-        def run(df: DataFrame) -> None:
+        def run(df) -> None:
             spec = Sink._record_bucket_spec(group_dir, leaf, cols, n)
             epoch = _CURRENT_EPOCH.get()
             ep = -1 if epoch is None else int(epoch)
             if (Path(group_dir) / "_commits" / str(ep)).exists():
                 return  # clean replay: whole group already committed
-            Sink._write_bucketed_dir(
+            Sink._write_bucket_leaf(
                 df, Sink._epoch_dir(group_dir, leaf, ep), spec["cols"], spec["n"]
             )
             Sink._publish_marker(Path(group_dir) / "_commits", ep)
@@ -752,7 +1087,7 @@ class Sink:
 
     @staticmethod
     def append_bucketed_epoch(
-        df: DataFrame,
+        df: "DataFrame | tuple",
         group_dir: str,
         leaf: str,
         cols: "Sequence[str]",
@@ -761,11 +1096,19 @@ class Sink:
         compact_after: "int | None" = None,
         dedupe_keys: "dict[str, Sequence[str]] | None" = None,
         pin: "DataFrame | None" = None,
+        spark=None,
     ) -> "DataFrame | None":
         """Commit ``df`` as one epoch of the group's bucket leaf —
         ``epoch``, or by default the one after the newest commit.  The
         group's first write records the bucket spec (``cols`` and
         ``n_buckets``); later writes use the recorded spec.
+
+        ``df`` is a DataFrame (Spark's bucketed writer) or a
+        ``(pyarrow.Table, StructType)`` pair the caller already holds on
+        the driver, written under the session ``spark`` (required with a
+        pair): a table under ``spark.sql.autoBroadcastJoinThreshold`` is
+        written from the driver (:meth:`_write_bucket_files`, no Spark
+        job), anything else as a local relation through Spark's writer.
 
         ``compact_after=K`` keeps the group self-maintaining: once K
         committed epochs sit past the compaction point, run
@@ -773,13 +1116,17 @@ class Sink:
         ``pin`` is a frame whose lazy plan may read the dirs that gc
         removes; it is checkpointed before the compaction and returned
         (unchanged when no compaction ran)."""
+        if isinstance(df, DataFrame):
+            spark = df.sparkSession
+        elif spark is None:
+            raise ValueError("a (pyarrow.Table, StructType) epoch needs its session: spark=")
         spec = Sink._bucket_spec(group_dir) or {"cols": cols, "n": n_buckets}
         if epoch is None:
             epochs, _, _ = Sink._committed_epochs(group_dir)
             epoch = (max(epochs) if epochs else -1) + 1
         Sink.atomic_bucketed_group(
             group_dir, leaf, spec["cols"], spec["n"]
-        ).for_each_batch()(df, epoch)
+        ).for_each_batch()(df if isinstance(df, DataFrame) else (spark, *df), epoch)
         if compact_after is None:
             return pin
         epochs, k, _ = Sink._committed_epochs(group_dir)
@@ -788,7 +1135,7 @@ class Sink:
         if pin is not None:
             pin = pin.localCheckpoint(eager=True)
         Sink.compact_atomic_group(
-            df.sparkSession, group_dir, gc=True, dedupe_keys=dedupe_keys
+            spark, group_dir, gc=True, dedupe_keys=dedupe_keys
         )
         return pin
 
@@ -934,6 +1281,7 @@ class Sink:
         gc: bool,
         evolve_schema: bool = False,
         reuse_current: bool = False,
+        local_rewrite: "Callable | None" = None,
     ) -> int:
         """THE consolidate-and-publish protocol — every rewrite of a
         group's committed history (compaction, latest-wins, delete,
@@ -945,6 +1293,14 @@ class Sink:
            df)`` and land in a run-unique ``compact/upto=<K><tag>.<id>``
            dir — written bucketed when the leaf is the group's bucket
            leaf, so the shuffle-free read survives every rewrite.
+           A caller that also passes ``local_rewrite(leaf, table,
+           schema)`` (the same rewrite over a pyarrow table; None when it
+           cannot reproduce ``rewrite`` on those columns) has a small
+           group — its only leaf is the bucket leaf, whose live files fit
+           under :meth:`_local_compact_limit` (-1 disables) — read with
+           pyarrow (:meth:`_read_leaf_local`) and written
+           from the driver (:meth:`_write_bucket_files`): the same files
+           without a Spark job.  Everything else here is shared.
         2. The ``_compacted/<K>`` marker, whose CONTENT names that dir,
            renames last: the one publish point.  Until it lands readers
            resolve the previous layout, which is never deleted before
@@ -969,18 +1325,34 @@ class Sink:
             bspec = Sink._bucket_spec(group_dir)
             for name in leaves:
                 Sink._guard_schema_divergence(spark, group_dir, name, evolve_schema)
-                df = rewrite(
-                    name,
-                    Sink.read_atomic_group(
-                        spark, group_dir, name, evolve_schema=evolve_schema
-                    ),
-                )
                 tmp = Sink._compact_dir(group_dir, name, f".tmp.{new_dir}")
-                if bspec is not None and name == bspec["leaf"]:
+                local = None
+                if (local_rewrite is not None and not evolve_schema
+                        and bspec is not None and leaves == [bspec["leaf"]]):
+                    local = Sink._read_leaf_local(
+                        group_dir, name, Sink._local_compact_limit(spark)
+                    )
+                    if local is not None:
+                        local = local_rewrite(name, *local)
+                if local is not None and Sink._bucket_files_ok(
+                    spark, local[1], bspec["cols"]
+                ):
                     Path(tmp).parent.mkdir(parents=True, exist_ok=True)
-                    Sink._write_bucketed_dir(df, tmp, bspec["cols"], bspec["n"])
+                    Sink._write_bucket_files(
+                        spark, *local, tmp, bspec["cols"], bspec["n"]
+                    )
                 else:
-                    df.write.mode("overwrite").parquet(tmp)
+                    df = rewrite(
+                        name,
+                        Sink.read_atomic_group(
+                            spark, group_dir, name, evolve_schema=evolve_schema
+                        ),
+                    )
+                    if bspec is not None and name == bspec["leaf"]:
+                        Path(tmp).parent.mkdir(parents=True, exist_ok=True)
+                        Sink._write_bucketed_dir(df, tmp, bspec["cols"], bspec["n"])
+                    else:
+                        df.write.mode("overwrite").parquet(tmp)
                 os.replace(tmp, Sink._compact_dir(group_dir, name, new_dir))
             Sink._publish_marker(Path(group_dir) / "_compacted", k, new_dir)
         if gc:
@@ -1038,8 +1410,17 @@ class Sink:
         cross-epoch repeats of a key are dead weight).  Epochs newer
         than the compaction point may still repeat a key until the next
         compaction — readers must not rely on global uniqueness, only
-        on the key SET being preserved, which this never changes."""
+        on the key SET being preserved, which this never changes.
+
+        A small group (see :meth:`_consolidate`) is compacted on the
+        driver with pyarrow, keeping the same winners: rows sorted by
+        the keys, ``epoch`` and the remaining columns ascending with
+        NULLs first (strings by unsigned bytes, as Spark orders them),
+        the first row of each key kept.  Keys and remaining columns of
+        other than integer or string type go to the Spark window."""
+        import pyarrow.compute as pc
         from pyspark.sql import Window
+        from pyspark.sql import types as T
 
         def rewrite(name: str, df: DataFrame) -> DataFrame:
             if not dedupe_keys or name not in dedupe_keys:
@@ -1053,8 +1434,37 @@ class Sink:
                 .drop("__rn__")
             )
 
+        def local_rewrite(name: str, table, schema):
+            if not dedupe_keys or name not in dedupe_keys:
+                return table, schema
+            keys = list(dedupe_keys[name])
+            rest = [c for c in schema.names if c not in keys and c != "epoch"]
+            if not all(
+                isinstance(schema[c].dataType, T.IntegralType)
+                or type(schema[c].dataType) is T.StringType
+                for c in keys + rest
+            ):
+                return None
+            table = table.take(pc.sort_indices(
+                table, [(c, "ascending") for c in keys + ["epoch"] + rest],
+                null_placement="at_start",
+            ))
+            first = np.ones(table.num_rows, bool)
+            if table.num_rows:
+                same = np.ones(table.num_rows - 1, bool)
+                for c in keys:
+                    col = table.column(c)
+                    a, b = col.slice(1), col.slice(0, table.num_rows - 1)
+                    same &= pc.fill_null(
+                        pc.or_kleene(pc.equal(a, b), pc.and_(a.is_null(), b.is_null())),
+                        False,
+                    ).to_numpy(zero_copy_only=False)
+                first[1:] = ~same
+            return table.filter(first), schema
+
         return Sink._consolidate(
-            spark, group_dir, "", rewrite, gc, evolve_schema, reuse_current=True
+            spark, group_dir, "", rewrite, gc, evolve_schema, reuse_current=True,
+            local_rewrite=local_rewrite,
         )
 
     @staticmethod
